@@ -12,21 +12,25 @@ Design:
 - Tombstones STAY in the state table (op='d' rows are retained with their
   (ts, seq)): dropping them physically would let a late, older event
   resurrect a deleted key. ``current_state`` filters them at read time.
-- ``CdcParquetSink``: foreachBatch writer with a batch-id guard — replaying
-  an already-committed epoch is a no-op (idempotent sink = exactly-once).
+- ``CdcParquetSink`` (LWW current state) and ``Scd2ParquetSink`` (SCD2
+  history) are foreachBatch writers on ONE commit path,
+  ``_BucketedParquetSink.apply_batch``: a batch-id guard makes a replayed
+  epoch a no-op (idempotent sink = exactly-once); the micro-batch is
+  executed once (persisted, its touched buckets collected from the
+  cache); only the touched ``state/bucket=N`` dirs are read and rewritten,
+  in place, by dynamic partition overwrite; the commit log is replaced
+  atomically. Each sink contributes only its fold.
 
 Scale (100 TB): state is partitioned parquet keyed by hash(key); each
-micro-batch rewrites only the key-buckets it touches (partition-overwrite),
-never the whole table. Deletes compact away on rewrite once older than the
-watermark horizon.
+micro-batch rewrites only the key-buckets it touches, never the whole
+table.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -91,8 +95,9 @@ def cdc_apply_batch(envelopes: DataFrame) -> DataFrame:
 # --- applyInPandasWithState form (SURVEY.md §2.9: "at scale
 # applyInPandasWithState for in-flight state") -------------------------------
 #
-# The foreachBatch sink above re-reads and rewrites the state TABLE per
-# micro-batch — correct, but the state round-trips through the filesystem.
+# The foreachBatch sinks below re-read and rewrite the touched state
+# buckets per micro-batch — correct, but the state round-trips through the
+# filesystem.
 # This form keeps the per-key LWW image in the Spark StateStore instead:
 # executor-local, versioned, checkpointed incrementally — the shape that
 # holds at 100 TB where the hot state must never be a full-table rewrite.
@@ -184,33 +189,43 @@ def cdc_apply_stateful_stream(env: DataFrame) -> DataFrame:
 
 
 @dataclass
-class CdcParquetSink:
-    """foreachBatch sink maintaining a parquet state table with batch-id
-    idempotency (SURVEY.md §3-C step 3).
+class _BucketedParquetSink:
+    """The commit path both parquet sinks share; a subclass supplies only
+    its fold.
 
-    Plain parquet has no MERGE, so a commit folds the delta into state with
-    merge_states(old, delta) — but BOUNDED: the state table is partitioned
-    on ``bucket = pmod(xxhash64(key), n_buckets)`` and each micro-batch
+    State is parquet under ``<state_dir>/state``, partitioned on
+    ``bucket = pmod(xxhash64(key), n_buckets)``; ``_commits.json`` beside
+    it lists the committed batch ids. ``apply_batch``
 
-    1. reconciles the delta and computes its touched bucket set (≤
-       n_buckets values — a driver-side collect of bucket ids, never keys),
-    2. reads ONLY those state partitions back (partition pruning on the
-       bucket directory column),
-    3. writes the merged buckets with dynamic partition overwrite, so
-       parquet files in untouched buckets are never rewritten.
+    1. skips a batch id already in the commit log — a replayed epoch is a
+       no-op (idempotent sink + replayable source + WAL'd offsets =
+       exactly-once);
+    2. persists the bucketed micro-batch, so the batch executes once;
+    3. collects its distinct buckets from that cache — ≤ n_buckets small
+       ints, the only driver-side collect; none means an empty batch,
+       committed as a no-op;
+    4. reads only those state bucket dirs, with the schema of the batch's
+       own state rows (no schema-inference job);
+    5. writes ``_fold(old, rows, batch)`` straight into the state with
+       dynamic partition overwrite: only the bucket dirs it writes are
+       replaced, so files in untouched buckets keep their identity;
+    6. records the batch id by write-then-rename of the commit log.
 
-    Per-batch I/O is therefore O(touched state) not O(total state); at
-    100 TB with n_buckets sized so a bucket fits an executor, a micro-batch
-    touching k keys rewrites at most k buckets. ``tests/test_streaming.py::
-    test_sink_rewrites_only_touched_buckets`` pins the behavior via file
-    mtimes. (The StateStore form ``cdc_apply_stateful_stream`` above remains
-    the no-filesystem-round-trip alternative.)
-    """
+    Per-batch I/O is O(touched state), not O(total state). Reading and
+    rewriting the same buckets in one job is safe: the overwrite stages
+    task output under ``state/.spark-staging-*`` and swaps bucket dirs only
+    at job commit, after every task has read the old files. The swap is not
+    atomic across buckets, and the state write → commit-log step is not
+    atomic either; a crash in between replays the batch, which each fold
+    must absorb."""
 
     spark: SparkSession
     state_dir: str
     n_buckets: int = 16
-    _committed: set[int] = field(default_factory=set)
+
+    @property
+    def _state_path(self) -> str:
+        return os.path.join(self.state_dir, "state")
 
     @property
     def _commit_log(self) -> str:
@@ -222,84 +237,95 @@ class CdcParquetSink:
                 return set(json.load(f))
         return set()
 
-    def _save_commits(self) -> None:
-        # the parquet write normally creates state_dir, but a committed
-        # NO-OP batch (empty feed) reaches here first — create the dir
-        # (round-10 EMPTY-fixture catch, found by the CLI-on-empty run)
+    def _save_commits(self, ids: set[int]) -> None:
+        # state_dir does not exist yet when the first batch is empty; the
+        # rename keeps the previous log whole if the dump dies midway
         os.makedirs(self.state_dir, exist_ok=True)
-        with open(self._commit_log, "w") as f:
-            json.dump(sorted(self._committed), f)
+        tmp = self._commit_log + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(sorted(ids), f)
+        os.replace(tmp, self._commit_log)
 
     def _bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
             "bucket", F.pmod(F.xxhash64("key"), F.lit(self.n_buckets))
         )
 
+    def _has_state(self) -> bool:
+        # an empty fold still creates state/, but with no bucket dir and
+        # no data file to infer a schema from
+        path = self._state_path
+        return os.path.isdir(path) and any(
+            d.startswith("bucket=") for d in os.listdir(path)
+        )
+
     def state(self) -> DataFrame | None:
-        path = os.path.join(self.state_dir, "state")
-        try:
-            return self.spark.read.parquet(path)
-        except Exception:
-            return None  # first batch: no state yet
+        """The bucketed state table, or None while it holds no row."""
+        return self.spark.read.parquet(self._state_path) if self._has_state() else None
+
+    def _rows(self, batch: DataFrame) -> DataFrame:
+        """The batch's own rows in the state schema, bucket included."""
+        raise NotImplementedError
+
+    def _fold(self, old: DataFrame, rows: DataFrame, batch: DataFrame) -> DataFrame:
+        """The new content of the touched buckets, given their ``old`` rows."""
+        raise NotImplementedError
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        self._committed = self._load_commits()
-        if batch_id in self._committed:
+        committed = self._load_commits()
+        if batch_id in committed:
             return  # replayed epoch — idempotent no-op
-        delta = self._bucket(reconcile(batch_df))
-        old = self.state()
-        path = os.path.join(self.state_dir, "state")
-        tmp = os.path.join(self.state_dir, f"state_tmp_{batch_id}")
-        # The state-write → commit-log sequence is not atomic; a crash
-        # between the two replays the batch, which is safe only because
-        # merge_states is last-writer-wins idempotent per key.
+        batch = self._bucket(batch_df.select(*STATE_COLS)).persist()
         try:
-            if old is None:
-                new = delta
-            else:
-                # ≤ n_buckets small ints — the only driver-side collect.
-                touched = [
-                    r["bucket"] for r in delta.select("bucket").distinct().collect()
-                ]
-                # .filter on the partition column prunes to the touched
-                # bucket directories; unread buckets cost zero I/O.
-                new = self._bucket(
-                    merge_states(old.filter(F.col("bucket").isin(touched)), delta)
+            touched = [r.bucket for r in batch.select("bucket").distinct().collect()]
+            if touched:
+                rows = self._rows(batch)
+                if self._has_state():
+                    # the filter on the partition column prunes the read
+                    # to the touched bucket dirs
+                    old = (
+                        self.spark.read.schema(rows.schema)
+                        .parquet(self._state_path)
+                        .filter(F.col("bucket").isin(touched))
+                    )
+                else:
+                    old = rows.where(F.lit(False))
+                (
+                    self._fold(old, rows, batch)
+                    .write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
+                    .partitionBy("bucket")
+                    .parquet(self._state_path)
                 )
-            if new.isEmpty():
-                # an EMPTY micro-batch (zero envelopes after filters —
-                # e.g. a heartbeat-only feed) folds to no state change;
-                # writing an empty tmp dir would fail on read-back
-                # (round-10 EMPTY-fixture catch, same guard as the SCD2
-                # sink) — commit the no-op instead
-                self._committed.add(batch_id)
-                self._save_commits()
-                return
-            # Two-phase: materialize the merged buckets to tmp first (the
-            # merge READS path, so overwriting path in the same job would
-            # clobber its own input), then dynamic-partition-overwrite into
-            # the state table — only directories present in tmp (= touched
-            # buckets) are replaced; all other bucket files stay untouched.
-            new.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-            (
-                self.spark.read.parquet(tmp)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(path)
-            )
-            self._committed.add(batch_id)
-            self._save_commits()
+            committed.add(batch_id)
+            self._save_commits(committed)
         finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+            batch.unpersist()
+
+
+class CdcParquetSink(_BucketedParquetSink):
+    """foreachBatch sink keeping the LWW current-state table (SURVEY.md
+    §3-C step 3) on the shared bucketed commit path. Plain parquet has no
+    MERGE, so the fold is ``reconcile(old ∪ batch)`` over the touched
+    buckets — one aggregate; the batch needs no reconcile of its own
+    because reconcile is associative. LWW is idempotent per key, so a
+    replayed or partially applied batch folds to the same state.
+    ``tests/test_streaming.py::test_sink_rewrites_only_touched_buckets``
+    pins the touched-bucket-only rewrite via file mtimes. (The StateStore
+    form ``cdc_apply_stateful_stream`` above is the no-filesystem-round-trip
+    alternative.)"""
+
+    def _rows(self, batch: DataFrame) -> DataFrame:
+        return batch
+
+    def _fold(self, old: DataFrame, rows: DataFrame, batch: DataFrame) -> DataFrame:
+        return self._bucket(merge_states(old, rows))
 
     def current(self) -> DataFrame:
         st = self.state()
         if st is None:
-            # EMPTY feed (round-10 EMPTY-fixture catch): a replay that
-            # carried zero envelopes writes no state files — the correct
-            # sink table is EMPTY, not an error. Schema is static for
-            # this feed (current_state's projection of the envelope).
+            # no state row yet (e.g. an empty feed): the sink table is
+            # empty, with current_state's static projection of the envelope
             return self.spark.createDataFrame(
                 [],
                 "key long, last_ts timestamp, last_event_type string,"
@@ -326,173 +352,76 @@ def scd2_versions(envelopes: DataFrame) -> DataFrame:
     )
 
 
-@dataclass
-class Scd2ParquetSink:
+class Scd2ParquetSink(_BucketedParquetSink):
     """foreachBatch sink maintaining the SCD2 HISTORY table incrementally
-    — the streaming twin of the batch ``cdc_scd2`` window (same oracle:
-    micro-batch folding must be invisible). Reuses CdcParquetSink's
-    bounded-commit protocol verbatim: hash(key) bucket partitioning,
-    touched-bucket partition pruning on read, two-phase dynamic partition
-    overwrite on write, batch-id commit log for idempotent replay.
+    on the shared bucketed commit path — the streaming twin of the batch
+    ``cdc_scd2`` window (same oracle: micro-batch folding must be
+    invisible). Touched buckets come from ALL batch keys, deletes included,
+    so an all-delete slice still closes its keys' open rows.
 
-    Per batch: (1) the delta's own envelopes become version rows via the
-    same window the batch form uses; (2) each touched key's still-open
-    row in state is CLOSED with the key's first delta timestamp (delete
-    envelopes close without opening). Correct under the replay's
-    guarantee that per-key (ts, seq) never decreases across micro-batches
-    — the oplog's total order (SURVEY §1.1).
+    The fold: (1) the batch's envelopes become version rows via the same
+    window the batch form uses; (2) each touched key's still-open row in
+    state is CLOSED with the key's first batch timestamp (delete envelopes
+    close without opening). Correct under the replay's guarantee that
+    per-key (ts, seq) never decreases across micro-batches — the oplog's
+    total order (SURVEY §1.1).
 
-    Crash-replay idempotency (round 9): the state-write → commit-log
-    sequence is not atomic, so a crash between the two replays a batch
-    whose rows are already (even PARTIALLY — the dynamic partition
-    overwrite is per-bucket-directory, not atomic across buckets) in
-    state. CdcParquetSink survives that window because LWW merge is
-    idempotent; the SCD2 fold is made idempotent explicitly, per row:
-    (a) an open row is closed only when the delta's first (ts, seq) is
-    STRICTLY GREATER than the row's own (valid_from, seq) — a replayed
-    batch's first envelope never out-orders the open row it itself
-    created, so re-closing (which would corrupt the interval with an
-    older timestamp) cannot happen; (b) delta version rows are added via
-    a (key, seq) anti-join against the touched state, so rows already
-    folded are not duplicated. Both guards are no-ops on the happy path
-    (per-key monotone (ts, seq) makes the strict comparison true and the
-    anti-join empty for genuinely new batches).
+    Crash-replay idempotency: a crash between the state write and the
+    commit log replays a batch whose rows are already (even PARTIALLY — the
+    overwrite is per bucket dir, not atomic across buckets) in state, so
+    the fold guards per row: (a) an open row is closed only when the
+    batch's first (ts, seq) is STRICTLY GREATER than the row's own
+    (valid_from, seq) — a replayed batch's first envelope never out-orders
+    the open row it itself created; (b) version rows are added via a
+    (key, seq) anti-join against the touched state, so rows already folded
+    are not duplicated. Both guards are no-ops on the happy path.
     tests/test_streaming.py::test_scd2_sink_failure_replay_* pin both
     interleavings deterministically."""
 
-    spark: SparkSession
-    state_dir: str
-    n_buckets: int = 16
-    _committed: set[int] = field(default_factory=set)
+    def _rows(self, batch: DataFrame) -> DataFrame:
+        return self._bucket(scd2_versions(batch))
 
-    # -- identical commit/bucket plumbing to CdcParquetSink ---------------
-    @property
-    def _commit_log(self) -> str:
-        return os.path.join(self.state_dir, "_commits.json")
-
-    def _load_commits(self) -> set[int]:
-        if os.path.exists(self._commit_log):
-            with open(self._commit_log) as f:
-                return set(json.load(f))
-        return set()
-
-    def _save_commits(self) -> None:
-        # the parquet write normally creates state_dir, but a committed
-        # NO-OP batch (empty feed) reaches here first — create the dir
-        # (round-10 EMPTY-fixture catch, found by the CLI-on-empty run)
-        os.makedirs(self.state_dir, exist_ok=True)
-        with open(self._commit_log, "w") as f:
-            json.dump(sorted(self._committed), f)
-
-    def _bucket(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "bucket", F.pmod(F.xxhash64("key"), F.lit(self.n_buckets))
-        )
-
-    def state(self) -> DataFrame | None:
-        path = os.path.join(self.state_dir, "state")
-        try:
-            return self.spark.read.parquet(path)
-        except Exception:
-            return None
-
-    # -- the SCD2 fold -----------------------------------------------------
-    def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        self._committed = self._load_commits()
-        if batch_id in self._committed:
-            return
-        delta_rows = self._bucket(scd2_versions(batch_df))
-        first_ts = batch_df.groupBy("key").agg(
+    def _fold(self, old: DataFrame, rows: DataFrame, batch: DataFrame) -> DataFrame:
+        first_ts = batch.groupBy("key").agg(
             F.min(F.struct("ts", "seq")).alias("_first_delta")
         )
-        old = self.state()
-        path = os.path.join(self.state_dir, "state")
-        tmp = os.path.join(self.state_dir, f"state_tmp_{batch_id}")
-        try:
-            if old is None:
-                new = delta_rows
-            else:
-                # Touched buckets come from ALL batch keys — scd2_versions
-                # drops delete envelopes, so deriving buckets from
-                # delta_rows would skip a bucket whose micro-batch slice is
-                # all-deletes and leave its keys' open rows unclosed,
-                # breaking the stream==batch invariant the oracle asserts.
-                touched = [
-                    r["bucket"]
-                    for r in self._bucket(batch_df.select("key").distinct())
-                    .select("bucket")
-                    .distinct()
-                    .collect()
-                ]
-                old_t = old.filter(F.col("bucket").isin(touched))
-                # close-guard: strictly-greater (ts, seq) — replay-safe
-                # (see class docstring). Field names aliased to match the
-                # aggregated struct so the comparison is well-typed. The
-                # key joins are NULL-SAFE: a NULL document key is a real
-                # CDC key group (the window oracle partitions it as one),
-                # and a plain equi-join left the NULL key's open rows
-                # unclosed forever (round-9 NULL-fixture catch).
-                row_pos = F.struct(
-                    F.col("valid_from").alias("ts"), F.col("seq").alias("seq")
-                )
-                ft = first_ts.select(F.col("key").alias("_ft_key"), "_first_delta")
-                closed = (
-                    old_t.join(
-                        F.broadcast(ft),
-                        F.col("key").eqNullSafe(F.col("_ft_key")),
-                        "left",
-                    )
-                    .drop("_ft_key")
-                    .withColumn(
-                        "valid_to",
-                        F.when(
-                            F.col("is_current")
-                            & F.col("_first_delta").isNotNull()
-                            & (row_pos < F.col("_first_delta")),
-                            F.col("_first_delta.ts"),
-                        ).otherwise(F.col("valid_to")),
-                    )
-                    .withColumn("is_current", F.col("valid_to").isNull())
-                    .drop("_first_delta")
-                )
-                # add-guard: only version rows not already folded (replay /
-                # partial-overwrite safe); (key, seq) is the version PK —
-                # null-safe on key for the same reason as the close-guard.
-                ex = old_t.select(
-                    F.col("key").alias("_ex_key"), F.col("seq").alias("_ex_seq")
-                )
-                fresh = delta_rows.join(
-                    ex,
-                    F.col("key").eqNullSafe(F.col("_ex_key"))
-                    & (F.col("seq") == F.col("_ex_seq")),
-                    "left_anti",
-                )
-                new = closed.unionByName(fresh)
-            if new.isEmpty():
-                # nothing to fold (e.g. an all-delete batch for keys the
-                # state never saw) — writing an empty tmp dir would fail on
-                # read-back; the batch is a committed no-op instead
-                self._committed.add(batch_id)
-                self._save_commits()
-                return
-            new.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-            (
-                self.spark.read.parquet(tmp)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(path)
+        # close-guard: strictly-greater (ts, seq) — replay-safe. Field
+        # names aliased to match the aggregated struct so the comparison
+        # is well-typed. The key joins are NULL-SAFE: a NULL document key
+        # is a real CDC key group (the window oracle partitions it as
+        # one), and a plain equi-join would leave its open rows unclosed.
+        row_pos = F.struct(F.col("valid_from").alias("ts"), F.col("seq").alias("seq"))
+        ft = first_ts.select(F.col("key").alias("_ft_key"), "_first_delta")
+        closed = (
+            old.join(F.broadcast(ft), F.col("key").eqNullSafe(F.col("_ft_key")), "left")
+            .drop("_ft_key")
+            .withColumn(
+                "valid_to",
+                F.when(
+                    F.col("is_current")
+                    & F.col("_first_delta").isNotNull()
+                    & (row_pos < F.col("_first_delta")),
+                    F.col("_first_delta.ts"),
+                ).otherwise(F.col("valid_to")),
             )
-            self._committed.add(batch_id)
-            self._save_commits()
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+            .withColumn("is_current", F.col("valid_to").isNull())
+            .drop("_first_delta")
+        )
+        # add-guard: only version rows not already folded (replay /
+        # partial-overwrite safe); (key, seq) is the version PK
+        ex = old.select(F.col("key").alias("_ex_key"), F.col("seq").alias("_ex_seq"))
+        fresh = rows.join(
+            ex,
+            F.col("key").eqNullSafe(F.col("_ex_key")) & (F.col("seq") == F.col("_ex_seq")),
+            "left_anti",
+        )
+        return closed.unionByName(fresh)
 
     def history(self) -> DataFrame:
         st = self.state()
         if st is None:
-            # EMPTY feed: zero envelopes → empty SCD2 history, not an
-            # error (round-10 EMPTY-fixture catch; schema is static).
+            # no state row yet (an empty feed, or only all-delete batches
+            # for unseen keys): empty history with the static schema
             return self.spark.createDataFrame(
                 [],
                 "key long, seq long, value double, valid_from timestamp,"

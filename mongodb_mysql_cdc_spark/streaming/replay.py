@@ -194,7 +194,7 @@ def drain_to_memory_table(
     # deployment sizes this to the cluster, not to the replay.
     #
     # THREAD-SAFETY: the override is session-global while held — a query
-    # planned concurrently on the same session would pick up 4 partitions.
+    # planned concurrently on the same session would pick up 2 partitions.
     # Every caller (suite replay queries, the CLI pipeline) is
     # single-threaded per session; Spark offers no per-stream conf for
     # shuffle.partitions short of spark.cloneSession(), which would forfeit

@@ -145,6 +145,74 @@ def test_sink_rewrites_only_touched_buckets(spark, sf_dir):
     assert _rows(sink.current(), ["key", "last_ts", "last_value"]) == expected
 
 
+def test_sink_executes_each_micro_batch_once(spark, sf_dir):
+    """numInputRows counts every execution of a micro-batch, so over the
+    whole stream it sums to the envelope count only when the sink executes
+    each batch once (touched buckets, emptiness and the write all read the
+    same persisted batch)."""
+    staged = stage_event_chunks(spark, sf_dir, n_chunks=3, dir_prefix="once")
+    sink = CdcParquetSink(spark, tempfile.mkdtemp(prefix="state_once_"), n_buckets=4)
+    q = (
+        envelopes_from_events(read_event_stream(spark, staged))
+        .writeStream.foreachBatch(sink.apply_batch)
+        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_once_"))
+        .start()
+    )
+    run_to_completion(q)
+    ev = load(spark, sf_dir, "events")
+    n_env = ev.count()
+    assert n_env > 0
+    assert len(sink._load_commits()) >= 3
+    assert sum(p.numInputRows for p in q.recentProgress) == n_env
+    cols = ["key", "last_ts", "last_event_type", "last_value", "last_k"]
+    assert _rows(sink.current(), cols) == _rows(
+        cdc_apply_batch(envelopes_from_events(ev)), cols
+    )
+
+
+def test_commit_log_survives_torn_write(spark, monkeypatch):
+    """A sink that dies midway through writing its commit log must leave
+    the previous log readable (write-then-rename), so a restarted sink
+    still knows which batches are committed and can redo the torn one."""
+    import json
+    import types
+    from pyspark.sql import Row
+    import datetime as dt
+
+    from mongodb_mysql_cdc_spark.streaming import apply as apply_mod
+
+    mk = lambda key, seq, v: Row(
+        op="u", ts=dt.datetime(2024, 1, 1, 10, 0, seq), seq=seq, key=key,
+        after=Row(user_id=key, event_type="x", value=v, k=0),
+    )
+    root = tempfile.mkdtemp(prefix="state_torn_")
+    batches = [
+        spark.createDataFrame([mk(1, 1, 1.0), mk(2, 2, 2.0)]),
+        spark.createDataFrame([mk(1, 3, 3.0), mk(3, 4, 4.0)]),
+    ]
+    sink = CdcParquetSink(spark, root, n_buckets=4)
+    sink.apply_batch(batches[0], 0)
+
+    def torn_dump(obj, f):
+        f.write(json.dumps(obj)[:2])
+        raise OSError("simulated death mid-dump")
+
+    monkeypatch.setattr(
+        apply_mod, "json", types.SimpleNamespace(load=json.load, dump=torn_dump)
+    )
+    with pytest.raises(OSError, match="mid-dump"):
+        sink.apply_batch(batches[1], 1)
+    monkeypatch.undo()
+
+    restarted = CdcParquetSink(spark, root, n_buckets=4)
+    assert restarted._load_commits() == {0}
+    restarted.apply_batch(batches[1], 1)  # the redelivered batch folds again
+    assert restarted._load_commits() == {0, 1}
+    assert _rows(restarted.current(), ["key", "last_value"]) == [
+        (1, 3.0), (2, 2.0), (3, 4.0)
+    ]
+
+
 def test_late_event_cannot_resurrect_deleted_key(spark):
     """Tombstone retention: an out-of-order update older than a delete must
     NOT re-insert the key (the reason state keeps op='d' rows)."""
@@ -473,3 +541,17 @@ def test_scd2_all_delete_batch_closes_open_rows(spark):
     sink.apply_batch(spark.createDataFrame(ghost), 2)
     assert _rows(sink.history(), cols) == want
     assert 2 in sink._load_commits()
+
+    # the same batch FIRST on a fresh sink folds to nothing: its overwrite
+    # leaves state/ without a data file, which must still read as no state
+    # and the typed empty history, and a normal batch must fold on top
+    first = Scd2ParquetSink(spark, tempfile.mkdtemp(prefix="scd2_del0_"), n_buckets=4)
+    first.apply_batch(spark.createDataFrame(ghost), 0)
+    assert 0 in first._load_commits()
+    assert first.state() is None
+    empty = first.history()
+    assert empty.columns == cols and empty.count() == 0
+    first.apply_batch(spark.createDataFrame(opens), 1)
+    got = _rows(first.history(), cols)
+    assert got == _rows(scd2_versions(spark.createDataFrame(ghost + opens)), cols)
+    assert len(got) == 2 and all(r[-1] for r in got)  # both keys open

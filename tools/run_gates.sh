@@ -35,6 +35,10 @@ echo "== pytest (serialized checkpoint-restart stage) =="
 python -m pytest tests/ -q -m serial -p no:cacheprovider
 record pytest_serial
 
+echo "== replbench smoke (metric contract + replica correctness gate) =="
+python3 replbench/run.py --smoke
+record replbench_smoke
+
 echo "== plan lint (scale-killer hunt, all registered queries) =="
 python tools/plan_lint.py
 record plan_lint
