@@ -5,12 +5,16 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 
 Timing methodology: one warm-up pass of a trivial action to absorb JVM/
 session startup, then each query is executed three times with a full
-materializing action (sum of xxhash64 over ALL output columns — count()
+materializing action (bit_xor of xxhash64 over ALL output columns — count()
 alone would let Catalyst prune the final projection) and the BEST of the
 three is reported — the standard way to suppress one-time codegen/JIT cost
 and co-tenant noise (measured first/best spreads on a loaded box reach
 2-13×) while still paying every per-run cost (scan, shuffle, compute).
 All raw timings go to stderr.
+
+This module is the single definition of the headline set (``HEADLINE``)
+and of the timed materialization path (``warm_up``, ``materialize``,
+``timed_runs``); the timing tools under ``tools/`` import them.
 """
 
 from __future__ import annotations
@@ -22,6 +26,8 @@ import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
+
+from pyspark.sql import functions as F
 
 from mongodb_mysql_cdc_spark import registry
 from mongodb_mysql_cdc_spark.session import get_session
@@ -47,6 +53,38 @@ HEADLINE = [
 ]
 
 
+def warm_up(spark, sf_dir: str) -> None:
+    """JVM, codegen, parquet datasource init + footer caches — the one-time
+    infrastructure costs a long-lived cluster never re-pays. Reads a 5-row
+    table so no query's actual data is pre-warmed."""
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    spark.read.parquet(f"{sf_dir}/region.parquet").count()
+
+
+def materialize(df) -> int:
+    """Compute every output column of every row of ``df``; return the row
+    count. A bare count() lets Catalyst prune the final projection, so
+    map-heavy queries would be timed without computing their output
+    columns; xxhash64(struct(*)) forces every column to be produced."""
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        # bit_xor, not sum: summing 64-bit hashes overflows under ANSI
+        F.bit_xor(F.xxhash64(F.struct(*[F.col(c) for c in df.columns]))).alias("h"),
+    ).collect()[0]
+    return row["n"]
+
+
+def timed_runs(fn, spark, sf_dir: str, n: int = 3) -> tuple[list[float], int]:
+    """Build ``fn(spark, sf_dir)`` and ``materialize`` it ``n`` times; return
+    the wall time of each build-plus-action run and the row count."""
+    runs, rows = [], 0
+    for _ in range(n):
+        t0 = time.perf_counter()
+        rows = materialize(fn(spark, sf_dir))
+        runs.append(time.perf_counter() - t0)
+    return runs, rows
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # Box-state telemetry (round 13): the r12 official bench ran on a box
@@ -59,32 +97,11 @@ def main() -> None:
     spark = get_session("bench")
     qs = registry.queries()
     names = [n for n in HEADLINE if n in qs]
-
-    # Warm-up: JVM, codegen, parquet datasource init + footer caches — the
-    # one-time infrastructure costs a long-lived cluster never re-pays.
-    # Reads a 5-row table so no query's actual data is pre-warmed.
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
-
-    from pyspark.sql import functions as F
+    warm_up(spark, sf_dir)
 
     timings: dict[str, float] = {}
     for name in names:
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
-            # Full materialization: hash every output column into one scalar.
-            # A bare count() lets Catalyst prune the final projection, so
-            # map-heavy queries would be timed without computing their output
-            # columns; xxhash64(struct(*)) forces every column to be produced.
-            row = df.agg(
-                F.count(F.lit(1)).alias("n"),
-                # bit_xor, not sum: summing 64-bit hashes overflows under ANSI
-                F.bit_xor(F.xxhash64(F.struct(*[F.col(c) for c in df.columns]))).alias("h"),
-            ).collect()[0]
-            n = row["n"]
-            runs.append(time.perf_counter() - t0)
+        runs, n = timed_runs(qs[name], spark, sf_dir)
         timings[name] = round(min(runs), 3)
         print(
             f"# {name}: {timings[name]:.3f}s best of {[round(r, 3) for r in runs]} ({n} rows)",

@@ -233,21 +233,6 @@ def _attach_split_hint(df: DataFrame, path: str) -> DataFrame:
     return df
 
 
-def spread(df: DataFrame, factor: int = 2) -> DataFrame:
-    """Round-robin repartition to ``defaultParallelism * factor`` splits.
-
-    Fan-out guard for small-file inputs feeding expensive downstream work:
-    at sf0.1 a harness table is ONE parquet split, so a join that emits
-    millions of rows per input row (interval-overlap pair emission) runs
-    in a single task no matter how many cores exist. Round-robin — not
-    hash-by-key — on purpose: hashing a skewed key would re-serialize the
-    hot entity into one task, which is exactly the bomb being defused.
-    Only safe on the PROBE side of a broadcast join (no shuffle replaced)
-    or ahead of a shuffle that re-keys anyway; a no-op at real scale where
-    the scan already yields hundreds of splits."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism * factor)
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every harness table as a temp view for the SQL API."""
     for name in TABLES:

@@ -29,11 +29,9 @@ import tempfile
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from mongodb_mysql_cdc_spark.catalog import load
 from mongodb_mysql_cdc_spark.sources.adapters import EnvelopeSource, ParquetReplaySource
-from mongodb_mysql_cdc_spark.streaming.apply import CdcParquetSink, reconcile
+from mongodb_mysql_cdc_spark.streaming.apply import CdcParquetSink
 from mongodb_mysql_cdc_spark.streaming.replay import run_to_completion
 
 

@@ -17,9 +17,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mongodb_mysql_cdc_spark.catalog import load, spread
+from mongodb_mysql_cdc_spark.catalog import load
 from mongodb_mysql_cdc_spark.functions.compat import dec_sum, hround, sql_dec_sum, sql_round
 from mongodb_mysql_cdc_spark.operators.joins import asof_join
+from mongodb_mysql_cdc_spark.operators.partitioning import spread
 from mongodb_mysql_cdc_spark.registry import register
 
 
@@ -385,11 +386,12 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines emit 68,584,839, verified by count parity per the
     round-9 audit). For production use the registered sibling
     join_interval_overlap_bounded — per-entity interval cap + `truncated`
-    flag — which bounds work AND output. The probe side is spread()
-    round-robin so the sf-scale single-split scan doesn't serialize pair
-    emission into one task (the other side broadcasts, so the repartition
-    replaces no shuffle; on a hot key a HASH repartition would rebuild
-    the single-task bomb)."""
+    flag — which bounds work AND output. The probe side goes through the
+    adaptive spread() with no keys (round-robin, and only when the scan is
+    under-partitioned) so the sf-scale single-split scan doesn't serialize
+    pair emission into one task (the other side broadcasts, so the
+    repartition replaces no shuffle; on a hot key a HASH repartition would
+    rebuild the single-task bomb)."""
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
     # Pin the build side: without the hint the planner may broadcast the
     # spread() side instead (both inputs are the same table) and the probe

@@ -105,9 +105,8 @@ def test_stale_warns_on_unresolvable_round_marker(capsys):
 def test_subsets_are_registered_and_headline_synced():
     """tools/subsets.py mechanizes the sweep subsets (round 9). A typo'd
     name would silently shrink a sweep's coverage — every subset member
-    must be a registered query, and the HEADLINE list must stay in
-    lockstep with bench.py's (the bench and the sweeps must measure the
-    same queries)."""
+    must be a registered query, and the headline subset must be bench.py's
+    HEADLINE (the bench and the sweeps must measure the same queries)."""
     import subsets
 
     from mongodb_mysql_cdc_spark import registry
@@ -118,20 +117,45 @@ def test_subsets_are_registered_and_headline_synced():
         assert not missing, f"subset {label}: unregistered {missing}"
         assert len(names) == len(set(names)), f"subset {label}: duplicates"
 
-    # Parse HEADLINE from the AST (like the registry window check) —
-    # exec'ing a text prefix ran bench.py's module-level imports and broke
-    # if any earlier def was named main (round-9 ADVICE).
+    import bench
+
+    assert subsets.SUBSETS["headline"] == bench.HEADLINE
+
+
+def test_tools_take_headline_and_digest_from_bench():
+    """bench.py is the single definition of the headline list and of the
+    materializing digest action: no tool may assign its own HEADLINE or
+    spell out the bit_xor hash fold."""
     import ast
 
-    tree = ast.parse((ROOT / "bench.py").read_text())
-    headline = None
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Assign) and any(
-            isinstance(t, ast.Name) and t.id == "HEADLINE" for t in node.targets
-        ):
-            headline = ast.literal_eval(node.value)
-    assert headline is not None, "bench.py has no literal HEADLINE assignment"
-    assert subsets.HEADLINE == headline
+    offenders = []
+    for path in sorted((ROOT / "tools").glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                if any(isinstance(t, ast.Name) and t.id == "HEADLINE" for t in targets):
+                    offenders.append(f"{path.name}:{node.lineno} assigns HEADLINE")
+            elif isinstance(node, ast.Call):
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                if name == "bit_xor":
+                    offenders.append(f"{path.name}:{node.lineno} calls bit_xor")
+    assert not offenders, offenders
+
+
+def test_timing_tools_import_and_timer_counts_rows(spark, sf_dir):
+    """profile_headline and bench_scale import cleanly, and bench.py's
+    shared timer reports the query's true row count."""
+    import bench
+    import bench_scale  # noqa: F401
+    import profile_headline  # noqa: F401
+
+    from mongodb_mysql_cdc_spark import registry
+
+    fn = registry.queries()["cdc_apply_batch"]
+    runs, rows = bench.timed_runs(fn, spark, sf_dir, n=1)
+    assert len(runs) == 1 and runs[0] > 0
+    assert rows == fn(spark, sf_dir).count() > 0
 
 
 def test_fwd_unbounded_frame_rule_fires_and_spares(spark):

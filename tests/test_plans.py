@@ -510,9 +510,10 @@ def test_bucketed_interval_join_is_equi_on_cell_with_pruned_probe(spark):
 
 def test_exhibit_spread_parallelizes_pair_emission(spark):
     """join_interval_overlap's probe side must be round-robin repartitioned
-    (catalog.spread) with the build side broadcast — the sf-scale
-    single-split scan must not serialize 68M-pair emission into one task
-    (round 9: 316 s single-task → round 10: 22.7 s over 64 splits)."""
+    (operators.partitioning.spread with no keys) with the build side
+    broadcast — the sf-scale single-split scan must not serialize 68M-pair
+    emission into one task (round 9: 316 s single-task → round 10: 22.7 s
+    over 64 splits)."""
     plan = explain_str(_q("join_interval_overlap", spark))
     assert "RoundRobinPartitioning" in plan, plan
     assert has_broadcast_join(_q("join_interval_overlap", spark))

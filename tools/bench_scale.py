@@ -1,9 +1,6 @@
 """Best-of-N wall-clock comparison of registry queries across two sf dirs
-(the BASELINE.md 10× scale-validation harness).
-
-Timing forces full materialization the same way bench.py does:
-bit_xor(xxhash64(struct(*))) over every output column — Catalyst cannot
-prune the computation being measured.
+(the BASELINE.md 10× scale-validation harness). Each run builds and fully
+materializes the query through bench.py's ``timed_runs``.
 
 Usage:
   python tools/bench_scale.py --queries q1,q2 [--a /root/testdata/sf0.1]
@@ -14,32 +11,13 @@ from __future__ import annotations
 
 import argparse
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import functions as F
-
+from bench import timed_runs
 from mongodb_mysql_cdc_spark.registry import queries
 from mongodb_mysql_cdc_spark.session import get_session
-
-
-def materialize(df) -> int:
-    row = df.agg(
-        F.bit_xor(F.xxhash64(F.struct(*df.columns))).alias("h"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    return row.n
-
-
-def time_query(fn, spark, sf_dir: str, n: int) -> tuple[float, int]:
-    best, rows = float("inf"), 0
-    for _ in range(n):
-        t0 = time.monotonic()
-        rows = materialize(fn(spark, sf_dir))
-        best = min(best, time.monotonic() - t0)
-    return best, rows
 
 
 def main() -> None:
@@ -53,8 +31,9 @@ def main() -> None:
     reg = queries()
     for name in args.queries.split(","):
         fn = reg[name]
-        ta, ra = time_query(fn, spark, args.a, args.n)
-        tb, rb = time_query(fn, spark, args.b, args.n)
+        runs_a, ra = timed_runs(fn, spark, args.a, args.n)
+        runs_b, rb = timed_runs(fn, spark, args.b, args.n)
+        ta, tb = min(runs_a), min(runs_b)
         growth = tb / ta if ta > 0 else float("inf")
         print(
             f"RESULT {name}: a={ta:.2f}s ({ra} rows)  b={tb:.2f}s ({rb} rows)"

@@ -7,16 +7,16 @@ bench iteration into:
           py4j expression building — no job runs)
   noop    df.write.format("noop") — computes every column of every row,
           no driver collect, no extra aggregate (guide §1.4)
-  bench   the exact bench.py action (count + bit_xor(xxhash64(struct(*)))
-          + collect) — what BENCH_rNN.json times
+  bench   bench.py's ``materialize`` action — what BENCH_rNN.json times
 
-and writes `.explain("formatted")` to plans/<round>/<name>_<tag>.txt.
+The headline list, the warm-up and the action are bench.py's own.
 
 Usage:
-  python tools/profile_headline.py [--n 3] [--tag before] [--round r14]
-                                   [--queries a,b,c] [--sf DIR] [--no-plans]
-                                   [--executed]
+  python tools/profile_headline.py [--n 3] [--tag before] [--queries a,b,c]
+                                   [--sf DIR] [--round r15] [--executed]
 
+--n 0 skips the timings. --round writes `.explain("formatted")` to
+plans/<round>/<name>_<tag>.txt; without it no plan is written.
 --executed additionally runs each query once and appends the POST-RUN
 plan (AQE final plan: ReusedExchange / AQEShuffleRead visible) to the
 dump — the static explain only shows isFinalPlan=false.
@@ -25,32 +25,27 @@ dump — the static explain only shows isFinalPlan=false.
 from __future__ import annotations
 
 import argparse
+import contextlib
+import io
 import json
 import os
 import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
-from pyspark.sql import functions as F
-
+from bench import HEADLINE, materialize, warm_up
 from mongodb_mysql_cdc_spark.registry import queries
 from mongodb_mysql_cdc_spark.session import get_session
 
-HEADLINE = [
-    "pricing_summary", "join_inner_hash", "join_broadcast", "join_asof",
-    "topk_per_group", "win_running", "agg_rollup", "cdc_apply_batch",
-    "dedup_exact", "dedup_minhash_lsh", "sim_search_topk", "sim_search_lsh",
-    "tfidf", "text_stats",
-]
 
-
-def bench_action(df) -> None:
-    df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64(F.struct(*[F.col(c) for c in df.columns]))).alias("h"),
-    ).collect()
+def _explain(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
 
 
 def main() -> None:
@@ -59,27 +54,20 @@ def main() -> None:
     ap.add_argument("--tag", default="before")
     ap.add_argument("--queries", default=None)
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--no-plans", action="store_true")
-    ap.add_argument("--plans-only", action="store_true")
-    ap.add_argument("--round", default="r14")
+    ap.add_argument("--round", default=None)
     ap.add_argument("--executed", action="store_true")
     args = ap.parse_args()
 
     names = args.queries.split(",") if args.queries else HEADLINE
     spark = get_session("profile")
     qs = queries()
-    # Same warm-up as bench.py
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(f"{args.sf}/region.parquet").count()
-
-    plans_dir = Path(__file__).resolve().parent.parent / "plans" / args.round
-    plans_dir.mkdir(parents=True, exist_ok=True)
+    warm_up(spark, args.sf)
 
     out = {}
     for name in names:
         fn = qs[name]
         builds, noops, benches = [], [], []
-        for _ in range(0 if args.plans_only else args.n):
+        for _ in range(args.n):
             t0 = time.perf_counter()
             df = fn(spark, args.sf)
             t1 = time.perf_counter()
@@ -89,7 +77,7 @@ def main() -> None:
             spark.sparkContext.setJobDescription(f"{name}: bench-action")
             df2 = fn(spark, args.sf)
             t3 = time.perf_counter()
-            bench_action(df2)
+            materialize(df2)
             t4 = time.perf_counter()
             spark.sparkContext.setJobDescription(None)
             builds.append(t1 - t0)
@@ -102,24 +90,17 @@ def main() -> None:
         }
         out[name] = rec
         print(f"# {name}: build={rec['build']} noop={rec['noop']} bench={rec['bench']}", file=sys.stderr)
-        if not args.no_plans:
-            import contextlib
-            import io
-
+        if args.round:
             df = fn(spark, args.sf)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
-            text = buf.getvalue()
+            text = _explain(df)
             if args.executed:
                 # collect() runs THIS DataFrame's QueryExecution, so the
                 # subsequent explain shows the AQE final plan (a noop
                 # write would execute a separate wrapping QE instead)
                 df.collect()
-                buf2 = io.StringIO()
-                with contextlib.redirect_stdout(buf2):
-                    df.explain("formatted")
-                text += "\n== Post-run (AQE final) plan ==\n" + buf2.getvalue()
+                text += "\n== Post-run (AQE final) plan ==\n" + _explain(df)
+            plans_dir = ROOT / "plans" / args.round
+            plans_dir.mkdir(parents=True, exist_ok=True)
             (plans_dir / f"{name}_{args.tag}.txt").write_text(text)
     print(json.dumps({"sf": args.sf, "n": args.n, "timings": out}))
 

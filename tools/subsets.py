@@ -13,6 +13,12 @@ Usage:
 from __future__ import annotations
 
 import sys
+from pathlib import Path
+
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+# The headline bench queries: bench.py is their single definition.
+from bench import HEADLINE
 
 # Distributed-machinery consumers (operators/ranking.py bounded boundary
 # sample + bucket expressions): the round-7/8 rework surface.
@@ -21,15 +27,6 @@ MACHINERY = [
     "agg_weighted_median", "pack_sequences", "dataset_curriculum",
     "analytics_rfm", "join_salted",
     "corpus_prepare_e2e", "corpus_prepare_e2e_production",
-]
-
-# The headline bench queries (bench.py HEADLINE — kept in sync by
-# tests/test_coverage_tools.py's subset test).
-HEADLINE = [
-    "pricing_summary", "join_inner_hash", "join_broadcast", "join_asof",
-    "topk_per_group", "win_running", "agg_rollup", "cdc_apply_batch",
-    "dedup_exact", "dedup_minhash_lsh", "sim_search_topk", "sim_search_lsh",
-    "tfidf", "text_stats",
 ]
 
 # Exact-decimal / grid-accumulator re-spells (round 8 catch #1): every
@@ -266,7 +263,6 @@ def mechanical_readers(axis: str, readership: dict) -> set[str]:
 
 def _load_readership() -> dict:
     import json
-    from pathlib import Path
 
     p = Path(__file__).with_name("readership.json")
     return json.loads(p.read_text())["queries"]
