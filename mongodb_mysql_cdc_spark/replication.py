@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from mongodb_mysql_cdc_spark.sources.adapters import EnvelopeSource, ParquetReplaySource
 from mongodb_mysql_cdc_spark.streaming.apply import CdcParquetSink
-from mongodb_mysql_cdc_spark.streaming.replay import run_to_completion
+from mongodb_mysql_cdc_spark.streaming.replay import drain_foreach_batch
 
 
 @dataclass
@@ -76,17 +76,13 @@ class ReplicationPipeline:
         # Events already folded by the snapshot may be re-delivered by a
         # stream starting from offset zero — the batch-id guard plus LWW
         # idempotence make the overlap harmless (same replay argument as
-        # a resume-token restart).
-        env = self.source.stream()
-        q = (
-            env.writeStream.foreachBatch(self._sink.apply_batch)
-            .option(
-                "checkpointLocation",
-                os.path.join(self.sink_dir, "_checkpoint"),
-            )
-            .start()
+        # a resume-token restart). apply_batch is looked up here, at call
+        # time, so an instance attribute set on the sink takes its place.
+        drain_foreach_batch(
+            self.source.stream(),
+            self._sink.apply_batch,
+            os.path.join(self.sink_dir, "_checkpoint"),
         )
-        run_to_completion(q)
         return self
 
     def run(self) -> DataFrame:

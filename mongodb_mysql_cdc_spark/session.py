@@ -53,29 +53,42 @@ def _extra_conf() -> list[tuple[str, str]]:
     return out
 
 
+def _runtime_conf() -> list[tuple[str, str]]:
+    """The engine defaults that can be set on a live session — the one
+    table ``get_session`` builds with and ``tune_for_harness`` applies to
+    a session it is handed."""
+    return [
+        ("spark.sql.session.timeZone", "UTC"),
+        ("spark.sql.adaptive.enabled", _aqe()),
+        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+        ("spark.sql.adaptive.skewJoin.enabled", "true"),
+        ("spark.sql.shuffle.partitions", str(shuffle_partitions())),
+        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+        ("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)),
+        # PySpark 4's per-call origin capture (DataFrame debugging) costs 4
+        # py4j round trips per Column/DataFrame API call — ~1/3 of all
+        # plan-build socket traffic in a cProfile. It only enriches error
+        # messages with Python call sites. On a live session it takes
+        # effect only if set before the first DataFrame API call latches
+        # the process-global cache.
+        ("spark.python.sql.dataFrameDebugging.enabled", "false"),
+        # events.ts is parquet TIMESTAMP(NANOS) — read as long, see catalog.load
+        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+        # custom Python DataSource filter pushdown (scan_python_datasource_pushdown)
+        ("spark.sql.python.filterPushdown.enabled", "true"),
+        *_extra_conf(),
+    ]
+
+
 def get_session(app_name: str = "mongodb_mysql_cdc_spark") -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults."""
-    cpus = default_parallelism()
     builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        SparkSession.builder.master(f"local[{default_parallelism()}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions()))
-        .config("spark.sql.adaptive.enabled", _aqe())
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Round 13 (guide §1 profile): PySpark 4's per-call origin capture
-        # (DataFrame debugging) costs 4 py4j round trips per Column/DataFrame
-        # API call — cProfile showed it as ~1/3 of all plan-BUILD socket
-        # traffic. It only enriches error messages with Python call sites;
-        # turning it off is a pure driver-side win at any scale.
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
-    for k, v in _extra_conf():
+    for k, v in _runtime_conf():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -83,26 +96,9 @@ def get_session(app_name: str = "mongodb_mysql_cdc_spark") -> SparkSession:
 
 
 def tune_for_harness(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine defaults to an externally-provided
-    session (the driver hands us one; we cannot rebuild it). Only touches
-    confs that are safe to set post-startup."""
-    for k, v in (
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.adaptive.enabled", _aqe()),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.shuffle.partitions", str(shuffle_partitions())),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        # skip the 4-py4j-roundtrip per-call origin capture (see get_session);
-        # effective only if set before the first DataFrame API call latches
-        # the process-global cache — harmless otherwise
-        ("spark.python.sql.dataFrameDebugging.enabled", "false"),
-        # events.ts is parquet TIMESTAMP(NANOS) — read as long, see catalog.load
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        # custom Python DataSource filter pushdown (scan_python_datasource_pushdown)
-        ("spark.sql.python.filterPushdown.enabled", "true"),
-        *_extra_conf(),
-    ):
+    """Apply the runtime engine defaults to an externally-provided session
+    (the driver hands us one; we cannot rebuild it)."""
+    for k, v in _runtime_conf():
         try:
             spark.conf.set(k, v)
         except Exception:

@@ -56,6 +56,13 @@ class ParquetReplaySource:
     dir_prefix: str = "replica"
     _staged: str | None = field(default=None, init=False)
 
+    def __post_init__(self) -> None:
+        if not 1 <= self.snapshot_chunks <= self.n_chunks:
+            raise ValueError(
+                f"snapshot_chunks={self.snapshot_chunks} must be in"
+                f" 1..n_chunks={self.n_chunks}"
+            )
+
     def _stage(self) -> str:
         from mongodb_mysql_cdc_spark.streaming.replay import stage_event_chunks
 

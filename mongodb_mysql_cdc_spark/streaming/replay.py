@@ -157,6 +157,18 @@ def run_to_completion(query) -> None:
         query.stop()
 
 
+def drain_foreach_batch(stream: DataFrame, apply_batch, checkpoint: str) -> None:
+    """Run a streaming DataFrame to completion through a foreachBatch
+    writer (e.g. a parquet sink's ``apply_batch``), with its offsets
+    checkpointed at ``checkpoint``."""
+    q = (
+        stream.writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", checkpoint)
+        .start()
+    )
+    run_to_completion(q)
+
+
 def memory_sink_table(df: DataFrame, name: str, output_mode: str) -> "tuple":
     """writeStream → in-memory table; returns (query, table_name)."""
     q = (

@@ -18,6 +18,8 @@ from pyspark.sql import functions as F
 from mongodb_mysql_cdc_spark.catalog import load
 from mongodb_mysql_cdc_spark.functions.compat import dec_avg, hround, sql_dec_avg, sql_round
 from mongodb_mysql_cdc_spark.registry import register
+from mongodb_mysql_cdc_spark.replication import ReplicationPipeline
+from mongodb_mysql_cdc_spark.sources.adapters import ParquetReplaySource
 from mongodb_mysql_cdc_spark.sources.cdc import (
     _JSON_OPTS,
     ENVELOPE_SCHEMA,
@@ -27,11 +29,17 @@ from mongodb_mysql_cdc_spark.sources.cdc import (
     op_for_event_type,
     parse_envelope_json,
 )
-from mongodb_mysql_cdc_spark.streaming.apply import CdcParquetSink, cdc_apply_batch, reconcile
+from mongodb_mysql_cdc_spark.streaming.apply import (
+    Scd2ParquetSink,
+    cdc_apply_batch,
+    current_state,
+    merge_states,
+    reconcile,
+)
 from mongodb_mysql_cdc_spark.streaming.replay import (
+    drain_foreach_batch,
     drain_to_memory_table,
     read_event_stream,
-    run_to_completion,
     stage_event_chunks,
 )
 
@@ -207,28 +215,12 @@ def cdc_apply_batch_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("cdc_apply_stream", oracle=CDC_APPLY_ORACLE)
 def cdc_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THE flagship op, LIVE streaming form: replay events as 6 time-ordered
-    micro-batches through foreachBatch + the idempotent parquet sink, then
-    return the final state. Same oracle as the batch form — micro-batch
-    folding must be invisible (reconcile is associative)."""
-    staged = stage_event_chunks(spark, sf_dir, n_chunks=6, dir_prefix="apply")
-    sink = CdcParquetSink(spark, tempfile.mkdtemp(prefix="sparkcdc_state_"))
-    stream = envelopes_from_events(read_event_stream(spark, staged))
-    # Same harness-only knob as drain_to_memory_table: each micro-batch's
-    # reconcile+state rewrite otherwise shuffles/writes 32 partitions of
-    # kilobyte data. Production sizes this to the cluster.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(sink.apply_batch)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="sparkcdc_ckpt_"))
-            .start()
-        )
-        run_to_completion(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return sink.current()
+    """THE flagship op, LIVE streaming form: the replication pipeline's
+    own tail — events replayed as 6 time-ordered micro-batches through
+    foreachBatch + the idempotent parquet sink — then the final state.
+    Same oracle as the batch form — micro-batch folding must be invisible
+    (reconcile is associative)."""
+    return ReplicationPipeline(spark, sf_dir, n_chunks=6).tail().current()
 
 
 @register("cdc_apply_stateful", oracle=CDC_APPLY_ORACLE)
@@ -246,17 +238,15 @@ def cdc_apply_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         envelopes_from_events(read_event_stream(spark, staged))
     )
     emissions = drain_to_memory_table(spark, updates, "stateful", "update")
-    # final image per key = the latest (ts, seq) emission; duplicates from
-    # no-op batches carry identical content, so max_by is deterministic
-    final = emissions.groupBy("key").agg(
-        F.expr("max_by(struct(op, ts, event_type, value, k), struct(ts, seq))").alias("s")
-    )
-    return final.filter(F.col("s.op") != "d").select(
-        "key",
-        F.col("s.ts").alias("last_ts"),
-        F.col("s.event_type").alias("last_event_type"),
-        F.col("s.value").alias("last_value"),
-        F.col("s.k").alias("last_k"),
+    # final image per key = the LWW fold of the key's emissions; repeated
+    # emissions of one image are identical rows, so any pick is the same
+    return current_state(
+        reconcile(
+            emissions.select(
+                "key", "op", "ts", "seq",
+                F.struct("event_type", "value", "k").alias("after"),
+            )
+        )
     )
 
 
@@ -492,22 +482,19 @@ FROM latest
 def cdc_apply_soft_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Soft-delete apply mode: the LWW fold keeps tombstoned keys as
     flagged rows instead of dropping them (the warehouse-friendly mode —
-    auditable deletes, GDPR erasure as a later compaction). Same
-    max_by-per-key shuffle as cdc_apply_batch; only the final filter
-    differs, so both modes share one physical plan shape."""
+    auditable deletes, GDPR erasure as a later compaction). The same
+    ``reconcile`` fold as cdc_apply_batch; only the final projection
+    differs, so both modes share one physical plan shape. The fold carries
+    only the projected payload fields, so ``props`` is never parsed."""
     env = events_as_envelopes(spark, sf_dir)
-    latest = env.groupBy("key").agg(
-        F.expr(
-            "max_by(struct(op, ts, after.event_type AS event_type, after.value AS value),"
-            " struct(ts, seq))"
-        ).alias("s")
-    )
-    return latest.select(
+    return reconcile(
+        env.withColumn("after", F.struct("after.event_type", "after.value"))
+    ).select(
         "key",
-        F.col("s.ts").alias("last_ts"),
-        F.col("s.event_type").alias("last_event_type"),
-        F.col("s.value").alias("last_value"),
-        (F.col("s.op") == "d").alias("is_deleted"),
+        F.col("ts").alias("last_ts"),
+        F.col("after.event_type").alias("last_event_type"),
+        F.col("after.value").alias("last_value"),
+        (F.col("op") == "d").alias("is_deleted"),
     )
 
 
@@ -544,17 +531,15 @@ def cdc_state_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     env = events_as_envelopes(spark, sf_dir)
     cut = env.agg((F.max("ts") - F.expr("INTERVAL 3 DAYS")).alias("_cutoff"))
     upto = env.crossJoin(F.broadcast(cut)).filter(F.col("ts") <= F.col("_cutoff"))
-    latest = upto.groupBy("key").agg(
-        F.expr(
-            "max_by(struct(op, ts, after.event_type AS event_type, after.value AS value),"
-            " struct(ts, seq))"
-        ).alias("s")
+    # the fold carries only the projected payload fields (no props parse)
+    latest = reconcile(
+        upto.withColumn("after", F.struct("after.event_type", "after.value"))
     )
-    return latest.filter(F.col("s.op") != "d").select(
+    return latest.filter(F.col("op") != "d").select(
         "key",
-        F.col("s.ts").alias("last_ts"),
-        F.col("s.event_type").alias("last_event_type"),
-        F.col("s.value").alias("last_value"),
+        F.col("ts").alias("last_ts"),
+        F.col("after.event_type").alias("last_event_type"),
+        F.col("after.value").alias("last_value"),
     )
 
 
@@ -803,8 +788,6 @@ def cdc_snapshot_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged = env.crossJoin(cutoff)
     snapshot_state = reconcile(tagged.where(F.col("seq") <= F.col("cut")))
     tail_state = reconcile(tagged.where(F.col("seq") > F.col("cut")))
-    from mongodb_mysql_cdc_spark.streaming.apply import current_state, merge_states
-
     return current_state(merge_states(snapshot_state, tail_state))
 
 
@@ -820,22 +803,12 @@ def cdc_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batched history must be indistinguishable from the one-shot
     window over the whole feed. The oracle is pipeline.SCD2_ORACLE —
     one source of truth for the SQL on both forms."""
-    from mongodb_mysql_cdc_spark.streaming.apply import Scd2ParquetSink
-
-    staged = stage_event_chunks(spark, sf_dir, n_chunks=5, dir_prefix="scd2")
     sink = Scd2ParquetSink(spark, tempfile.mkdtemp(prefix="sparkcdc_scd2_"))
-    stream = envelopes_from_events(read_event_stream(spark, staged))
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(sink.apply_batch)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="sparkcdc_scd2ckpt_"))
-            .start()
-        )
-        run_to_completion(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    drain_foreach_batch(
+        ParquetReplaySource(spark, sf_dir, n_chunks=5, dir_prefix="scd2").stream(),
+        sink.apply_batch,
+        os.path.join(sink.state_dir, "_checkpoint"),
+    )
     return sink.history()
 
 
@@ -917,7 +890,7 @@ def cdc_apply_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     adapter seam takes a REAL pluggable source end-to-end (swap
     synthetic_oplog for a Mongo connector class and nothing downstream
     changes). Every key's final image survives unless its last write is a
-    tombstone; one max_by shuffle, source scan is partition-parallel."""
+    tombstone; one ``reconcile`` shuffle, source scan is partition-parallel."""
     from mongodb_mysql_cdc_spark.sources.pyds import (
         HAVE_PYDS,
         make_synthetic_oplog_source,
@@ -935,17 +908,15 @@ def cdc_apply_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("rows_per_partition", "250")
         .load()
         .select(
-            "seq", "key", "op", "value", F.timestamp_seconds("ts_sec").alias("ts")
+            "seq", "key", "op", F.timestamp_seconds("ts_sec").alias("ts"),
+            F.struct("value").alias("after"),
         )
     )
-    latest = feed.groupBy("key").agg(
-        F.expr("max_by(struct(op, seq, value, ts), struct(ts, seq))").alias("w")
-    )
-    return latest.filter(F.col("w.op") != "d").select(
+    return reconcile(feed).filter(F.col("op") != "d").select(
         "key",
-        F.col("w.seq").alias("last_seq"),
-        F.col("w.value").alias("last_value"),
-        F.col("w.ts").alias("last_ts"),
+        F.col("seq").alias("last_seq"),
+        F.col("after.value").alias("last_value"),
+        F.col("ts").alias("last_ts"),
     )
 
 
@@ -1085,7 +1056,7 @@ def cdc_keys_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-5 wave: replication-correctness corner cases --------------------
+# --- replication-correctness corner cases ----------------------------------
 #
 # Four ops a production Mongo→MySQL replicator needs beyond the happy path:
 # redelivery (at-least-once transports), primary-key-changing updates,

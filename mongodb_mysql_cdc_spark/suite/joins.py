@@ -578,22 +578,11 @@ def join_interval_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     intervals disjoint), so no dedup pass is needed. The oracle keeps
     the direct interval-join spelling: same rows, different plan."""
     from mongodb_mysql_cdc_spark.sources.cdc import events_as_envelopes
+    from mongodb_mysql_cdc_spark.streaming.apply import scd2_versions
 
-    env = events_as_envelopes(spark, sf_dir)
-    w = Window.partitionBy("key").orderBy("ts", "seq")
-    vers = (
-        env.withColumn("valid_to", F.lead("ts").over(w))
-        .filter((F.col("op") != "d") & F.col("key").isNotNull())
-        .select(
-            "key",
-            F.col("ts").alias("valid_from"),
-            "seq",
-            F.col("after.value").alias("value"),
-            "valid_to",
-        )
-    )
     exploded = (
-        vers
+        scd2_versions(events_as_envelopes(spark, sf_dir))
+        .filter(F.col("key").isNotNull())
         # zero-width versions (closed at their own microsecond) cover
         # nothing — and guarantee cell_from ≤ cell_to below.
         .filter(F.col("valid_to").isNull() | (F.col("valid_to") > F.col("valid_from")))

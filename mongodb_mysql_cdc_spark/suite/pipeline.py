@@ -319,20 +319,9 @@ def cdc_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     version count, and time-travel queries become interval predicates
     that prune on valid_from/valid_to partition columns."""
     from mongodb_mysql_cdc_spark.sources.cdc import events_as_envelopes
+    from mongodb_mysql_cdc_spark.streaming.apply import scd2_versions
 
-    env = events_as_envelopes(spark, sf_dir)
-    w = Window.partitionBy("key").orderBy("ts", "seq")
-    versioned = env.select(
-        "key", "ts", "seq", "op", F.col("after.value").alias("value")
-    ).withColumn("next_ts", F.lead("ts").over(w))
-    return versioned.filter(F.col("op") != "d").select(
-        "key",
-        "seq",
-        "value",
-        F.col("ts").alias("valid_from"),
-        F.col("next_ts").alias("valid_to"),
-        F.col("next_ts").isNull().alias("is_current"),
-    )
+    return scd2_versions(events_as_envelopes(spark, sf_dir))
 
 
 @register(

@@ -352,3 +352,35 @@ def test_invisible_queries_are_exactly_the_declared_input_free_set():
         n for n, r in S._READERSHIP.items() if not r["scan"] and not r["loads"]
     }
     assert invisible == S.NO_FIXTURE_INPUT
+
+
+def test_suite_runs_the_engine_lww_fold_and_session_partitions():
+    """The CDC suite composes the engine instead of restating it: the only
+    hand-written (ts, seq) ``max_by`` fold left in the package is
+    cdc_merge_replicas' (its delivery counts share the winner's
+    aggregate; everything else calls ``reconcile``), and no suite module
+    sets ``spark.sql.shuffle.partitions``, so every suite query runs at the
+    session's count — the one the invariance sweep varies."""
+    import ast
+    import re
+
+    lww = re.compile(r"max_by\(.*struct\(\s*ts\s*,\s*seq\s*\)\s*\)", re.S)
+    folds, pins = [], []
+    pkg = ROOT / "mongodb_mysql_cdc_spark"
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        owner = {}
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for node in ast.walk(fn):
+                    owner.setdefault(id(node), fn.name)
+        rel = path.relative_to(pkg).as_posix()
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.Constant) and isinstance(node.value, str)):
+                continue
+            if lww.search(node.value):
+                folds.append(f"{rel}:{owner.get(id(node))}")
+            if rel.startswith("suite/") and node.value == "spark.sql.shuffle.partitions":
+                pins.append(f"{rel}:{node.lineno}")
+    assert folds == ["suite/cdc.py:cdc_merge_replicas"], folds
+    assert not pins, pins

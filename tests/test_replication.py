@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
+
 from mongodb_mysql_cdc_spark.replication import ReplicationPipeline, expected_state
 
 
@@ -105,12 +107,21 @@ def test_pipeline_restart_is_idempotent(spark, sf_dir):
     assert before == after
 
 
+@pytest.mark.parametrize("snapshot_chunks", [0, 4 + 1])
+def test_snapshot_chunks_out_of_range_fails_before_staging(spark, sf_dir, snapshot_chunks):
+    """A snapshot of 0 chunks, or of more chunks than are staged, is
+    refused by the constructor with a ValueError, not by a Spark read of
+    a missing chunk dir once the replay is staged."""
+    from mongodb_mysql_cdc_spark.sources.adapters import ParquetReplaySource
+
+    with pytest.raises(ValueError, match="snapshot_chunks"):
+        ParquetReplaySource(spark, sf_dir, n_chunks=4, snapshot_chunks=snapshot_chunks)
+
+
 def test_source_adapter_seam(spark, sf_dir):
     """Both adapters satisfy the EnvelopeSource protocol; the production
     Mongo adapter fails loudly (no connector in the harness) rather than
     pretending."""
-    import pytest
-
     from mongodb_mysql_cdc_spark.sources.adapters import (
         EnvelopeSource,
         MongoChangeStreamSource,

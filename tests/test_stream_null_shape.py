@@ -33,8 +33,9 @@ from mongodb_mysql_cdc_spark.catalog import TABLES, path_for  # noqa: E402
 
 STREAM_NULL_SUBSET = ["stream_session", "cdc_scd2_stream"]
 
-# The tie-sensitive live members: the LWW fold (max_by struct(ts, seq))
-# and the SCD2 version chain (lead over (ts, seq)) — both must be
+# The tie-sensitive live members: the LWW fold (ReplicationPipeline's
+# tail into the sink's ``reconcile`` by (ts, seq)) and the SCD2 version
+# chain (``scd2_versions``: lead over (ts, seq)) — both must be
 # chunking-invariant when a tied instant straddles a micro-batch cut —
 # plus the watermark dedup (first-writer at a tied instant).
 STREAM_TIES_SUBSET = ["cdc_apply_stream", "cdc_scd2_stream", "stream_dedup"]

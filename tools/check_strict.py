@@ -1,12 +1,12 @@
-"""Strict driver-canonicalizer mimic — catches what check_oracle.py forgives.
+"""Strict driver-canonicalizer mimic — the local Spark-vs-DuckDB oracle gate.
 
-Round-1 lesson: the driver compares Spark and DuckDB results through
-*pandas* with NO value normalization — so int64 23 vs float64 23.0 is a
-hash mismatch, Decimal('68423.40') vs 68423.4 is a hash mismatch, and an
-array-typed column crashes its sort/factorize step outright
-(``TypeError: unhashable type: 'numpy.ndarray'``).  ``check_oracle.py``
-normalized those away (3.0 == "3"), so it stayed green while the driver
-went red on fn_math / cast_types / agg_collect.
+The driver compares Spark and DuckDB results through *pandas* with NO
+value normalization — so int64 23 vs float64 23.0 is a hash mismatch,
+Decimal('68423.40') vs 68423.4 is a hash mismatch, and an array-typed
+column crashes its sort/factorize step outright
+(``TypeError: unhashable type: 'numpy.ndarray'``). A comparator that
+normalizes those away (3.0 == "3") stays green while the driver goes red
+on fn_math / cast_types / agg_collect.
 
 This checker reproduces the driver's path as closely as we can infer it:
 

@@ -47,6 +47,10 @@ echo "== strict oracle sweep (Spark vs DuckDB, driver-faithful) =="
 python tools/check_strict.py
 record check_strict
 
+echo "== sink partition invariance (local[7]: the streaming sinks at the session's shuffle partitions) =="
+SPARK_GRAFT_CPUS=7 python tools/check_strict.py cdc_apply_stream cdc_scd2_stream cdc_apply_stateful
+record sink_partition_invariance_local7
+
 echo "== driver window simulation (plain session, scratch cwd) =="
 python tools/driver_sim.py --window
 record driver_sim_window
