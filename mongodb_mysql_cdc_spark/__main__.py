@@ -5,8 +5,10 @@
         --chunks 4 --verify
 
 Runs snapshot + change-stream tail into a parquet sink and prints a JSON
-status line; --verify additionally checks the sink state against the
-batch LWW fold of the full history (exit code 1 on divergence).
+status line: ``sink_dir``, ``last_batch`` (the last committed batch id;
+-1 is the snapshot), ``state_rows`` and ``live_rows``. --verify
+additionally checks the sink state against the batch LWW fold of the
+full history (exit code 1 on divergence).
 """
 
 from __future__ import annotations

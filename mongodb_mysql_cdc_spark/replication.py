@@ -7,7 +7,7 @@ MongoDB database into MySQL, then keep it in sync".
                                sink_dir="/tmp/replica")
     state = pipe.run()          # snapshot + tail-to-current, returns the
                                 # queryable current-state table
-    pipe.status()               # committed batches, state rows, resume pos
+    pipe.status()               # last committed batch, state rows
 
 Harness mapping: the ``events`` table is the designated stream table; its
 time-ordered replay stands in for the oplog/change-stream cursor, and the
@@ -97,7 +97,9 @@ class ReplicationPipeline:
         state = self._sink.state()
         return {
             "sink_dir": self.sink_dir,
-            "committed_batches": sorted(self._sink._load_commits()),
+            # the sink manifest's last committed batch id: -1 is the
+            # snapshot epoch, None before anything is committed
+            "last_batch": self._sink._load_manifest()[0],
             "state_rows": 0 if state is None else state.count(),
             "live_rows": 0 if state is None else self.current().count(),
         }

@@ -16,23 +16,27 @@ Design:
   history) are foreachBatch writers on ONE commit path,
   ``_BucketedParquetSink.apply_batch``: a batch-id guard makes a replayed
   epoch a no-op (idempotent sink = exactly-once); the micro-batch is
-  executed once (persisted, its touched buckets collected from the
-  cache); only the touched ``state/bucket=N`` dirs are read and rewritten,
-  in place, by dynamic partition overwrite; the commit log is replaced
-  atomically. Each sink contributes only its fold.
+  executed once (persisted, its touched buckets observed while the cache
+  is built); the fold of the touched buckets is written once, copy-on-write,
+  to a new version dir, and an ``os.replace`` of a small manifest
+  (last batch id, bucket → owning version) commits it atomically across
+  buckets; superseded version dirs are then deleted. Each sink
+  contributes only its fold.
 
-Scale (100 TB): state is partitioned parquet keyed by hash(key); each
-micro-batch rewrites only the key-buckets it touches, never the whole
-table.
+Scale (100 TB): state is parquet keyed by hash(key) bucket; each
+micro-batch reads and writes only the key-buckets it touches, never the
+whole table.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -186,31 +190,39 @@ class _BucketedParquetSink:
     """The commit path both parquet sinks share; a subclass supplies only
     its fold.
 
-    State is parquet under ``<state_dir>/state``, partitioned on
-    ``bucket = pmod(xxhash64(key), n_buckets)``; ``_commits.json`` beside
-    it lists the committed batch ids. ``apply_batch``
+    Rows carry ``bucket = pmod(xxhash64(key), n_buckets)``. State lives in
+    copy-on-write version dirs ``<state_dir>/state/v=<batch_id>`` (bucket
+    kept as a column), and ``<state_dir>/_manifest.json`` names the last
+    committed batch id and, per bucket, the version that owns its rows. A
+    bucket's rows are read only from its owning version; every read goes
+    through the manifest. ``apply_batch``
 
-    1. skips a batch id already in the commit log — a replayed epoch is a
-       no-op (idempotent sink + replayable source + WAL'd offsets =
-       exactly-once);
-    2. persists the bucketed micro-batch, so the batch executes once;
-    3. collects its distinct buckets from that cache — ≤ n_buckets small
-       ints, the only driver-side collect; none means an empty batch,
+    1. skips a batch id at or below the manifest's — foreachBatch ids are
+       monotone, so a replayed epoch is a no-op (idempotent sink +
+       replayable source + WAL'd offsets = exactly-once);
+    2. persists the bucketed micro-batch and runs it once through a noop
+       write that builds the cache and observes its touched buckets — the
+       batch executes once; no touched bucket means an empty batch,
        committed as a no-op;
-    4. reads only those state bucket dirs, with the schema of the batch's
-       own state rows (no schema-inference job);
-    5. writes ``_fold(old, rows, batch)`` straight into the state with
-       dynamic partition overwrite: only the bucket dirs it writes are
-       replaced, so files in untouched buckets keep their identity;
-    6. records the batch id by write-then-rename of the commit log.
+    3. reads only the touched buckets from their owning versions, with the
+       schema of the batch's own state rows (no schema-inference job);
+    4. writes ``_fold(old, rows, batch)`` once, unpartitioned, to the new
+       version dir ``v=<batch_id>`` (plain overwrite, which also clears an
+       orphan a crashed attempt left there) and observes the buckets it
+       wrote on that same job; those buckets move to the new version, and
+       a touched bucket the fold left empty leaves the manifest;
+    5. commits by write-then-``os.replace`` of the manifest — the single
+       atomic step, across all buckets;
+    6. deletes the version dirs no bucket owns: superseded versions, and
+       orphans of crashed attempts.
 
-    Per-batch I/O is O(touched state), not O(total state). Reading and
-    rewriting the same buckets in one job is safe: the overwrite stages
-    task output under ``state/.spark-staging-*`` and swaps bucket dirs only
-    at job commit, after every task has read the old files. The swap is not
-    atomic across buckets, and the state write → commit-log step is not
-    atomic either; a crash in between replays the batch, which each fold
-    must absorb."""
+    Per-batch I/O is O(touched state), not O(total state): untouched
+    buckets keep their owning version and its files. A crash before step 5
+    leaves the previous manifest and so exactly the previous state; the
+    redelivered batch then folds again. A crash in step 6 leaves stale
+    dirs no read sees, which the next commit removes. The manifest holds
+    at most ``n_buckets`` entries and one integer, so it stays the same
+    size however many batches commit."""
 
     spark: SparkSession
     state_dir: str
@@ -221,40 +233,76 @@ class _BucketedParquetSink:
         return os.path.join(self.state_dir, "state")
 
     @property
-    def _commit_log(self) -> str:
-        return os.path.join(self.state_dir, "_commits.json")
+    def _manifest_path(self) -> str:
+        return os.path.join(self.state_dir, "_manifest.json")
 
-    def _load_commits(self) -> set[int]:
-        if os.path.exists(self._commit_log):
-            with open(self._commit_log) as f:
-                return set(json.load(f))
-        return set()
+    def _version_path(self, version: int) -> str:
+        return os.path.join(self._state_path, f"v={version}")
 
-    def _save_commits(self, ids: set[int]) -> None:
+    def _load_manifest(self) -> tuple[int | None, dict[int, int]]:
+        """The last committed batch id (None before the first commit) and
+        the bucket → owning version map."""
+        if not os.path.exists(self._manifest_path):
+            return None, {}
+        with open(self._manifest_path) as f:
+            m = json.load(f)
+        return m["batch"], {int(b): v for b, v in m["buckets"].items()}
+
+    def _save_manifest(self, batch_id: int, owners: dict[int, int]) -> None:
         # state_dir does not exist yet when the first batch is empty; the
-        # rename keeps the previous log whole if the dump dies midway
+        # rename keeps the previous manifest whole if the dump dies midway
         os.makedirs(self.state_dir, exist_ok=True)
-        tmp = self._commit_log + ".tmp"
+        tmp = self._manifest_path + ".tmp"
         with open(tmp, "w") as f:
-            json.dump(sorted(ids), f)
-        os.replace(tmp, self._commit_log)
+            buckets = {str(b): v for b, v in sorted(owners.items())}
+            json.dump({"batch": batch_id, "buckets": buckets}, f)
+        os.replace(tmp, self._manifest_path)
+
+    def _gc(self, owners: dict[int, int]) -> None:
+        if not os.path.isdir(self._state_path):
+            return
+        live = {f"v={v}" for v in owners.values()}
+        for d in os.listdir(self._state_path):
+            if d.startswith("v=") and d not in live:
+                shutil.rmtree(os.path.join(self._state_path, d))
+
+    def _manifest_less(self) -> bool:
+        """A state dir in the ``partitionBy("bucket")`` layout (``bucket=N``
+        dirs) with no manifest."""
+        path = self._state_path
+        return (
+            not os.path.exists(self._manifest_path)
+            and os.path.isdir(path)
+            and any(d.startswith("bucket=") for d in os.listdir(path))
+        )
 
     def _bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
             "bucket", F.pmod(F.xxhash64("key"), F.lit(self.n_buckets))
         )
 
-    def _has_state(self) -> bool:
-        # an empty fold still creates state/, but with no bucket dir and
-        # no data file to infer a schema from
-        path = self._state_path
-        return os.path.isdir(path) and any(
-            d.startswith("bucket=") for d in os.listdir(path)
+    def _read(self, owners: dict[int, int], schema: T.StructType) -> DataFrame:
+        """The rows of the given buckets, each from its owning version."""
+        reader = self.spark.read.schema(schema)
+        return reduce(
+            DataFrame.unionByName,
+            [
+                reader.parquet(self._version_path(v)).filter(
+                    F.col("bucket").isin([b for b, o in owners.items() if o == v])
+                )
+                for v in sorted(set(owners.values()))
+            ],
         )
 
     def state(self) -> DataFrame | None:
         """The bucketed state table, or None while it holds no row."""
-        return self.spark.read.parquet(self._state_path) if self._has_state() else None
+        if self._manifest_less():
+            return self.spark.read.parquet(self._state_path)
+        _, owners = self._load_manifest()
+        if not owners:
+            return None
+        paths = sorted({self._version_path(v) for v in owners.values()})
+        return self._read(owners, self.spark.read.parquet(*paths).schema)
 
     def _rows(self, batch: DataFrame) -> DataFrame:
         """The batch's own rows in the state schema, bucket included."""
@@ -265,35 +313,42 @@ class _BucketedParquetSink:
         raise NotImplementedError
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        committed = self._load_commits()
-        if batch_id in committed:
+        if self._manifest_less():
+            raise ValueError(
+                f"{self._state_path} holds bucket= dirs but no manifest;"
+                " apply_batch would fold onto an empty state"
+            )
+        last, owners = self._load_manifest()
+        if last is not None and batch_id <= last:
             return  # replayed epoch — idempotent no-op
         batch = self._bucket(batch_df.select(*STATE_COLS)).persist()
         try:
-            touched = [r.bucket for r in batch.select("bucket").distinct().collect()]
+            touched = _observed_buckets(
+                batch, lambda df: df.write.format("noop").mode("overwrite").save()
+            )
             if touched:
                 rows = self._rows(batch)
-                if self._has_state():
-                    # the filter on the partition column prunes the read
-                    # to the touched bucket dirs
-                    old = (
-                        self.spark.read.schema(rows.schema)
-                        .parquet(self._state_path)
-                        .filter(F.col("bucket").isin(touched))
-                    )
-                else:
-                    old = rows.where(F.lit(False))
-                (
-                    self._fold(old, rows, batch)
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("bucket")
-                    .parquet(self._state_path)
+                prior = {b: v for b, v in owners.items() if b in touched}
+                old = self._read(prior, rows.schema) if prior else rows.where(F.lit(False))
+                version = self._version_path(batch_id)
+                written = _observed_buckets(
+                    self._fold(old, rows, batch),
+                    lambda df: df.write.mode("overwrite").parquet(version),
                 )
-            committed.add(batch_id)
-            self._save_commits(committed)
+                owners = {b: v for b, v in owners.items() if b not in touched}
+                owners.update((b, batch_id) for b in written)
+            self._save_manifest(batch_id, owners)
         finally:
             batch.unpersist()
+        self._gc(owners)
+
+
+def _observed_buckets(df: DataFrame, write) -> set[int]:
+    """Run ``write`` on ``df`` and return the buckets its rows carry,
+    collected by ``observe`` on that same job."""
+    seen = Observation()
+    write(df.observe(seen, F.collect_set("bucket").alias("buckets")))
+    return set(seen.get["buckets"])
 
 
 class CdcParquetSink(_BucketedParquetSink):
@@ -304,7 +359,8 @@ class CdcParquetSink(_BucketedParquetSink):
     because reconcile is associative. LWW is idempotent per key, so a
     replayed or partially applied batch folds to the same state.
     ``tests/test_streaming.py::test_sink_rewrites_only_touched_buckets``
-    pins the touched-bucket-only rewrite via file mtimes. (The StateStore
+    pins that untouched buckets keep their owning version, whose files
+    keep their paths and mtimes. (The StateStore
     form ``cdc_apply_stateful_stream`` above is the no-filesystem-round-trip
     alternative.)"""
 
@@ -359,16 +415,17 @@ class Scd2ParquetSink(_BucketedParquetSink):
     per-key (ts, seq) never decreases across micro-batches — the oplog's
     total order (SURVEY §1.1).
 
-    Crash-replay idempotency: a crash between the state write and the
-    commit log replays a batch whose rows are already (even PARTIALLY — the
-    overwrite is per bucket dir, not atomic across buckets) in state, so
-    the fold guards per row: (a) an open row is closed only when the
-    batch's first (ts, seq) is STRICTLY GREATER than the row's own
-    (valid_from, seq) — a replayed batch's first envelope never out-orders
-    the open row it itself created; (b) version rows are added via a
-    (key, seq) anti-join against the touched state, so rows already folded
-    are not duplicated. Both guards are no-ops on the happy path.
-    tests/test_streaming.py::test_scd2_sink_failure_replay_* pin both
+    Crash-replay idempotency: the manifest commit is atomic, so a crash
+    before it leaves the previous state and the replay folds the batch
+    afresh. The fold still guards per row, so a batch folded onto state
+    that already holds it (even partially) changes nothing: (a) an open
+    row is closed only when the batch's first (ts, seq) is STRICTLY
+    GREATER than the row's own (valid_from, seq) — a replayed batch's
+    first envelope never out-orders the open row it itself created;
+    (b) version rows are added via a (key, seq) anti-join against the
+    touched state, so rows already folded are not duplicated. Both guards
+    are no-ops on the happy path. tests/test_streaming.py::
+    test_scd2_sink_failure_replay_* pin both
     interleavings deterministically."""
 
     def _rows(self, batch: DataFrame) -> DataFrame:

@@ -19,7 +19,9 @@ def test_pipeline_converges_to_batch_fold(spark, sf_dir):
     pipe = ReplicationPipeline(
         spark, sf_dir, tempfile.mkdtemp(prefix="repl_test_"), n_chunks=4
     )
-    state = pipe.run()
+    pipe.snapshot()
+    assert pipe.status()["last_batch"] == -1  # the snapshot epoch
+    state = pipe.tail().current()
     want = expected_state(spark, sf_dir)
     assert sorted(state.columns) == sorted(want.columns)
     assert _rows(state.select(*sorted(state.columns))) == _rows(
@@ -27,8 +29,7 @@ def test_pipeline_converges_to_batch_fold(spark, sf_dir):
     )
     status = pipe.status()
     assert status["live_rows"] == want.count()
-    assert -1 in status["committed_batches"]  # the snapshot epoch
-    assert len(status["committed_batches"]) >= 2  # plus streamed epochs
+    assert status["last_batch"] == 3  # one streamed epoch per chunk, ids 0..3
 
 
 def test_pipeline_empty_feed(spark, tmp_path):
@@ -47,13 +48,15 @@ def test_pipeline_empty_feed(spark, tmp_path):
     pipe = ReplicationPipeline(
         spark, src, str(tmp_path / "sink"), n_chunks=2
     )
-    state = pipe.run()
+    pipe.snapshot()
+    assert pipe.status()["last_batch"] == -1  # the (empty) snapshot epoch
+    state = pipe.tail().current()
     assert state.count() == 0
     want = expected_state(spark, src)
     assert want.count() == 0
     status = pipe.status()
     assert status["state_rows"] == 0
-    assert -1 in status["committed_batches"]  # the (empty) snapshot epoch
+    assert status["last_batch"] == 1  # one streamed epoch per chunk, ids 0..1
 
 
 def test_stage_chunks_low_row_feed(spark, tmp_path):

@@ -4,15 +4,26 @@ plus CDC-specific replay semantics."""
 
 from __future__ import annotations
 
+import datetime as dt
+import json
+import os
 import tempfile
+import types
 import uuid
 
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from mongodb_mysql_cdc_spark.catalog import load
 from mongodb_mysql_cdc_spark.sources.cdc import envelopes_from_events
-from mongodb_mysql_cdc_spark.streaming.apply import CdcParquetSink, cdc_apply_batch
+from mongodb_mysql_cdc_spark.streaming import apply as apply_mod
+from mongodb_mysql_cdc_spark.streaming.apply import (
+    CdcParquetSink,
+    Scd2ParquetSink,
+    cdc_apply_batch,
+    scd2_versions,
+)
 from mongodb_mysql_cdc_spark.streaming.replay import (
     read_event_stream,
     run_to_completion,
@@ -27,6 +38,16 @@ from mongodb_mysql_cdc_spark.streaming.windows import (
 
 def _rows(df, cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def _version_files(root, version):
+    """{file name: mtime} of the parquet files in one state version dir."""
+    d = os.path.join(root, "state", f"v={version}")
+    return {
+        f: os.path.getmtime(os.path.join(d, f))
+        for f in os.listdir(d)
+        if f.endswith(".parquet")
+    }
 
 
 def test_session_window_stream_matches_batch(spark, sf_dir):
@@ -99,30 +120,18 @@ def test_cdc_apply_order_insensitive(spark, sf_dir):
 
 def test_sink_rewrites_only_touched_buckets(spark, sf_dir):
     """The 100 TB contract of CdcParquetSink: an incremental micro-batch
-    rewrites only the hash(key) buckets its delta touches — parquet files
-    in every other bucket keep their identity (same paths, same mtimes)."""
-    import os
-
-    def bucket_files(root):
-        out = {}
-        state = os.path.join(root, "state")
-        for d in os.listdir(state):
-            if not d.startswith("bucket="):
-                continue
-            b = int(d.split("=", 1)[1])
-            out[b] = {
-                f: os.path.getmtime(os.path.join(state, d, f))
-                for f in os.listdir(os.path.join(state, d))
-                if f.endswith(".parquet")
-            }
-        return out
-
+    rewrites only the hash(key) buckets its delta touches — every other
+    bucket keeps its owning version, whose parquet files keep their
+    identity (same paths, same mtimes)."""
     env = envelopes_from_events(load(spark, sf_dir, "events"))
     root = tempfile.mkdtemp(prefix="state_bucket_")
     sink = CdcParquetSink(spark, root, n_buckets=8)
     sink.apply_batch(env, 0)
-    before = bucket_files(root)
+    _, before = sink._load_manifest()
     assert len(before) > 1  # the assertion below is vacuous with one bucket
+    assert set(before.values()) == {0}
+    files_before = _version_files(root, 0)
+    assert files_before
 
     # delta touching exactly one key → exactly one bucket
     one_key = env.orderBy("key").limit(1).select("key").collect()[0]["key"]
@@ -135,13 +144,14 @@ def test_sink_rewrites_only_touched_buckets(spark, sf_dir):
     )  # idempotent: replaying a subset cannot change LWW state
     sink.apply_batch(delta, 1)
 
-    after = bucket_files(root)
+    _, after = sink._load_manifest()
     assert set(after) == set(before)
     for b in before:
         if b == touched:
-            assert before[b] != after[b]  # the touched bucket was rewritten
+            assert after[b] == 1  # the touched bucket was rewritten
         else:
-            assert before[b] == after[b]  # byte-identical file set + mtimes
+            assert after[b] == before[b]  # still owned by version 0
+    assert _version_files(root, 0) == files_before  # same paths + mtimes
     assert _rows(sink.current(), ["key", "last_ts", "last_value"]) == expected
 
 
@@ -162,7 +172,7 @@ def test_sink_executes_each_micro_batch_once(spark, sf_dir):
     ev = load(spark, sf_dir, "events")
     n_env = ev.count()
     assert n_env > 0
-    assert len(sink._load_commits()) >= 3
+    assert sink._load_manifest()[0] == 2  # one batch per chunk, ids 0..2
     assert sum(p.numInputRows for p in q.recentProgress) == n_env
     cols = ["key", "last_ts", "last_event_type", "last_value", "last_k"]
     assert _rows(sink.current(), cols) == _rows(
@@ -170,55 +180,196 @@ def test_sink_executes_each_micro_batch_once(spark, sf_dir):
     )
 
 
-def test_commit_log_survives_torn_write(spark, monkeypatch):
-    """A sink that dies midway through writing its commit log must leave
-    the previous log readable (write-then-rename), so a restarted sink
-    still knows which batches are committed and can redo the torn one."""
-    import json
-    import types
-    from pyspark.sql import Row
-    import datetime as dt
+SCD2_COLS = ["key", "seq", "value", "valid_from", "valid_to", "is_current"]
 
-    from mongodb_mysql_cdc_spark.streaming import apply as apply_mod
+# per sink kind: the sink class, its read, and the batch oracle of a feed
+SINKS = {
+    "cdc": (
+        CdcParquetSink,
+        lambda sink: _rows(sink.current(), ["key", "last_ts", "last_value"]),
+        lambda env: _rows(cdc_apply_batch(env), ["key", "last_ts", "last_value"]),
+    ),
+    "scd2": (
+        Scd2ParquetSink,
+        lambda sink: _rows(sink.history(), SCD2_COLS),
+        lambda env: _rows(scd2_versions(env), SCD2_COLS),
+    ),
+}
 
-    mk = lambda key, seq, v: Row(
-        op="u", ts=dt.datetime(2024, 1, 1, 10, 0, seq), seq=seq, key=key,
+
+def _env_row(key, seq, v, op="u"):
+    return Row(
+        op=op, ts=dt.datetime(2024, 1, 1, 10, 0, seq), seq=seq, key=key,
         after=Row(user_id=key, event_type="x", value=v, k=0),
     )
-    root = tempfile.mkdtemp(prefix="state_torn_")
-    batches = [
-        spark.createDataFrame([mk(1, 1, 1.0), mk(2, 2, 2.0)]),
-        spark.createDataFrame([mk(1, 3, 3.0), mk(3, 4, 4.0)]),
-    ]
-    sink = CdcParquetSink(spark, root, n_buckets=4)
-    sink.apply_batch(batches[0], 0)
 
-    def torn_dump(obj, f):
-        f.write(json.dumps(obj)[:2])
+
+def _two_batches(spark):
+    """Batch 1 updates key 1 of batch 0 and adds key 3."""
+    return [
+        spark.createDataFrame([_env_row(1, 1, 1.0), _env_row(2, 2, 2.0)]),
+        spark.createDataFrame([_env_row(1, 3, 3.0), _env_row(3, 4, 4.0)]),
+    ]
+
+
+def _die_in_manifest_dump(monkeypatch, sink, batch_df, batch_id, partial):
+    """Apply a batch whose manifest ``json.dump`` dies — after writing
+    ``partial`` characters — so the sink stops after its version write and
+    before the manifest replace."""
+    def dump(obj, f):
+        f.write(json.dumps(obj)[:partial])
         raise OSError("simulated death mid-dump")
 
     monkeypatch.setattr(
-        apply_mod, "json", types.SimpleNamespace(load=json.load, dump=torn_dump)
+        apply_mod, "json", types.SimpleNamespace(load=json.load, dump=dump)
     )
     with pytest.raises(OSError, match="mid-dump"):
+        sink.apply_batch(batch_df, batch_id)
+    monkeypatch.undo()
+
+
+def test_commit_log_survives_torn_write(spark, monkeypatch):
+    """A sink that dies midway through writing its manifest must leave the
+    previous manifest readable (write-then-rename), so a restarted sink
+    still knows the last committed batch and can redo the torn one. Both
+    sinks share the commit path; both are checked."""
+    for kind, (Sink, read, oracle) in SINKS.items():
+        root = tempfile.mkdtemp(prefix=f"state_torn_{kind}_")
+        batches = _two_batches(spark)
+        sink = Sink(spark, root, n_buckets=4)
+        sink.apply_batch(batches[0], 0)
+        _die_in_manifest_dump(monkeypatch, sink, batches[1], 1, partial=2)
+
+        restarted = Sink(spark, root, n_buckets=4)
+        assert restarted._load_manifest()[0] == 0
+        restarted.apply_batch(batches[1], 1)  # the redelivered batch folds again
+        assert restarted._load_manifest()[0] == 1
+        assert read(restarted) == oracle(batches[0].unionByName(batches[1]))
+        if kind == "cdc":
+            assert _rows(restarted.current(), ["key", "last_value"]) == [
+                (1, 3.0), (2, 2.0), (3, 4.0)
+            ]
+
+
+@pytest.mark.parametrize("kind", sorted(SINKS))
+def test_crash_before_manifest_replace_reads_previous_state(spark, monkeypatch, kind):
+    """Crash point: the new version dir is fully written but the manifest
+    was never replaced. A restarted sink must read exactly the pre-batch
+    state (the written version is an orphan no read sees), and the
+    redelivered batch must fold to the batch oracle."""
+    Sink, read, oracle = SINKS[kind]
+    root = tempfile.mkdtemp(prefix=f"state_crash_{kind}_")
+    batches = _two_batches(spark)
+    sink = Sink(spark, root, n_buckets=4)
+    sink.apply_batch(batches[0], 0)
+    before = read(sink)
+    _die_in_manifest_dump(monkeypatch, sink, batches[1], 1, partial=0)
+    assert _version_files(root, 1)  # the crashed attempt's version is on disk
+
+    restarted = Sink(spark, root, n_buckets=4)
+    assert restarted._load_manifest()[0] == 0
+    assert read(restarted) == before
+    restarted.apply_batch(batches[1], 1)
+    assert read(restarted) == oracle(batches[0].unionByName(batches[1]))
+
+
+@pytest.mark.parametrize("kind", sorted(SINKS))
+def test_crash_mid_gc_leaves_state_and_next_commit_collects(spark, monkeypatch, kind):
+    """Crash point: the manifest is committed and the sink dies while
+    deleting superseded version dirs, after removing part of one. State is
+    unaffected (no read goes through an unowned version), and the next
+    commit removes the leftovers."""
+    Sink, read, oracle = SINKS[kind]
+    root = tempfile.mkdtemp(prefix=f"state_gc_{kind}_")
+    batches = _two_batches(spark)
+    # batch 1 re-touches every key of batch 0, so it supersedes version 0
+    batches[1] = batches[1].unionByName(spark.createDataFrame([_env_row(2, 5, 5.0)]))
+    sink = Sink(spark, root, n_buckets=4)
+    sink.apply_batch(batches[0], 0)
+
+    def torn_rmtree(path):
+        first = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))[0]
+        os.remove(os.path.join(path, first))
+        raise OSError("simulated death mid-GC")
+
+    monkeypatch.setattr(apply_mod, "shutil", types.SimpleNamespace(rmtree=torn_rmtree))
+    with pytest.raises(OSError, match="mid-GC"):
         sink.apply_batch(batches[1], 1)
     monkeypatch.undo()
 
-    restarted = CdcParquetSink(spark, root, n_buckets=4)
-    assert restarted._load_commits() == {0}
-    restarted.apply_batch(batches[1], 1)  # the redelivered batch folds again
-    assert restarted._load_commits() == {0, 1}
-    assert _rows(restarted.current(), ["key", "last_value"]) == [
-        (1, 3.0), (2, 2.0), (3, 4.0)
-    ]
+    restarted = Sink(spark, root, n_buckets=4)
+    last, owners = restarted._load_manifest()
+    assert last == 1 and set(owners.values()) == {1}
+    assert os.path.isdir(os.path.join(root, "state", "v=0"))  # the leftover
+    so_far = batches[0].unionByName(batches[1])
+    assert read(restarted) == oracle(so_far)
+
+    third = spark.createDataFrame([_env_row(4, 6, 6.0)])
+    restarted.apply_batch(third, 2)
+    _, owners = restarted._load_manifest()
+    live = {f"v={v}" for v in owners.values()}
+    assert set(os.listdir(os.path.join(root, "state"))) == live
+    assert "v=0" not in live
+    assert read(restarted) == oracle(so_far.unionByName(third))
+
+
+def test_commit_metadata_stays_bounded(spark):
+    """The manifest holds at most one entry per bucket and one batch id,
+    so over many small batches neither it nor the set of live version
+    dirs grows with the batch count."""
+    root = tempfile.mkdtemp(prefix="state_bounded_")
+    sink = CdcParquetSink(spark, root, n_buckets=4)
+    manifest = os.path.join(root, "_manifest.json")
+    feed, sizes = [], []
+    for i in range(20):
+        batch = spark.createDataFrame([
+            _env_row(1 + i % 5, 2 * i + 1, float(i)),
+            _env_row(1 + i % 3, 2 * i + 2, -float(i)),
+        ])
+        feed.append(batch)
+        sink.apply_batch(batch, i)
+        _, owners = sink._load_manifest()
+        assert len(owners) <= 4
+        state = os.path.join(root, "state")
+        versions = [d for d in os.listdir(state) if d.startswith("v=")]
+        assert len(versions) <= 4
+        assert sorted(versions) == sorted({f"v={v}" for v in owners.values()})
+        sizes.append(os.path.getsize(manifest))
+    # between batch 9 and batch 19 each of the ≤ 5 integers it holds can
+    # gain at most one digit; a growing id list would add ~4 bytes a batch
+    assert sizes[-1] - sizes[9] <= 5
+    whole = feed[0]
+    for b in feed[1:]:
+        whole = whole.unionByName(b)
+    assert SINKS["cdc"][1](sink) == SINKS["cdc"][2](whole)
+
+
+def test_manifest_less_state_reads_and_refuses_to_fold(spark):
+    """A state dir in the plain ``partitionBy("bucket")`` layout with no
+    manifest (the layout earlier sinks wrote, and the one a hand-made copy
+    of a state has) reads as that state; apply_batch refuses it rather
+    than fold onto an empty state."""
+    batches = _two_batches(spark)
+    good = CdcParquetSink(spark, tempfile.mkdtemp(prefix="state_good_"), n_buckets=4)
+    good.apply_batch(batches[0].unionByName(batches[1]), 0)
+    root = tempfile.mkdtemp(prefix="state_plain_")
+    good.state().write.partitionBy("bucket").parquet(os.path.join(root, "state"))
+
+    plain = CdcParquetSink(spark, root, n_buckets=4)
+    cols = ["key", "last_ts", "last_event_type", "last_value", "last_k"]
+    assert _rows(plain.current(), cols) == _rows(good.current(), cols)
+    assert plain.state().count() == good.state().count() == 3
+    listing = sorted(os.listdir(os.path.join(root, "state")))
+    with pytest.raises(ValueError, match="no manifest"):
+        plain.apply_batch(spark.createDataFrame([_env_row(4, 9, 9.0)]), 1)
+    assert not os.path.exists(os.path.join(root, "_manifest.json"))
+    assert sorted(os.listdir(os.path.join(root, "state"))) == listing
+    assert _rows(plain.current(), cols) == _rows(good.current(), cols)
 
 
 def test_late_event_cannot_resurrect_deleted_key(spark):
     """Tombstone retention: an out-of-order update older than a delete must
     NOT re-insert the key (the reason state keeps op='d' rows)."""
-    from pyspark.sql import Row
-    import datetime as dt
-
     t = lambda s: dt.datetime.fromisoformat(s)
     mk = lambda op, ts, seq, v: Row(
         op=op, ts=t(ts), seq=seq, key=1,
@@ -235,33 +386,20 @@ def test_late_event_cannot_resurrect_deleted_key(spark):
 
 def test_scd2_sink_is_bucket_bounded_and_matches_batch(spark, sf_dir):
     """Scd2ParquetSink inherits both contracts: (1) an incremental
-    micro-batch rewrites only its delta's hash(key) buckets; (2) the
-    folded history equals the one-shot batch window (stream == batch)."""
-    import os
-
-    from mongodb_mysql_cdc_spark.streaming.apply import Scd2ParquetSink, scd2_versions
-
-    def bucket_files(root):
-        out = {}
-        state = os.path.join(root, "state")
-        for d in os.listdir(state):
-            if d.startswith("bucket="):
-                b = int(d.split("=", 1)[1])
-                out[b] = {
-                    f: os.path.getmtime(os.path.join(state, d, f))
-                    for f in os.listdir(os.path.join(state, d))
-                    if f.endswith(".parquet")
-                }
-        return out
-
+    micro-batch rewrites only its delta's hash(key) buckets — every other
+    bucket keeps its owning version, whose files keep their paths and
+    mtimes; (2) the folded history equals the one-shot batch window
+    (stream == batch)."""
     env = envelopes_from_events(load(spark, sf_dir, "events"))
     # split the feed at the per-key-monotonic replay boundary: global ts order
     cut = env.agg(F.expr("percentile_approx(seq, 0.5)").alias("c")).collect()[0]["c"]
     root = tempfile.mkdtemp(prefix="scd2_bucket_")
     sink = Scd2ParquetSink(spark, root, n_buckets=8)
     sink.apply_batch(env.filter(F.col("seq") <= cut), 0)
-    before = bucket_files(root)
+    _, before = sink._load_manifest()
     assert len(before) > 1
+    files_before = _version_files(root, 0)
+    assert files_before
 
     one_key = env.orderBy("key").limit(1).select("key").collect()[0]["key"]
     delta = env.filter((F.col("seq") > cut) & (F.col("key") == one_key))
@@ -269,56 +407,56 @@ def test_scd2_sink_is_bucket_bounded_and_matches_batch(spark, sf_dir):
         F.pmod(F.xxhash64("key"), F.lit(8)).alias("b")
     ).collect()[0]["b"]
     sink.apply_batch(delta, 1)
-    after = bucket_files(root)
+    _, after = sink._load_manifest()
     assert set(after) == set(before)
     for b in before:
         if b == touched:
-            assert before[b] != after[b]
+            assert after[b] == 1
         else:
-            assert before[b] == after[b]
+            assert after[b] == before[b] == 0
+    assert _version_files(root, 0) == files_before
 
     # finish the feed for the untouched keys, then compare against the
     # batch window over the whole feed
     sink.apply_batch(env.filter((F.col("seq") > cut) & (F.col("key") != one_key)), 2)
-    cols = ["key", "seq", "value", "valid_from", "valid_to", "is_current"]
-    want = _rows(scd2_versions(env), cols)
-    got = _rows(sink.history(), cols)
+    want = _rows(scd2_versions(env), SCD2_COLS)
+    got = _rows(sink.history(), SCD2_COLS)
     assert got == want
 
 
-def test_scd2_sink_failure_replay_uncommitted_state(spark, sf_dir):
+def test_scd2_sink_failure_replay_uncommitted_state(spark, sf_dir, monkeypatch):
     """The deterministic mid-batch crash the randomized stress can't pin:
-    the sink dies BETWEEN the state write and the commit-log save, so the
-    restart replays a batch whose rows are already in state. Pre-round-9
-    this duplicated every delta version row (the union re-added them) and
-    re-closed the new open row with an OLDER timestamp (corrupted
-    interval). The per-row guards (strict (ts, seq) close-guard +
-    (key, seq) anti-join add-guard) make the replay a no-op."""
-    import json
-    import os
-
-    from mongodb_mysql_cdc_spark.streaming.apply import Scd2ParquetSink, scd2_versions
-
+    the sink dies BETWEEN the version write and the manifest replace, so
+    the restart replays a batch whose fold is already on disk, in an
+    orphan version dir. Pre-round-9 the replay duplicated every delta
+    version row (the union re-added them) and re-closed the new open row
+    with an OLDER timestamp (corrupted interval); the replay must fold to
+    exactly the batch window, overwriting the orphan."""
     env = envelopes_from_events(load(spark, sf_dir, "events"))
     cut = env.agg(F.expr("percentile_approx(seq, 0.5)").alias("c")).collect()[0]["c"]
     root = tempfile.mkdtemp(prefix="scd2_uncommitted_")
     sink = Scd2ParquetSink(spark, root, n_buckets=8)
     sink.apply_batch(env.filter(F.col("seq") <= cut), 0)
+    with open(os.path.join(root, "_manifest.json")) as f:
+        manifest_0 = f.read()
+    # a crash comes before the post-commit GC, so batch 0's versions stay
+    monkeypatch.setattr(sink, "_gc", lambda owners: None)
     sink.apply_batch(env.filter(F.col("seq") > cut), 1)
 
-    cols = ["key", "seq", "value", "valid_from", "valid_to", "is_current"]
-    want = _rows(scd2_versions(env), cols)
-    assert _rows(sink.history(), cols) == want
+    want = _rows(scd2_versions(env), SCD2_COLS)
+    assert _rows(sink.history(), SCD2_COLS) == want
 
-    # simulate the crash window: state for batch 1 is fully written but
-    # the commit log never recorded it — exactly what a kill between
-    # the dynamic-partition-overwrite and _save_commits leaves behind
-    with open(os.path.join(root, "_commits.json"), "w") as f:
-        json.dump([0], f)
+    # simulate the crash window: batch 1's version is fully written but
+    # the manifest still names batch 0
+    with open(os.path.join(root, "_manifest.json"), "w") as f:
+        f.write(manifest_0)
+    assert _version_files(root, 1)
 
     replay_sink = Scd2ParquetSink(spark, root, n_buckets=8)
+    assert replay_sink._load_manifest()[0] == 0
     replay_sink.apply_batch(env.filter(F.col("seq") > cut), 1)
-    got = _rows(replay_sink.history(), cols)
+    assert replay_sink._load_manifest()[0] == 1
+    got = _rows(replay_sink.history(), SCD2_COLS)
     assert len(got) == len(want)  # no duplicated version rows
     assert got == want            # and no corrupted close timestamps
 
@@ -333,11 +471,6 @@ def test_scd2_sink_failure_replay_between_sinks(spark, sf_dir):
     sink and a first delivery for the SCD2 sink. Final assert: both
     sinks equal their one-shot batch folds — no duplicate history rows,
     no lost close."""
-    from mongodb_mysql_cdc_spark.streaming.apply import (
-        Scd2ParquetSink,
-        scd2_versions,
-    )
-
     staged = stage_event_chunks(spark, sf_dir, n_chunks=6, dir_prefix="scd2crash")
     ckpt = tempfile.mkdtemp(prefix="sparkcdc_scd2crash_ckpt_")
     cur_sink = CdcParquetSink(
@@ -364,8 +497,8 @@ def test_scd2_sink_failure_replay_between_sinks(spark, sf_dir):
     except Exception:
         pass  # the poison surfaces as StreamingQueryException — expected
     assert not q1.isActive
-    assert 2 in cur_sink._load_commits()       # committed before the crash
-    assert 2 not in hist_sink._load_commits()  # never reached
+    assert cur_sink._load_manifest()[0] == 2   # committed before the crash
+    assert hist_sink._load_manifest()[0] == 1  # never reached batch 2
 
     def apply_both(df, batch_id):
         cur_sink.apply_batch(df, batch_id)
@@ -377,7 +510,8 @@ def test_scd2_sink_failure_replay_between_sinks(spark, sf_dir):
         .start()
     )
     run_to_completion(q2)
-    assert max(hist_sink._load_commits()) == 5  # all 6 chunks landed
+    assert hist_sink._load_manifest()[0] == 5  # all 6 chunks landed
+    assert cur_sink._load_manifest()[0] == 5
 
     env = envelopes_from_events(load(spark, sf_dir, "events"))
     cur_cols = ["key", "last_ts", "last_event_type", "last_value"]
@@ -402,8 +536,6 @@ def test_checkpoint_restart_resumes_without_reprocessing(spark, sf_dir):
     raced micro-batch timing and flaked on loaded/fast boxes): a poison
     wrapper raises before the 3rd commit, so the first run always dies
     with exactly 2 batches committed and batch 2's offsets in the WAL."""
-    from mongodb_mysql_cdc_spark.streaming.apply import CdcParquetSink, cdc_apply_batch
-
     staged = stage_event_chunks(spark, sf_dir, n_chunks=6, dir_prefix="restart")
     ckpt = tempfile.mkdtemp(prefix="sparkcdc_restart_ckpt_")
     root = tempfile.mkdtemp(prefix="sparkcdc_restart_state_")
@@ -411,7 +543,7 @@ def test_checkpoint_restart_resumes_without_reprocessing(spark, sf_dir):
     stream = envelopes_from_events(read_event_stream(spark, staged))
 
     def apply_or_crash(df, batch_id):
-        if len(sink._load_commits()) >= 2:
+        if sink._load_manifest()[0] == 1:
             raise RuntimeError("poison: simulated crash mid-feed")
         sink.apply_batch(df, batch_id)
 
@@ -425,8 +557,7 @@ def test_checkpoint_restart_resumes_without_reprocessing(spark, sf_dir):
     except Exception:
         pass  # the poison surfaces as StreamingQueryException — expected
     assert not q1.isActive
-    committed_before = sink._load_commits()
-    assert len(committed_before) == 2  # batches 0,1 committed; 2 crashed
+    assert sink._load_manifest()[0] == 1  # batches 0,1 committed; 2 crashed
 
     # restart from the same checkpoint: must drain the REMAINING chunks
     sink2 = CdcParquetSink(spark, root, n_buckets=4)
@@ -436,9 +567,7 @@ def test_checkpoint_restart_resumes_without_reprocessing(spark, sf_dir):
         .start()
     )
     run_to_completion(q2)
-    committed_after = sink2._load_commits()
-    assert committed_after >= committed_before
-    assert max(committed_after) == 5  # all 6 chunks (batch ids 0..5) landed
+    assert sink2._load_manifest()[0] == 5  # all 6 chunks (batch ids 0..5) landed
 
     env = envelopes_from_events(load(spark, sf_dir, "events"))
     cols = ["key", "last_ts", "last_event_type", "last_value"]
@@ -511,11 +640,6 @@ def test_scd2_all_delete_batch_closes_open_rows(spark):
     come from batch KEYS, not from the delete-dropping version rows), and
     an all-delete batch for unknown keys must commit as a no-op instead of
     writing unreadable empty state."""
-    from pyspark.sql import Row
-    import datetime as dt
-
-    from mongodb_mysql_cdc_spark.streaming.apply import Scd2ParquetSink, scd2_versions
-
     t = lambda s: dt.datetime.fromisoformat(s)
     mk = lambda op, ts, seq, k, v: Row(
         op=op, ts=t(ts), seq=seq, key=k,
@@ -540,14 +664,14 @@ def test_scd2_all_delete_batch_closes_open_rows(spark):
     ghost = [mk("d", "2024-01-01T13:00:00", 5, 99, 0.0)]
     sink.apply_batch(spark.createDataFrame(ghost), 2)
     assert _rows(sink.history(), cols) == want
-    assert 2 in sink._load_commits()
+    assert sink._load_manifest()[0] == 2
 
-    # the same batch FIRST on a fresh sink folds to nothing: its overwrite
-    # leaves state/ without a data file, which must still read as no state
-    # and the typed empty history, and a normal batch must fold on top
+    # the same batch FIRST on a fresh sink folds to nothing: no bucket
+    # gets an owning version, which must still read as no state and the
+    # typed empty history, and a normal batch must fold on top
     first = Scd2ParquetSink(spark, tempfile.mkdtemp(prefix="scd2_del0_"), n_buckets=4)
     first.apply_batch(spark.createDataFrame(ghost), 0)
-    assert 0 in first._load_commits()
+    assert first._load_manifest()[0] == 0
     assert first.state() is None
     empty = first.history()
     assert empty.columns == cols and empty.count() == 0

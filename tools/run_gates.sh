@@ -36,7 +36,19 @@ python -m pytest tests/ -q -m serial -p no:cacheprovider
 record pytest_serial
 
 echo "== replbench smoke (metric contract + replica correctness gate) =="
-python3 replbench/run.py --smoke
+SMOKE_LOG="$(mktemp)"
+python3 replbench/run.py --smoke | tee "${SMOKE_LOG}"
+# the gate must trip on the 1 us change alone, so the corrupted copy has
+# to read back with the expected row count
+python3 - "${SMOKE_LOG}" <<'PY'
+import re, sys
+line = next((x for x in open(sys.argv[1]) if " moved by 1 us: " in x), "")
+m = re.search(r"replica \[\((\d+), -?\d+\)\] vs expected \((\d+), -?\d+\)", line)
+if not m or m[1] != m[2]:
+    sys.exit(f"smoke: corrupted replica row count != expected row count: {line!r}")
+print(f"smoke: corrupted replica rows {m[1]} == expected rows {m[2]}")
+PY
+rm -f "${SMOKE_LOG}"
 record replbench_smoke
 
 echo "== plan lint (scale-killer hunt, all registered queries) =="
