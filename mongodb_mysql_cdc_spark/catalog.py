@@ -133,10 +133,9 @@ def path_for(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
-# Reader-schema cache (round 13, guide §1/§6): every ``load`` used to
-# re-infer the footer schema (a driver-side job per call) and then fetch
-# ``df.schema`` over py4j to cast TIMESTAMP_NTZ columns — measured at
-# 0.05-0.3 s of pure plan-build time per headline query run (tables × runs).
+# Reader-schema cache: without it every ``load`` re-infers the footer
+# schema (a driver-side job per call) and then fetches ``df.schema`` over
+# py4j to cast TIMESTAMP_NTZ columns — measured at 0.05-0.3 s of pure plan-build time per headline query run (tables × runs).
 # The schema is METADATA, not a result: caching it is the same thing a
 # catalog (Hive/Iceberg) does in production, and every bench/oracle run
 # still computes from the parquet bytes. Keyed on (path, mtime_ns, size)
@@ -207,14 +206,14 @@ def _attach_split_hint(df: DataFrame, path: str) -> DataFrame:
     """Annotate the DataFrame with the scan's approximate input-split count
     so ``operators.partitioning.spread`` can make its fan-out decision
     without a physical-planning probe (``df.rdd.getNumPartitions()`` costs
-    60-160 ms of plan-build per call — measured r13). Estimate: ceil(file
+    60-160 ms of plan-build per call). Estimate: ceil(file
     bytes / 128 MB default maxPartitionBytes); only the under-/adequately-
     partitioned DECISION consumes it, never a result."""
     try:
         if os.path.isdir(path):
             # Spark-written dataset dir: st_size would be the inode size
             # (~4 KB → hint always 1, defeating spread's decision on
-            # large tables — r13 advice). Sum the data files instead,
+            # large tables). Sum the data files instead,
             # and floor the estimate at the file count (each data file
             # is at least one scan task), matching partitioning's
             # inputFiles fallback.

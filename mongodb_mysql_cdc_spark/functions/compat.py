@@ -22,8 +22,8 @@ from pyspark.sql import functions as F
 
 def _floor_double(col: Column) -> Column:
     """floor() in the DOUBLE domain. Spark's F.floor(double) returns
-    BIGINT, which silently saturates past ±2^63 (the r11 EXTREMES catch:
-    agg_stats' 9e16 variance rounded at 4dp became long_max/1e4 while
+    BIGINT, which silently saturates past ±2^63 (found by the EXTREMES
+    fixture: agg_stats' 9e16 variance rounded at 4dp became long_max/1e4 while
     DuckDB's double-domain floor sailed through). trunc = x - x % 1.0 is
     EXACT IEEE at any magnitude (fmod is exact; the subtraction is exact
     for |x| < 2^53 and fmod is 0 above, where x is already integral);
@@ -47,7 +47,7 @@ def hround(col: Column, n: int = 2) -> Column:
 
 def sql_floor_double(y: str) -> str:
     """SQL-text ``_floor_double``: floor in the DOUBLE domain, valid in
-    BOTH dialects (r12, ADVICE r11). ``%`` on doubles is fmod in Spark
+    BOTH dialects. ``%`` on doubles is fmod in Spark
     SQL and DuckDB alike (exact IEEE), so ``t = y - y % 1.0`` is the
     truncation and the CASE subtracts 1 for negative non-integers —
     the exact SQL mirror of :func:`_floor_double`. Measured bit-equal
@@ -60,8 +60,7 @@ def sql_floor_double(y: str) -> str:
 
     Non-finite inputs: ``fmod(±inf, 1.0)`` is NaN in IEEE 754, so an
     infinite ``y`` yields NaN rather than floor's ±inf — identically on
-    both engines (harmless at every registered magnitude; documented
-    per ADVICE r12)."""
+    both engines (harmless at every registered magnitude)."""
     t = f"(({y}) - (({y}) % 1.0))"
     return (
         f"(CASE WHEN ({y}) < 0 AND (({y}) % 1.0) <> 0.0"
@@ -75,20 +74,19 @@ def sql_round(expr: str, n: int = 2) -> str:
     Also valid Spark SQL: the CAST keeps the result DOUBLE in both parsers
     (a bare ``/ 100.0`` literal would be DECIMAL division in Spark SQL).
 
-    r12 (ADVICE r11): floors via :func:`sql_floor_double` instead of the
-    dialect ``floor()`` — Spark SQL's ``floor(double)`` returns BIGINT
-    and silently SATURATES past ±2^63 (the r11 EXTREMES hround catch),
-    and this string DOES execute in Spark SQL (the sql_* family). The
-    double-domain spelling is bit-identical to the old one everywhere it
-    didn't overflow (no oracle moves) and removes the docstring-only
-    magnitude precondition entirely; pinned cross-engine at 1e30 by
+    Floors via :func:`sql_floor_double`, not the dialect ``floor()`` —
+    Spark SQL's ``floor(double)`` returns BIGINT and silently SATURATES
+    past ±2^63 (found by the EXTREMES fixture), and this string DOES
+    execute in Spark SQL (the sql_* family). The double-domain spelling
+    equals ``floor()`` everywhere that does not overflow, so it needs no
+    magnitude precondition; pinned cross-engine at 1e30 by
     tests/test_properties.py."""
     scale = float(10**n)
     y = f"(({expr}) * {scale} + 0.5)"
     return f"CAST({sql_floor_double(y)} / {scale} AS DOUBLE)"
 
 
-# --- exact decimal accumulators (round 8) -----------------------------------
+# --- exact decimal accumulators ---------------------------------------------
 #
 # ``hround(sum(double))`` is a comparison contract that TIGHTENS with corpus
 # size: the sum's magnitude grows linearly while the fixed-decimal rounding
@@ -182,8 +180,8 @@ def grid_wsum(expr: Column, weight: Column, k: int = 2) -> Column:
     weight column → DOUBLE. The product is formed in DECIMAL(19,0) —
     never as a double multiply (value·weight at 1e9 money × 3.6e9 µs ≈
     3.6e18 is beyond 2^53, so the grid recovery of the double product is
-    inexact) and never in long (cents·weight ≈ 3.6e20 wraps; the r11
-    EXTREMES catch in ts_twap). Same bit-identity contract as grid_sum:
+    inexact) and never in long (cents·weight ≈ 3.6e20 wraps; found by
+    the EXTREMES fixture in ts_twap). Same bit-identity contract as grid_sum:
     both engines sum the identical exact decimals and convert once."""
     cents = _grid_long(expr, k).cast("decimal(19,0)")
     return (
@@ -248,8 +246,7 @@ def sql_dec_avg_over(expr: str, partition: str, scale: int = 2) -> str:
 
 # --- grid second moments: exact-input stddev / variance / correlation ------
 #
-# The sf1 × AQE-off invariance cell (round 8, second catch of the class)
-# showed the same contract instability applies to corpus-group AVG/STDDEV
+# The sf1 × AQE-off invariance cell showed the same contract instability applies to corpus-group AVG/STDDEV
 # of grid columns: ts_calendar_profile's 6-dec rounded avg(value) flipped a
 # round-half boundary when AQE-off changed the double-sum merge order. The
 # fix family: recover the scaled integer per row (same precondition as
@@ -261,7 +258,7 @@ def sql_dec_avg_over(expr: str, partition: str, scale: int = 2) -> str:
 # under any physical layout.
 #
 # Per-row bounds: the harness domain keeps c = value·10² ≤ 4.9e4, but the
-# round-11 EXTREMES fixture (±1e9 money → c ≈ 1e11) showed the SQUARED
+# EXTREMES fixture (±1e9 money → c ≈ 1e11) showed the SQUARED
 # terms must not be formed in BIGINT — c² ≈ 1e22 > 2^63 wraps in Spark
 # (ANSI: ARITHMETIC_OVERFLOW) and overflows DuckDB's BIGINT multiply too.
 # All second-moment products are therefore computed in DECIMAL(19,0) ×
@@ -283,7 +280,7 @@ def _sql_grid_long(expr: str, k: int) -> str:
 def _dsum_prod(a: Column, b: Column) -> Column:
     """Exact decimal sum of a product of two LONG columns — the product
     is formed in DECIMAL(19,0), never in long (long·long wraps beyond
-    2^63; the r11 EXTREMES catch: money cents² at ±1e9 ≈ 1e22).
+    2^63; found by the EXTREMES fixture: money cents² at ±1e9 ≈ 1e22).
     DECIMAL(19,0)·DECIMAL(19,0) → DECIMAL(38,0) in both engines — exact
     for every product of two ≤19-digit integers."""
     return dec_to_double(F.sum(a.cast("decimal(19,0)") * b.cast("decimal(19,0)")))

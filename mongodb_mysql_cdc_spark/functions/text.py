@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 # Matches the DuckDB oracle spelling: string_split_regex(lower(trim(x)), '\s+')
 TOKEN_SPLIT_RE = r"\s+"
 
-# Cross-engine CASEFOLD contract (round-10 TEXT-fixture catch): plain
+# Cross-engine CASEFOLD contract (found by the TEXT fixture): plain
 # lower() diverges between the JVM (java.lang.String.toLowerCase,
 # Locale.ROOT) and DuckDB (utf8proc simple mapping) on exactly two
 # Unicode mappings observable in lowercase output:
@@ -74,9 +74,8 @@ def word_shingles(toks: Column, n: int = 3) -> Column:
 
     The shingle builder is wrapped in ``transform(array(toks), t -> …)``
     — a per-row LET binding. A HOF lambda body re-evaluates any captured
-    non-attribute expression PER ELEMENT, so the pre-round-10 spelling
-    (``toks`` referenced inside the position lambda) re-ran the whole
-    inline tokenizer — split(casefold(trim(text))) — once per shingle
+    non-attribute expression PER ELEMENT, so referencing ``toks`` inside
+    the position lambda would re-run the whole inline tokenizer — split(casefold(trim(text))) — once per shingle
     position: O(tokens²) per document, measured 14× on the single-split
     documents scan (8.5 s → 0.67 s at sf0.1, hash-identical). As a HOF
     *argument* the token expression is evaluated exactly once per row,
@@ -97,10 +96,10 @@ def word_shingles(toks: Column, n: int = 3) -> Column:
 def chunk_starts(text_col: Column, stride: int = 400) -> Column:
     """1-based chunk-start offsets for overlapping-window chunking.
 
-    Cross-engine EMPTY contract (round-10 TEXT-fixture catch): Spark's
+    Cross-engine EMPTY contract (found by the TEXT fixture): Spark's
     ``sequence(1, 0, 400)`` THROWS (Illegal sequence boundaries) while
     DuckDB's ``generate_series(1, 0, 400)`` returns an empty list — so a
-    single empty document killed the whole chunking job. Pinned on both
+    single empty document would kill the whole chunking job. Pinned on both
     engines: an empty document produces NO chunks (Spark guards with
     when(); the oracle's generate_series already behaves that way)."""
     n = F.length(text_col)

@@ -5,8 +5,7 @@ All math is done in DOUBLE with a sequential left fold so the oracle
 (DuckDB list_transform + list_reduce) is bit-identical. DuckDB's native
 list_cosine_similarity computes in float32 — do NOT use it as an oracle.
 
-Round 13 (optimization, guide §1 profile): building these HOFs through the
-Column DSL costs ~10 py4j round trips per lambda (zip_with/aggregate each
+Plan-build cost: building these HOFs through the Column DSL costs ~10 py4j round trips per lambda (zip_with/aggregate each
 ship a LambdaFunction + UnresolvedNamedLambdaVariables one call at a
 time) — measured as the dominant plan-BUILD cost of the sim_search
 family. When the argument is a plain column NAME, the same expression is
@@ -36,7 +35,7 @@ def spark_to_double(a: str) -> str:
 
 
 # The dot/norm folds CAST INSIDE the lambda instead of materializing
-# transform(...)-casted copies of the input arrays first (r13, measured
+# transform(...)-casted copies of the input arrays first (measured
 # 0.83 s → 0.64 s on a 100k-pair cosine workload): same per-element ops
 # (cast, multiply) in the same sequential fold order → bit-identical
 # results (hash-verified, incl. NULL → NULL and empty → 0.0 edges), two

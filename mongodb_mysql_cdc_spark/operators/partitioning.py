@@ -13,10 +13,9 @@ unnecessary full-corpus shuffle at scale, while small inputs fan out to
 every core. Hash-partitioning by the given keys keeps downstream
 key-joins/aggregations co-partitioned where possible.
 
-r13 (guide §1 profile): the under-partitioned probe no longer calls
-``df.rdd.getNumPartitions()`` on the common path — that forces physical
-planning of the whole subtree and cost 60-160 ms of plan-BUILD time per
-call. ``catalog.load`` now annotates its DataFrames with a split-count
+The under-partitioned probe avoids ``df.rdd.getNumPartitions()`` on the
+common path — that forces physical planning of the whole subtree and
+costs 60-160 ms of plan-BUILD time per call. ``catalog.load`` annotates its DataFrames with a split-count
 estimate (from the file's byte size it already stats); failing that, the
 estimate comes from ``inputFiles()`` + ``os.stat`` (metadata only); the
 planning probe remains as the last-resort fallback for exotic sources.

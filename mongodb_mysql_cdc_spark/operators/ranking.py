@@ -19,7 +19,7 @@ distributed spelling here keeps the exact same output:
    ntile's bucket arithmetic computed from broadcast per-group totals.
 
 **Why literal boundaries and not repartitionByRange +
-spark_partition_id** (the round-5/6 design, de-spelled in round 7): the
+spark_partition_id**: the
 stamped DataFrame feeds two plan branches (the rows and their
 per-(bucket, group) offsets), and each branch RE-EXECUTES the upstream
 plan. A physical partition id is only consistent across those two
@@ -27,23 +27,21 @@ executions if every exchange below it replays identically — AQE may
 coalesce the two instances differently, and repartitionByRange's
 boundary SAMPLER draws per input partition, so even an explicit target
 count can sample different boundaries when the upstream layout shifts.
-At sf0.1 this dropped whole groups from agg_weighted_median /
-win_rank_dense (the per-execution ids disagreed, so the offset join
-silently lost rows) while every sf0.01 gate stayed green. A bucket id
+At sf0.1 this drops whole groups from agg_weighted_median /
+win_rank_dense (the per-execution ids disagree, so the offset join
+silently loses rows) while every sf0.01 gate stays green. A bucket id
 computed from the ROW'S OWN VALUES against literals embedded in the
 plan is identical in every branch by construction — physical layout
 can no longer affect it.
 
 The boundaries themselves come from a layout-independent deterministic
-sample, ONE job at plan-build time (round-8: fused the former count +
-sample pair): a stratified min-hash aggregate — group rows by
+sample, ONE job at plan-build time: a stratified min-hash aggregate — group rows by
 ``pmod(xxhash64(key tuple), 20k)`` and keep each stratum's (hash, key)
 minimum. min() is commutative, so the result is a pure function of the
 DATA (no dependence on physical layout or a sampling seed), the
 aggregation state and the driver collect are both hard-bounded at 20k
-entries no matter the corpus size or key-frequency skew (the round-7
-ADVICE heavy-tail concern — a hot key now occupies exactly one stratum
-slot), and min-hash-per-stratum draws ~uniformly over DISTINCT keys.
+entries no matter the corpus size or key-frequency skew (a hot key
+occupies exactly one stratum slot), and min-hash-per-stratum draws ~uniformly over DISTINCT keys.
 Distinct-uniform is the right distribution here: a bucket id is a
 function of the key VALUE, so duplicates of one key can never be split
 across buckets — frequency-weighting cut points cannot improve balance
@@ -53,7 +51,7 @@ Spark's own struct ordering, so bucket(r1) < bucket(r2) implies
 key(r1) ≤ key(r2) whatever the cut points, and ORDER WITHIN a bucket
 is the window's own sort.
 
-Bucket COUNT is capped at 1024 (round-7 verdict: an expression chain
+Bucket COUNT is capped at 1024 (an expression chain
 sized by ``spark.sql.shuffle.partitions`` would hit codegen's 64KB
 method limit at a real cluster's partition counts). The bucket id is
 evaluated as constant-depth HOF scans over constant-folded literal
@@ -69,7 +67,7 @@ a TOTAL order within each group (callers append a unique tiebreak
 column), so each row's in-group position is well-defined no matter where
 the cuts fall.
 
-Bit-determinism assumption (round-7 ADVICE): the machinery fans its
+Bit-determinism assumption: the machinery fans its
 input into multiple plan branches, each of which RE-EXECUTES the input
 lineage; the row VALUES must therefore be bit-identical across
 executions. Raw columns and integer aggregates are; floating-point
@@ -99,7 +97,7 @@ from pyspark.sql import Window
 _BOUNDARY_SAMPLE_TARGET = 20_000
 # bucket-count cap: keeps the bucket-id expression's literal payload and
 # per-row comparison count bounded at cluster-scale shuffle-partition
-# settings (round-7 verdict item 3); corpus/1024 per bucket stays
+# settings; corpus/1024 per bucket stays
 # parallel at any executor count
 _MAX_BUCKETS = 1024
 # fine-chunk width for the two-level bucket lookup (≈ sqrt(_MAX_BUCKETS))
@@ -158,7 +156,7 @@ def _bucket_id_expr(df: DataFrame, keys: Sequence[str]) -> Column:
     lambdas (coarse chunk pick + fine in-chunk count), never in a
     nested when-chain — at the 1024-bucket cap that is ≤ 64 struct
     comparisons per row and no codegen-method blowup at cluster-scale
-    ``spark.sql.shuffle.partitions`` (round-7 verdict item 3).
+    ``spark.sql.shuffle.partitions``.
 
     Rows with a null in any key field compare null against every
     boundary → bucket 0, matching NULLS FIRST ascending order."""
@@ -181,7 +179,7 @@ def _bucket_id_expr(df: DataFrame, keys: Sequence[str]) -> Column:
         # a computed expression (dataset_curriculum: -size(tokens(text)))
         # ProjectCollapse inlines it here, and a lambda body re-evaluates
         # captured non-attribute expressions once per boundary ELEMENT —
-        # the round-10 hof_recompute lint class. Bound as a HOF argument
+        # the hof_recompute lint class. Bound as a HOF argument
         # it evaluates once per ROW; the inner lambdas see variables.
         return F.element_at(
             F.transform(
@@ -232,9 +230,9 @@ _RAW_FLOAT_AGGS = ("sum", "avg", "mean")
 def assert_deterministic_order_keys(
     df: DataFrame, order_cols: Sequence[str]
 ) -> None:
-    """Machinery gate (r10 verdict item 3 — the analytics_rfm PERMUTE
-    catch, promoted from docstring precondition to an enforced check):
-    a ranking/bucketing ORDER key must be bit-deterministic in the DATA.
+    """Machinery gate (an enforced check, not a docstring precondition;
+    the PERMUTE fixture found the analytics_rfm case): a
+    ranking/bucketing ORDER key must be bit-deterministic in the DATA.
 
     A float-typed column DEFINED BY a raw float aggregate (``sum`` over
     double input, or any ``avg``) is layout-dependent by an ulp — double
@@ -244,12 +242,12 @@ def assert_deterministic_order_keys(
     across runs. Grid-summed (integer/decimal-accumulated), integer, and
     raw per-row columns are all deterministic and pass.
 
-    Mechanism (r12, ADVICE r11): for each ``order_cols`` entry with
+    Mechanism: for each ``order_cols`` entry with
     float/double dtype, resolve the column's ACTUAL exprId(s) from the
     analyzed plan's output attributes and inspect only that specific
     ``<expr> AS name#id`` definition — a stale same-name alias earlier
     in lineage (e.g. a raw float sum later OVERWRITTEN with a grid-safe
-    spelling via ``withColumn``) no longer trips the gate. Reject when
+    spelling via ``withColumn``) does not trip the gate. Reject when
     the defining expression is a bare ``sum(...)``/``avg(...)`` call;
     when it is a bare attribute reference (``withColumnRenamed`` yields
     ``other#1 AS name#2``), chase ONE alias hop and inspect ``other``'s
@@ -320,9 +318,8 @@ def _join_back(
     """Broadcast-join the per-(bucket, group) ``extra`` frame back onto
     the rows with NULL-SAFE equality on the group columns — window
     PARTITION BY keeps a NULL group key as a real group, so the join-back
-    must too (round-7 ADVICE: the previous name-based equi-join silently
-    dropped null-group rows while the internal offsets theta-join was
-    already null-safe). eqNullSafe keys still plan as a
+    must too (a name-based equi-join would silently drop null-group rows,
+    while the internal offsets theta-join is null-safe). eqNullSafe keys still plan as a
     BroadcastHashJoin. ``extra`` = [pid, *group_cols, *value cols]."""
     val_cols = [c for c in extra.columns if c != pid and c not in group_cols]
     renamed = extra.select(
@@ -354,9 +351,9 @@ def with_group_position(
     unique key last) AND be bit-deterministic in the DATA: a double-typed
     AGGREGATE key (e.g. sum of money doubles) is layout-dependent by an
     ulp, which silently reorders value-tied rows across runs — grid-sum
-    such keys first (round-10 PERMUTE-axis catch in analytics_rfm; raw
-    columns and integer-valued aggregates are safe — ENFORCED by
-    :func:`assert_deterministic_order_keys`, r11). Adds only the
+    such keys first (the PERMUTE fixture caught this in analytics_rfm;
+    raw columns and integer-valued aggregates are safe — ENFORCED by
+    :func:`assert_deterministic_order_keys`). Adds only the
     ``out`` column; `_gp_*` intermediates are dropped. ``group_cols=[]``
     gives the global position. ``boundary_df``: optional cheaper proxy
     for the boundary sample (see :func:`with_group_cumsum`)."""
@@ -401,8 +398,8 @@ def with_global_position(
     SAMPLE against — boundaries shape only bucket balance, never output
     (module docstring), so chained machinery calls should sample from
     the shared checkpointed input instead of re-executing each other's
-    window layers (r13: analytics_rfm's 2nd/3rd boundary jobs re-ran all
-    prior layers; sampling from ``per`` cut the query ~40%)."""
+    window layers (without it analytics_rfm's 2nd/3rd boundary jobs
+    re-run all prior layers; sampling from ``per`` cuts the query ~40%)."""
     return with_group_position(df, [], order_cols, out, boundary_df=boundary_df)
 
 
@@ -467,7 +464,7 @@ def with_group_position_and_cumsum(
     ``val`` under the same (group, order): half the boundary jobs and
     exchanges of two separate machinery calls (win_rank_dense's
     distinct-spend histogram needs exactly this pair). Same total-order,
-    deterministic-order-key (enforced, r11) and non-null-``val``
+    deterministic-order-key (enforced) and non-null-``val``
     preconditions as the two parents."""
     assert_deterministic_order_keys(df, order_cols)
     v = F.coalesce(
@@ -554,7 +551,7 @@ def with_group_cumsum(
     a null local running sum would null the offset addition — the two
     spellings diverge exactly on null values, so the operator refuses
     them (callers coalesce first if skip-null semantics are wanted).
-    ``order_cols`` must also be bit-deterministic (enforced, r11 — see
+    ``order_cols`` must also be bit-deterministic (enforced — see
     :func:`assert_deterministic_order_keys`)."""
     assert_deterministic_order_keys(df, order_cols)
     v = F.coalesce(

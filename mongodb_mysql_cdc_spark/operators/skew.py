@@ -29,7 +29,7 @@ SALT_COL = "_salt"
 def _contains_map(dt) -> bool:
     """xxhash64 rejects MAP types at ANY nesting depth (a struct or array
     wrapping a map fails with AnalysisException at plan time, not just a
-    top-level map — round-7 ADVICE); recurse through containers."""
+    top-level map); recurse through containers."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
     if isinstance(dt, MapType):

@@ -44,80 +44,17 @@ def register(name: str, oracle: Optional[str] = None) -> Callable[[QueryFn], Que
     return deco
 
 
-# The driver verifies the FIRST 50 names in queries() order per round
-# (CORRECTNESS_r01.json = registry positions 1-50 exactly).  Round 14
-# rotation (r13 verdict item 2 overrides the precomputed plan): the
-# registry stays frozen at 279; the window front-loads every query path
-# the r13 optimization commits edited AFTER the r13 window was pinned —
-# all 12 `coverage_report --stale` names (analytics_rfm, cdc_apply_batch,
-# dedup_semantic_keep, embedding_normalize, kmeans_refine,
-# search_rrf_fusion, sim_search_ivf/lsh/rerank, stream_stream_join_left,
-# text_stats, tfidf_topk_per_doc) plus the verdict-named touched paths
-# the tracker's per-function diff misses because only shared helpers
-# changed (tfidf via _df_from_tf, sim_search_topk and knn_classify via
-# the vectors.py fold re-spell), the full staged-streaming consumer set
-# (replay staging re-spelled in r13, patched in r14), the 4 remaining
-# r07-evidence deferrals (anomaly_mad, dedup_exact, dedup_ngram_jaccard,
-# quality_winsorize), and every bench-headline name this round's
-# profiling touches — filled out with the oldest (r08) evidence shelf.
-# Evicted: the entire r13 window (all 50 green in CORRECTNESS_r13; none
-# edited since except through the replay patch, whose consumers re-enter
-# here).  Cheap relational/agg families first, expensive streaming/LLM
-# queries LAST so a time-capped driver run can't starve the cheap ones.
-_DRIVER_WINDOW = [
-    # -- cheap agg / join / window families (r08-evidence shelf, incl.
-    #    every bench-headline name this round's profiling may touch) --
-    "agg_hash", "agg_global", "agg_having", "agg_count_if",
-    "agg_moments", "agg_incremental_merge", "agg_rollup",
-    "topk_per_group", "join_inner_hash", "join_broadcast",
-    "join_sort_merge", "join_asof", "win_running", "win_range_frame",
-    "pricing_summary",
-    # -- analytics / anomaly / ts (r08 shelf + r13-touched rfm + r07
-    #    deferral + the r14 ts_gapfill window-expr fix, swapped in for
-    #    the untouched agg_product) --
-    "analytics_shipping_priority", "analytics_pareto", "analytics_rfm",
-    "anomaly_mad", "ts_gapfill",
-    # -- LLM text (r13-touched + r07 deferrals) --
-    "text_stats", "quality_winsorize", "tfidf", "tfidf_topk_per_doc",
-    # -- dedup family (r13-touched + r07 deferrals) --
-    "dedup_exact", "dedup_ngram_jaccard", "dedup_minhash_lsh",
-    "dedup_semantic_keep",
-    # -- vector / similarity family (r13 vector-fold + F.expr re-spells) --
-    "embedding_normalize", "knn_classify", "kmeans_refine",
-    "sim_search_topk", "sim_search_lsh", "sim_search_ivf",
-    "sim_search_rerank", "search_rrf_fusion",
-    # -- CDC batch (r13 deferred-parse re-spell) --
-    "cdc_apply_batch",
-    # -- staged streaming set LAST (most expensive; replay staging was
-    #    re-spelled in r13 and patched in r14 — every consumer not in the
-    #    r13 window re-verifies here) --
-    "output_mode_update", "cdc_apply_stream", "cdc_apply_stateful",
-    "cdc_scd2_stream", "stream_source", "stream_dedup",
-    "stream_tumbling", "stream_dedup_watermarked", "stream_session",
-    "stream_session_stateful", "stream_sliding", "stream_stream_join",
-    "stream_stream_join_left",
-]
-
-# FUTURE ROTATION (should a round follow r14): any coverage_report
-# --stale name first, then the r08 shelf names this window could not fit
-# (analytics_local_supplier_volume, ts_gapfill, ts_calendar_profile,
-# ts_seasonal_residual, sql_parameterized, sql_pipe_syntax), then the
-# r09 head — cheap scalar/agg names first, streaming/LLM last.
-
-
-def _window_order(names: dict[str, QueryFn] | dict[str, str]) -> list[str]:
-    front = [n for n in _DRIVER_WINDOW if n in names]
-    return front + [n for n in names if n not in set(front)]
-
-
 def queries() -> dict[str, QueryFn]:
+    """Every registered query in registration order: the order in which
+    ``suite.load_all`` imports the suite modules and they define queries."""
     _load_suite()
-    return {n: _QUERIES[n] for n in _window_order(_QUERIES)}
+    return dict(_QUERIES)
 
 
 def oracles() -> dict[str, str]:
+    """The oracle SQL of every query that has one, in registration order."""
     _load_suite()
-    return {n: _ORACLES[n] for n in _window_order(_ORACLES)}
+    return dict(_ORACLES)
 
 
 _LOADED = False

@@ -35,8 +35,8 @@ def _aqe() -> str:
     """AQE default (\"true\"). SPARK_GRAFT_AQE=false is a TEST lever for the
     layout-invariance sweep: every registered query must produce identical
     results with runtime re-planning disabled — results may depend only on
-    row values, never on how AQE lays the plan out (the round-7
-    branch-consistency bug class). Production keeps AQE on."""
+    row values, never on how AQE lays the plan out. Production keeps AQE
+    on."""
     return os.environ.get("SPARK_GRAFT_AQE", "true")
 
 

@@ -55,15 +55,14 @@ def stage_event_chunks(
     chunked = ev.withColumn(
         "chunk", F.format_string("%04d", F.ntile(n_chunks).over(w))
     )
-    # ONE partitionBy write instead of n filtered writes (r13): the old
-    # per-chunk loop re-executed the global-order window once PER CHUNK
-    # (n write jobs, each with the full single-task sort) — every
-    # streaming suite query pays this staging. The replay order contract
-    # (FileStreamSource processes oldest-modification-time first) is
-    # preserved EXPLICITLY: the loop below stamps strictly ascending
-    # mtimes in chunk order, where the sequential writes used to get them
-    # implicitly. Heartbeat chunks are staged afterwards with natural
-    # (later) wall-clock mtimes.
+    # ONE partitionBy write, not n filtered writes: a per-chunk loop would
+    # re-execute the global-order window once PER CHUNK (n write jobs,
+    # each with the full single-task sort), and every streaming suite
+    # query pays this staging. The replay order contract (FileStreamSource
+    # processes oldest-modification-time first) is kept EXPLICITLY: the
+    # loop below stamps strictly ascending mtimes in chunk order.
+    # Heartbeat chunks are staged afterwards with natural (later)
+    # wall-clock mtimes.
     (
         chunked.repartition(1)
         .write.mode("overwrite")
@@ -75,8 +74,7 @@ def stage_event_chunks(
     # partitionBy write, but consumers address every chunk=%04d by literal
     # path (sources/adapters.py snapshot(), the duplicate-chunk CDC
     # replays), so each must exist with a schema-bearing (possibly empty)
-    # parquet file — the contract the old per-chunk writer kept implicitly
-    # and the r13 single-write optimization broke (r13 verdict item 1).
+    # parquet file, which the single partitionBy write alone does not give.
     present = {e for e in os.listdir(out) if e.startswith("chunk=")}
     empty = None
     for i in range(1, n_chunks + 1):
@@ -119,9 +117,8 @@ def stage_heartbeats(
 
     max_ts = load(spark, sf_dir, "events").agg(F.max("ts")).first()[0]
     if max_ts is None:
-        # EMPTY feed (round-10 EMPTY-fixture catch): max(ts) of zero events
-        # is NULL and None + timedelta crashed every heartbeat-staged
-        # stream. An empty feed still needs heartbeats — they are what
+        # EMPTY feed: max(ts) of zero events is NULL, and None + timedelta
+        # would crash every heartbeat-staged stream. An empty feed still needs heartbeats — they are what
         # advances the watermark so the query drains and the sinks commit
         # their (empty) results. Any fixed base works; the beats only need
         # to ascend.
@@ -197,7 +194,7 @@ def drain_to_memory_table(
     # keeps four), so the session's 32 partitions mean ~128 state-store
     # round-trips per batch over kilobytes of data — pure fixed cost at
     # replay scale (measured on stream_stream_join_left: 51 s at 32
-    # partitions → ~36 s at 8 → ~24 s at 4; r14 re-measured at sf0.01:
+    # partitions → ~36 s at 8 → ~24 s at 4; at sf0.01:
     # stream_session 22.3 s at 4 → 17.7 s at 2 → 16.8 s at 1, hashes
     # identical at every count — 2 keeps the multi-partition state path
     # exercised while shedding most of the remaining store overhead).

@@ -28,7 +28,7 @@ from mongodb_mysql_cdc_spark.functions.compat import (
 )
 from mongodb_mysql_cdc_spark.registry import register
 
-# Round 8: every corpus-group sum/avg of a money-grid double in this file
+# Every corpus-group sum/avg of a money-grid double in this file
 # runs on exact decimal partials (scale-stable comparison contract —
 # functions/compat.py). Integral columns (l_quantity) keep double sums:
 # integers sum exactly below 2^53 in any order.
@@ -157,7 +157,7 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical totals region → nation → grand. nation/region are
     bounded dims (25/5 rows at ANY scale) — broadcast unconditionally.
 
-    EMPTY-input contract (round-10 EMPTY-fixture catch, whole grouping
+    EMPTY-input contract (found by the EMPTY fixture, whole grouping
     family): Spark's Expand-based rollup/cube/grouping-sets emits NO rows
     on an empty relation — the ANSI ``()`` grouping set's grand-total row
     (count 0, NULL aggregates; DuckDB and PostgreSQL emit it) never forms
@@ -237,12 +237,12 @@ def agg_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The arrays are emitted as a ','-joined string: array-typed result
     columns crash the driver's pandas canonicalizer (unhashable
-    numpy.ndarray during sort/factorize, observed in round 1), and the
+    numpy.ndarray during sort/factorize), and the
     joined form hashes identically on both engines. NULL shape: both
     sides skip NULL elements (collect_set / array_to_string), but on an
     ALL-null group Spark joins an empty array to '' while DuckDB's
     array_to_string returns NULL — the oracle's coalesce pins '' as the
-    contract (round-9 NULL-fixture catch)."""
+    contract."""
     li = load(spark, sf_dir, "lineitem")
     return li.groupBy("l_orderkey").agg(
         F.array_join(
@@ -273,7 +273,7 @@ def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACT grid cross-sums (functions/compat.grid_var_samp family):
     built-in stddev/var/corr on doubles carry a merge-order ulp that a
     fixed-decimal comparison contract turns into phantom mismatches as
-    the corpus grows (the class the round-8 sf1 AQE-off sweep caught) —
+    the corpus grows (an sf1 AQE-off sweep caught this class) —
     the grid forms accumulate exact decimal Σc/Σc²/Σcu and evaluate one
     agreed IEEE formula on both engines. The median is NOT O(1) —
     Spark's exact ``percentile`` buffers every group member, and an
@@ -315,7 +315,7 @@ def agg_minmax_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row achieving the extremum — the CDC last-writer-wins primitive
     (latest image per key) as a plain aggregate.
 
-    Tie contract (round-10 TIES-fixture catch): max_by/arg_max over a
+    Tie contract (found by the TIES fixture): max_by/arg_max over a
     bare timestamp is NONDETERMINISTIC when several rows per key share
     the extremal ts — each engine (and each Spark merge order) may keep
     a different row. The ordering key is therefore the lexicographic
@@ -324,7 +324,7 @@ def agg_minmax_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no STRUCT overload) — so the kept row is always the unique
     max/min-event_id row of the tie class on both engines.
 
-    PRECONDITION (ADVICE r10): the zero-padded rendering is order-
+    PRECONDITION: the zero-padded rendering is order-
     equivalent to (epoch_us(ts), event_id) only for NON-NEGATIVE values
     that fit the padding — lexicographic order inverts among negatives
     ('-…002' > '-…001' but -2 < -1) and an event_id wider than 12
@@ -410,9 +410,9 @@ def agg_approx_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 100 TB path where exact quantiles would sort every group. The
     accuracy parameter bounds sketch memory; rows-only check (sketch
     internals differ across engines) with the exact columns as the sanity
-    anchor. Round-4 driver lesson: the two percentiles are unpacked into
-    four SCALAR columns — array-typed output crashes the driver's pandas
-    canonicalizer (CORRECTNESS_r04: unhashable numpy.ndarray)."""
+    anchor. The two percentiles are unpacked into four SCALAR columns —
+    array-typed output crashes the driver's pandas canonicalizer
+    (unhashable numpy.ndarray)."""
     li = load(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.expr("approx_percentile(l_extendedprice, array(0.5, 0.95), 10000)").alias("ap"),
@@ -785,7 +785,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tie run, while RANGE accumulates every peer at once, so the
     crossing price is well-defined on both engines. One window + one
     5-row broadcast join — the same two-pass shape as every robust
-    statistic here. NULL contract (round-9 NULL-fixture catch): rows
+    statistic here. NULL contract: rows
     with a NULL price are excluded on BOTH engines before any weight
     accumulates — the median of the KNOWN prices; without the filter
     Spark's NULLS-FIRST window front-loads the null rows' weight while
@@ -808,7 +808,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (running sums + per-bucket totals); w_at_price is a float sum whose
     # shuffle-merge order is not bit-deterministic across re-executions,
     # so the offset a row receives could disagree by an ulp with its own
-    # local running sum (round-7 ADVICE). One materialization pins both
+    # local running sum. One materialization pins both
     # branches to identical bytes; the frame is |distinct prices| rows —
     # bounded by the 2-decimal price domain, not the corpus.
     collapsed = collapsed.localCheckpoint(eager=True)
@@ -825,9 +825,9 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     # boundary proxy: sample the RAW (flag, price) columns — a pruned
     # parquet scan — instead of running the machinery's boundary-sample
     # job over the collapse aggregation (measured 12.7× → ~4× at 100×
-    # back when that meant two jobs over the collapse lineage; round 8
-    # fused them to one, and `collapsed` is checkpointed above, but the
-    # pruned raw scan stays the cheapest boundary source). The raw
+    # with two jobs over the collapse lineage; the sample is now one job
+    # and `collapsed` is checkpointed above, but the pruned raw scan is
+    # still the cheapest boundary source). The raw
     # distribution over-weights duplicated prices, which only shifts
     # bucket balance, never output.
     cum = with_group_cumsum(
@@ -954,10 +954,9 @@ def agg_product(spark: SparkSession, sf_dir: str) -> DataFrame:
     size) is pinned against DuckDB's NATIVE product() plus DuckDB's own
     log-space sum. The product is reported as (mantissa, exponent) +
     the raw log — all three have corpus-size-INDEPENDENT relative
-    precision. The round-8 sf1 strict sweep caught the previous
-    spelling: it rounded the product itself to 4 decimals, and since
-    the product grows exponentially with group size, at 10× data
-    (~1.1e12) that demanded ~17 significant digits of cross-engine
+    precision. Rounding the product itself to 4 decimals would not do
+    (an sf1 strict sweep showed it): the product grows exponentially
+    with group size, so at 10× data (~1.1e12) that demands ~17 significant digits of cross-engine
     agreement where float64 holds ~16 — a comparison contract that
     silently tightens with scale. Positive domain by construction."""
     li = load(spark, sf_dir, "lineitem").where(

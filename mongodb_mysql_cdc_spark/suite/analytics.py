@@ -1,4 +1,4 @@
-"""Event-stream analytics (round-2 extension): funnel conversion,
+"""Event-stream analytics: funnel conversion,
 cohort retention, embedding normalization — the product-analytics queries
 a CDC-replicated events table exists to answer (SURVEY §0: the sink side
 of the pipeline is a warehouse; these are its canonical reads).
@@ -183,7 +183,7 @@ def dq_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias(f"{col}__rows"),
             # count arithmetic, not sum(isNull): sum over ZERO rows is
             # NULL while the profile of an empty table must say 0 nulls
-            # (round-10 EMPTY-fixture catch; matches the oracle spelling)
+            # (matches the oracle spelling)
             (F.count(F.lit(1)) - F.count(F.col(col))).alias(f"{col}__null"),
             F.count_distinct(F.col(col)).alias(f"{col}__distinct"),
             F.min(col).cast("string").alias(f"{col}__min"),
@@ -275,7 +275,7 @@ def graph_pagerank_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes = contrib_edges.select(F.col("src").alias("node")).distinct()
     n_nodes = nodes.count()  # one scalar; the rank loop itself never collects
     if n_nodes == 0:
-        # EMPTY graph (round-10 EMPTY-fixture catch): the 1/N seed is a
+        # EMPTY graph: the 1/N seed is a
         # plan-time constant, so ANSI mode raises DIVIDE_BY_ZERO during
         # constant folding even though no row would evaluate it. PageRank
         # of an empty graph is the empty ranking on both engines.
@@ -523,16 +523,16 @@ def analytics_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     replicated orders table. One per-customer aggregate, then three
     GLOBAL quintile rankings, then a pure CASE banding. The naive
     spelling (`ntile(5) OVER (ORDER BY ...)` with no partition) moves
-    every customer to ONE task — the only single-partition window the
-    round-5 plan lint found in the registry — so the quintiles are
+    every customer to ONE task (tools/plan_lint.py flags it), so the
+    quintiles are
     computed with operators/ranking.distributed_ntile instead:
     range-partitioned parallel sort + per-partition row_number +
     broadcast cumulative offsets, bit-identical to ntile (unique-key
     tie-breaks make the order total, so partition boundaries can't
     change any rank) with no serial stage at any scale.
 
-    ``monetary`` is a GRID sum, not a double sum (round-10 PERMUTE-axis
-    catch, the only machinery SORT KEY that was a non-integer double
+    ``monetary`` is a GRID sum, not a double sum (found by the PERMUTE
+    fixture; no other machinery SORT KEY is a non-integer double
     aggregate): a double sum's value depends on addition order, so two
     customers with identical order histories (the ≈sf1 fixture's
     copy-twins) tie bit-exactly under one row layout but differ by an
@@ -555,7 +555,7 @@ def analytics_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branch to the same bytes AND truncates the lineage the later
     # calls' branches re-execute.
     per = per.localCheckpoint(eager=True)
-    # boundary_df=per (r13): each call's boundary-sample job reads the
+    # boundary_df=per: each call's boundary-sample job reads the
     # 1-job checkpoint instead of re-executing the previous calls' window
     # layers; boundaries affect only bucket balance, never positions.
     pos = with_global_position(per, ["last_order", "o_custkey"], "_p_r")

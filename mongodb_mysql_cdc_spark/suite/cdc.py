@@ -184,11 +184,11 @@ def cdc_apply_batch_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE flagship op, batch form: fold the full envelope bag into the
     current-state table (LWW upsert + tombstone drop) — one shuffle.
 
-    r13 (guide §8: decide on small rows, do heavy per-row work once): the
-    ``after.k`` JSON extraction used to run on EVERY input event because
-    the parsed struct rode through the LWW aggregate — measured 0.27 s of
-    the query's 0.46 s at sf0.1 (noop sink), and at 100 TB it is a JSON
-    parse per oplog event instead of per surviving key. The envelope here
+    Decide on small rows, do heavy per-row work once: if the parsed
+    ``after`` struct rode through the LWW aggregate, the ``after.k`` JSON
+    extraction would run on EVERY input event — measured 0.27 s of the
+    query's 0.46 s at sf0.1 (noop sink), and at 100 TB a JSON parse per
+    oplog event instead of per surviving key. The envelope here
     carries the RAW ``props`` string through ``reconcile`` (max_by orders
     only by (ts, seq), never by the payload, so the same winner row is
     picked) and parses ``$.k`` after the tombstone filter — on one row
@@ -358,7 +358,7 @@ def cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     old consumer keeps working against the new producer.) The cutoff is a
     broadcast scalar, never collected.
 
-    NULL shape (round-9 NULL-fixture catches): (a) the oracle derives
+    NULL shape (found by the NULL fixture): (a) the oracle derives
     channel with null-PROPAGATING ``||`` — an unknown user has an
     unknown channel; DuckDB's concat() would skip the NULL and emit a
     bare 'ch_' while Spark's concat nulls out. (b) is_evolved is the

@@ -106,7 +106,7 @@ def sink_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # read back with the writer's schema: a restatement that leaves the
     # table EMPTY (zero events) must read back as empty, not die in
-    # schema inference (round-10 EMPTY-fixture catch)
+    # schema inference
     return spark.read.schema(ev.schema).parquet(out).select(
         "event_id", "event_type", "value", "day"
     )
@@ -439,7 +439,7 @@ def scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev.write.mode("overwrite").partitionBy("day").parquet(out)
     target = ev.agg(F.date_add(F.min("day"), 2).alias("d")).first()["d"]
     # explicit schema: an empty day-partitioned table has no directories
-    # to infer from (round-10 EMPTY-fixture catch); target=None then
+    # to infer from; target=None then
     # filters to the same zero rows the oracle returns
     return (
         spark.read.schema(ev.schema).parquet(out)
@@ -759,7 +759,7 @@ def scan_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # float(Decimal cents) is correctly rounded (= the oracle's
     # via-string cast of the exact integer), then the /100.0 and the
     # count division replay sql_grid_sum / sql_dec_avg bit-for-bit.
-    # EMPTY scan (round-10 EMPTY-fixture catch): observe's sum metric is
+    # EMPTY scan: observe's sum metric is
     # None over zero rows and the avg divides by n_rows=0 — emit the same
     # (0, NULL, 0, NULL) row the oracle's aggregation produces.
     n = int(m["n_rows"])

@@ -253,7 +253,7 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     ascending event_id among same-ts purchases makes last() pick the max,
     which is exactly the pre-aggregate's max_by tie-break.
 
-    NULL-key contract (round-9 NULL-fixture catch): the ASOF JOIN's
+    NULL-key contract: the ASOF JOIN's
     ``ON c.user_id = p.user_id`` is null-REJECTING equality, but Spark's
     window PARTITION BY groups NULL keys into a real partition — so a
     NULL-user purchase must never supply a value (the isNotNull gate on
@@ -381,10 +381,9 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     key) would instead bucket time into stride-sized cells and equi-join
     on the cell — same trick as the LSH band join.
 
-    EXHIBIT STATUS (round 10): output is quadratic in a hot entity BY
-    CONTRACT (the oracle computes the same pairs — on the sfskew fixture
-    both engines emit 68,584,839, verified by count parity per the
-    round-9 audit). For production use the registered sibling
+    EXHIBIT STATUS: output is quadratic in a hot entity BY CONTRACT (the
+    oracle computes the same pairs — on the sfskew fixture both engines
+    emit 68,584,839, verified by count parity). For production use the registered sibling
     join_interval_overlap_bounded — per-entity interval cap + `truncated`
     flag — which bounds work AND output. The probe side goes through the
     adaptive spread() with no keys (round-robin, and only when the scan is
@@ -444,10 +443,9 @@ FROM kept a JOIN kept b
 def join_interval_overlap_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Budgeted interval-overlap join: join_interval_overlap with a
     per-entity interval cap, so work AND output are bounded on a whale
-    key (round-9 skew audit: the unbudgeted exhibit emits 68.6M pairs on
-    the 50%-hot fixture and a 100 TB whale makes unbudgeted pair emission
-    a job-killer on ANY engine — same finding, same cure as
-    dedup_ngram_jaccard's round-5 posting budget).
+    key (the unbudgeted exhibit emits 68.6M pairs on the 50%-hot fixture,
+    and a 100 TB whale makes unbudgeted pair emission a job-killer on ANY
+    engine — same cure as dedup_ngram_jaccard's posting budget).
 
     Contract: each entity contributes only its first K=20 intervals by
     (o_orderdate, o_orderkey) — a deterministic prefix, so capped pairs
@@ -553,8 +551,8 @@ FROM probe p JOIN versions v
 )
 def join_interval_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range-bucketed point-in-time join for an EXTERNAL probe table —
-    the general-purpose bounded interval join the round-9 skew audit
-    identified as the one missing plan shape. join_temporal_scd2's
+    the general-purpose bounded interval join (the skew fixtures showed
+    it is the one plan shape the others do not cover). join_temporal_scd2's
     window-collapse fix only works when the probe IS the envelope feed;
     here the probe is lineitem (ship events mapped onto the SCD2 key and
     time domain: l_suppkey ⊂ user_id at every sf, shipdate folded into
@@ -658,14 +656,12 @@ def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FORWARD as-of: the EARLIEST purchase at-or-after each click — the
     attribution direction ("what did this click lead to"), mirror of the
     backward join_asof. Same fused single-scan shape, with the window
-    running DESC so first-after fills backward. Tie contract (round-10
-    TIES-fixture catch): at equal ts the purchase must sort BEFORE the
+    running DESC so first-after fills backward. Tie contract (found by
+    the TIES fixture): at equal ts the purchase must sort BEFORE the
     click in scan order or the inclusive <= match is silently dropped —
     ``_side`` therefore sorts ASCENDING (purchase=0 first) inside the
-    DESC scan; the original ``F.desc("_side")`` spelling excluded the
-    equal-ts purchase from the click's frame, a divergence invisible on
-    unique-ts data and caught the first time two event kinds shared a
-    timestamp. Among same-ts purchases event_id DESC makes last() pick
+    DESC scan; ``F.desc("_side")`` would exclude the equal-ts purchase
+    from the click's frame, a divergence invisible on unique-ts data. Among same-ts purchases event_id DESC makes last() pick
     the MIN event_id — exactly the pre-aggregate's arg_min tie-break.
     NULL-key contract: same isNotNull gate as join_asof — the ASOF JOIN
     equality never matches NULL user_ids, so a NULL-user purchase
@@ -745,8 +741,8 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Equal-ts purchase counts as backward (is_click sorts purchases first
     at a tied ts on both engines).
 
-    The forward fill runs as a DESC-ordered RUNNING frame (round 9,
-    caught by the sfskew fixture): Spark's WindowExec evaluates a
+    The forward fill runs as a DESC-ordered RUNNING frame (the sfskew
+    fixture shows why): Spark's WindowExec evaluates a
     [CURRENT ROW, UNBOUNDED FOLLOWING] frame by RESCANNING to the
     partition end per row — O(n²) in a partition, 6.6× wall on the
     50%-hot key at sf0.1 (9.2 s vs 1.4 s uniform). first_value over
@@ -850,8 +846,8 @@ def join_temporal_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     the query pattern that justifies keeping history next to current
     state. The oracle keeps the full interval-join spelling.
 
-    SKEW re-spell (round 9, caught by the sfskew fixture): the former
-    key-equi-join with a residual interval filter examines
+    SKEW (found by the sfskew fixture): a key-equi-join with a residual
+    interval filter examines
     |versions(k)| × |clicks(k)| candidate pairs per key — quadratic in
     a hot key (the 50%-hot fixture measured 6.2× wall vs uniform data
     at sf0.1; a 100 TB whale key makes it a serial bomb). But because

@@ -1,10 +1,6 @@
 """§2.10 deduplication family: exact, MinHash-LSH (+ clusters/survivors),
 SimHash, n-gram Jaccard, embedding-cosine near-dup.
 
-Split from suite/llm.py in round 2 (same queries, same names, same
-oracles — the determinism and 100 TB scale notes live in that module's
-original docstring, now distributed per-query).
-
 100 TB scale invariant for every member: candidate generation is an
 equi-join on a derived key (fingerprint / band signature / shingle /
 hamming bucket / GEMM block) — never an all-pairs product; only
@@ -205,7 +201,7 @@ def _minhash_star_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the full `cand` pair set) — but the edge count is ≤ |bands
     table| = 4·|docs| BY CONSTRUCTION, where the clique is C(g, 2) per
     g-member bucket. At 100 TB a 1M-copy boilerplate doc makes the
-    clique 5·10¹¹ pairs (round-8 100× fixture: 33M pairs from 50k docs)
+    clique 5·10¹¹ pairs (a 100× fixture: 33M pairs from 50k docs)
     while the star stays corpus-linear. The per-bucket min and the
     join-back both shuffle on the high-cardinality band key; a hot
     bucket joins its 1-row min fan-out linearly."""
@@ -258,7 +254,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     algorithm, oracle-checked against DuckDB's recursive-CTE reachability.
     Each doc maps to its cluster's min doc_id; keep one row per cluster_id
     and the corpus is deduplicated. Candidate edges are the bucket-linear
-    STAR spelling (round 8) — identical components to the all-pairs
+    STAR spelling — identical components to the all-pairs
     clique, corpus-linear edge count even when a dup group is huge."""
     pairs = _minhash_star_edges(spark, sf_dir)
     docs = load(spark, sf_dir, "documents").select("doc_id")
@@ -295,7 +291,7 @@ def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     Composition of candidate generation → connected components → keyed
     semi-join back to the corpus; at 100 TB the survivors join is a
     broadcast of the (tiny) cluster table against the corpus scan.
-    Candidate edges are the bucket-linear STAR spelling (round 8) —
+    Candidate edges are the bucket-linear STAR spelling —
     identical components to the all-pairs clique at corpus-linear cost."""
     pairs = _minhash_star_edges(spark, sf_dir)
     docs = load(spark, sf_dir, "documents")
@@ -414,8 +410,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     posting list is truncated to its first {K} doc_ids (deterministic
     row_number prefix), so one shingle can emit at most K·(K-1)/2
     candidate pairs no matter how adversarial the corpus — the worst case
-    is now BOUNDED, not argued (round-4 verdict: the ×10 all-dups fixture
-    went output-quadratic at 61 s; the budget makes it corpus-linear).
+    is BOUNDED, not argued (without the budget the ×10 all-dups fixture
+    goes output-quadratic at 61 s; with it, corpus-linear).
     Pairs that touched a truncated posting carry `truncated = true`
     (their `shared`, hence jaccard, is a lower bound); pairs of docs
     wholly inside every shared prefix are EXACT, and the denominator
@@ -604,7 +600,7 @@ def dedup_chunk_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the fingerprint stream across an exchange on the join
     # key: both self-join branches then hang off the SAME shuffle subtree
     # and Catalyst plans a ReusedExchange instead of exploding + md5-ing
-    # the corpus twice (the r2 minhash lesson)
+    # the corpus twice
     safe = chunks.join(capped, "sig").repartition(F.col("sig"))
     a = safe.select(F.col("sig"), F.col("doc_id").alias("doc_a"))
     b = safe.select(F.col("sig"), F.col("doc_id").alias("doc_b"))

@@ -1,5 +1,4 @@
-"""§2.10 multimodal columns + the Python-UDF surface. Split from
-suite/llm.py in round 2.
+"""§2.10 multimodal columns + the Python-UDF surface.
 
 Binary payloads (real WAV/BMP containers synthesized per document) ride
 as BinaryType columns; decode is a REAL header parser over Arrow-batched
@@ -107,18 +106,16 @@ def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``stride`` bytes stand in for ffmpeg keyframe extraction. The row
     blow-up happens at the edge, post-filter — the 100 TB-safe place.
 
-    Oracle note (re-spelled r12): frames are BYTE slices of the payload
-    (mapInPandas — exact bytes pinned by tests/test_llm.py), emitted as
-    UPPERCASE HEX on both engines. The old spelling cast the raw slice
-    to string and relied on a documented all-ASCII corpus precondition —
-    the TEXT-fixture × multimodal probe caught it: a byte window cutting
-    through a multi-byte codepoint yields invalid UTF-8, which survives
-    collect() but crashes the driver's Arrow toPandas path ('Wrapping …
-    failed'). DuckDB has no BLOB substring, but hex(BLOB) is pure ASCII,
-    so a CHARACTER slice of the hex at 2× offsets IS the byte slice —
-    byte-exact cross-engine parity at ANY corpus, precondition retired
-    (both engines emit uppercase hex; verified char-identical on
-    multi-byte input)."""
+    Oracle note: frames are BYTE slices of the payload (mapInPandas —
+    exact bytes pinned by tests/test_llm.py), emitted as UPPERCASE HEX on
+    both engines. Casting the raw slice to string would need an all-ASCII
+    corpus: a byte window cutting through a multi-byte codepoint yields
+    invalid UTF-8, which survives collect() but crashes the driver's
+    Arrow toPandas path ('Wrapping … failed'). DuckDB has no BLOB
+    substring, but hex(BLOB) is pure ASCII, so a CHARACTER slice of the
+    hex at 2× offsets IS the byte slice — byte-exact cross-engine parity
+    at ANY corpus (both engines emit uppercase hex; verified
+    char-identical on multi-byte input)."""
     from mongodb_mysql_cdc_spark.operators.multimodal import sample_frames
 
     media = with_payload(load(spark, sf_dir, "documents"))
@@ -218,8 +215,7 @@ def udf_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         n = len(pdf)  # the oracle's count(*) counts every group row
         # SQL regr_* semantics: a pair is excluded when EITHER side is
         # NULL. pandas' per-Series NaN skipping is NOT that (a row with
-        # only y missing would still feed var(x)) — drop pairwise first
-        # (round-9 NULL-fixture catch).
+        # only y missing would still feed var(x)) — drop pairwise first.
         fitf = pdf.dropna(subset=["user_id", "value"])
         x = fitf["user_id"].astype("float64")
         y = fitf["value"].astype("float64")
@@ -434,11 +430,11 @@ def udf_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose association differs from the oracle's sequential list_reduce
     by ~1 ulp, invisible under the 1e-4 grid at harness magnitudes but a
     hash mismatch at the extremes-vec fixture's 1e59 squared terms (1
-    ulp there ≈ 1e43 — the r12 accumulation-ORDER catch; 26 of the 50
+    ulp there ≈ 1e43 — an accumulation-ORDER difference; 26 of the 50
     ×1e30 vectors diverged). The column loop is dim-many vectorized adds
     (dim=64, FIXTURES.md) — still zero per-row Python. The integer
     n_pos fold is order-free; it is a cumsum-difference segment sum
-    rather than np.add.reduceat (ADVICE r12: reduceat's idx[i]==idx[i+1]
+    rather than np.add.reduceat (reduceat's idx[i]==idx[i+1]
     quirk returns the NEIGHBORING element for a zero-length list and
     raises IndexError when the final list is empty — the cumsum form
     gives 0 for every empty segment, the same contract the sq path

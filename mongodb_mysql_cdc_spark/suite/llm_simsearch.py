@@ -1,6 +1,6 @@
 """§2.10 similarity search: exact brute-force top-k (broadcast query set ×
 streamed corpus), LSH-bucketed ANN, IVF cell-restricted ANN, kNN
-classification. Split from suite/llm.py in round 2.
+classification.
 
 All vector math is a sequential left fold (`F.aggregate` / `list_reduce`)
 in DOUBLE — IEEE-exact and same-order on both engines, so no rounding.
@@ -37,8 +37,8 @@ def _scored_pairs(emb: DataFrame) -> DataFrame:
     once per vector, not per pair (the pair expression is a single dot
     fold); the values stay bit-identical to the oracle's per-pair form.
 
-    Zero-norm vectors are EXCLUDED from both sides (r12 extremes-vec
-    catch: cosine with an all-zero embedding is 0/0 — Spark ANSI raises
+    Zero-norm vectors are EXCLUDED from both sides (found by the
+    extremes-vec fixture: cosine with an all-zero embedding is 0/0 — Spark ANSI raises
     DIVIDE_BY_ZERO where DuckDB IEEE-propagates; the family contract is
     embedding_normalize's 'undefined direction → excluded', pinned here
     as norm > 0 filters in the SAME spelling on both engines)."""
@@ -108,8 +108,8 @@ def _bucket_col(vec: str = "embedding") -> F.Column:
     """Random-hyperplane LSH bucket: bit j = sign of <v, r_j>. The dot is
     a sequential double fold over zip_with → bit-identical to DuckDB.
 
-    Built as ONE Spark-SQL string → ONE py4j call (r13, guide §1 profile):
-    the Column-DSL form shipped each plane as F.lit(list) — which PySpark
+    Built as ONE Spark-SQL string → ONE py4j call: the Column-DSL form
+    would ship each plane as F.lit(list) — which PySpark
     expands to 64 per-element lit() round trips — plus ~10 round trips per
     HOF lambda, ~0.3 s of pure plan-build per bench run. The parsed tree
     uses the identical zip_with/aggregate/CASE functions, so semantics
@@ -162,11 +162,11 @@ def sim_search_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     traded per extra bit). At 100 TB the bucket join replaces the cross
     join: shuffle on bucket id, or broadcast the (tiny) bucketed query set
     as done here. Zero-norm vectors are excluded up front (undefined
-    cosine direction — the r12 extremes-vec contract, same spelling as
+    cosine direction — the extremes-vec contract, same spelling as
     embedding_normalize).
 
-    r14 (guide §2.4 remove shuffles): the 10-row QUERY side no longer
-    routes through the corpus's spread fan-out exchange — it reads the
+    No shuffle for the queries: the 10-row QUERY side does not route
+    through the corpus's spread fan-out exchange — it reads the
     raw table with the vec_id < {_N_QUERIES} predicate PUSHED to the scan
     (row-group pruning at scale), so the broadcast build waits on a
     filter, not an exchange. Only the corpus side (where the per-vector
@@ -252,8 +252,8 @@ def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Centroids here are a deterministic data-derived set so the DuckDB
     oracle reproduces cells exactly; production would k-means them.
     Zero-norm vectors are excluded everywhere — as centroids AND as
-    assignable vectors (undefined cosine direction; the r12
-    extremes-vec contract)."""
+    assignable vectors (undefined cosine direction; the extremes-vec
+    contract)."""
     emb = spread(load(spark, sf_dir, "embeddings"), "vec_id").filter(
         V.norm("embedding") > 0
     )
@@ -474,7 +474,7 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale = F.array_max(F.transform(v, F.abs)) / F.lit(127.0)
     s = e.select("vec_id", scale.alias("scale"), v.alias("v"))
     # scale = 0 ⇔ the all-zero vector: it quantizes to all-zero with
-    # recon_rmse 0 BY CONTRACT (r12 extremes-vec catch — x/0 is a Spark
+    # recon_rmse 0 BY CONTRACT (x/0 is a Spark
     # ANSI DIVIDE_BY_ZERO error; the CASE short-circuits the division on
     # both engines, identical spelling in the oracle)
     qv = F.transform(
@@ -555,7 +555,7 @@ def sim_search_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle can reproduce it exactly. Zero-norm vectors are excluded
     up front — before stage 1 — so a degenerate embedding can neither
     occupy a candidate slot nor reach the cosine (undefined direction;
-    the r12 extremes-vec contract)."""
+    the extremes-vec contract)."""
     emb = spread(load(spark, sf_dir, "embeddings"), "vec_id").filter(
         V.norm("embedding") > 0
     )
@@ -602,8 +602,8 @@ def _cov_pairs(dims: int = 8):
     return [(i, j) for i in range(dims) for j in range(dims) if i <= j]
 
 
-# Conditioning gate for the second-moment statistics ops (r12
-# extremes-vec catch): covar_samp is a FLOATING aggregate whose
+# Conditioning gate for the second-moment statistics ops (found by the
+# extremes-vec fixture): covar_samp is a FLOATING aggregate whose
 # merge-order noise is RELATIVE (~ulp · |cov|), while the comparison
 # contract rounds at an ABSOLUTE 1e-8 grid — at the fixture's 1e29
 # component magnitudes one merge-order ulp is ~1e42 and no rounding can
@@ -657,8 +657,8 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffled = 36 × partial-state, independent of corpus size. Full-width
     d² would use the same shape (d=64 → 2080 aggregates) or the grouped
     posexplode path if the aggregate count overflows codegen. Operates
-    on the conditioned validity domain 0 < ‖x‖ ≤ 1e3 (r12 extremes-vec
-    catch — see _SQL_COV_DOMAIN: outside it the absolute rounding
+    on the conditioned validity domain 0 < ‖x‖ ≤ 1e3 (see
+    _SQL_COV_DOMAIN: outside it the absolute rounding
     contract cannot absorb relative merge-order ulps)."""
     e = _cov_domain(load(spark, sf_dir, "embeddings"))
     pairs = _cov_pairs()
@@ -747,7 +747,7 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     64 doubles wide. The whitening/feature-reduction step a training
     pipeline runs after embedding_covariance — and it shares that op's
     conditioned validity domain 0 < ‖x‖ ≤ 1e3 for BOTH the statistics
-    and the projected population (r12 extremes-vec: a 1e29-magnitude
+    and the projected population (a 1e29-magnitude
     projection would put relative covar/eigenvector ulps above the
     absolute 4dp grid; see _SQL_COV_DOMAIN)."""
     d = _PCA_D
@@ -964,7 +964,7 @@ def search_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort spills); the fusion join then touches ≤ 2·20 rows per query —
     at 100 TB everything after candidate generation is querycount-sized,
     not corpus-sized. Zero-norm vectors are excluded from the SEMANTIC
-    retriever on both sides (undefined cosine direction; the r12
+    retriever on both sides (undefined cosine direction; the
     extremes-vec contract) — the lexical retriever is unaffected, which
     is exactly what fusion is for: a doc with a degenerate embedding can
     still be retrieved lexically."""

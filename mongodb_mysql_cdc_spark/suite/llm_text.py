@@ -1,6 +1,6 @@
 """§2.10 text analysis: tokenize, stats, quality scoring, token counting,
 lang-ID, document fingerprinting, PII redaction, repetition metrics,
-TF-IDF. Split from suite/llm.py in round 2.
+TF-IDF.
 
 Everything is built-in higher-order functions / regexp over the token
 array — zero Python in the hot path, no explode unless the output is
@@ -21,7 +21,7 @@ from mongodb_mysql_cdc_spark.registry import register
 
 # Shared DuckDB CTE: casefolded whitespace tokens — derived from the
 # functions/text.py builder so the Spark and oracle tokenizers cannot
-# drift (round-10 casefold contract).
+# drift (the casefold contract).
 TOKS_CTE = X.sql_toks_cte()
 
 
@@ -58,31 +58,30 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus term statistics: total occurrences + document frequency per
     token (§2.10 text_stats).
 
-    r13: two-level aggregation instead of count + countDistinct in one
-    groupBy. CORRECTED MECHANISM NOTE (r14, per the r13 verdict/advice —
-    the committed before-plan plans/r13/text_stats_before.txt contains
-    no Expand): Spark planned the old single-distinct form via
-    planAggregateWithOneDistinct — two exchanges whose FIRST already
-    carried distinct (token, doc_id) partial counts, the same bytes this
-    spelling shuffles — so the rewrite is roughly shuffle-neutral; it is
-    kept for its simpler two-level shape (hash-verified identical).
+    Two-level aggregation instead of count + countDistinct in one
+    groupBy. Spark plans the single-distinct form via
+    planAggregateWithOneDistinct (no Expand) — two exchanges whose FIRST
+    already carries distinct (token, doc_id) partial counts, the same
+    bytes this spelling shuffles — so the two-level form is roughly
+    shuffle-neutral; it is kept for its simpler shape (hash-verified
+    identical).
 
-    r14 (advice): doc_freq counts only non-NULL doc_id groups, matching
+    doc_freq counts only non-NULL doc_id groups, matching
     countDistinct's NULL-exclusion exactly instead of relying on the
     fixture invariant that doc_id is a never-nulled PK (make_skew.py
     PROTECTED_KEYS). Identical output on every fixture; identical even
     on adversarial null-bearing data.
 
-    r14 (guide §2 partitioning): ``spread(docs, "doc_id")`` before the
-    tokenize. The harness corpus is one single-row-group parquet file →
-    ONE input split, so explode+partial-agg ran serially on one core.
+    Partitioning: ``spread(docs, "doc_id")`` before the tokenize. The
+    harness corpus is one single-row-group parquet file → ONE input
+    split, so without it explode+partial-agg runs serially on one core.
     The fan-out exchange ships the raw docs (5k rows, ~600 KB at sf0.1 —
     far cheaper than the exploded token stream), and hashpartitioning by
     doc_id SATISFIES the (token, doc_id) grouping's clustered
     distribution, so the first aggregate needs no further exchange:
     exchange count stays 2, tokenize goes 32-way (0.412 → 0.285 s noop).
     At 100 TB the input-split probe makes spread a no-op and the plan is
-    byte-identical to the r13 shape."""
+    the plain two-level aggregate."""
     docs = load(spark, sf_dir, "documents")
     ex = spread(docs, "doc_id").select(
         "doc_id", F.explode(X.tokens(F.col("text"))).alias("token")
@@ -313,8 +312,8 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no explicit pre-explode size(s)>0 filter: explode drops empty
     # arrays, and Catalyst's InferFiltersFromGenerate re-adds the guard
     # below the repartition anyway (so the tokenizer runs 3x per ROW —
-    # the optimizer's floor; the round-10 plan pin bans the per-ELEMENT
-    # re-evaluation that made this query quadratic per document)
+    # the optimizer's floor; the plan pin bans the per-ELEMENT
+    # re-evaluation that would make this query quadratic per document)
     sh = spread(docs, "doc_id").select(
         "doc_id", X.word_shingles(toks, 3).alias("s")
     )
@@ -333,19 +332,18 @@ def _df_from_tf(tf: DataFrame) -> DataFrame:
     """Document frequency from the tf table — one row per (doc, token), so
     a plain count IS countDistinct(doc_id).
 
-    r13 (guide §2.4, remove shuffles/passes outright): the count aggregates
-    ``F.when(F.col("tf") >= 1, 1)`` instead of ``F.lit(1)`` — the same
-    value by construction (tf ≥ 1 on every row), but referencing the tf
-    column stops Catalyst from pruning the count out of this branch's
-    partial aggregate. With the count pruned, this subtree canonicalized
-    differently from the join's tf branch and the corpus was TOKENIZED
-    TWICE (two Generate+partial-agg map sides feeding two exchanges).
+    The count aggregates ``F.when(F.col("tf") >= 1, 1)`` instead of
+    ``F.lit(1)`` — the same value by construction (tf ≥ 1 on every row),
+    but referencing the tf column stops Catalyst from pruning the count
+    out of this branch's partial aggregate. With the count pruned, this
+    subtree canonicalizes differently from the join's tf branch and the
+    corpus is TOKENIZED TWICE (two Generate+partial-agg map sides feeding two exchanges).
     With it retained, the two exchange subtrees are canonically identical
     and AQE's ReusedExchange shares ONE map side (verified at runtime:
     ReusedExchange present, one FileScan+Generate of documents.text
     eliminated) — at 100 TB that is one full corpus tokenize pass saved.
 
-    r14 (advice): the count additionally requires doc_id IS NOT NULL so
+    The count additionally requires doc_id IS NOT NULL so
     df matches countDistinct(doc_id)'s NULL-exclusion exactly instead of
     relying on the fixture invariant that doc_id is a never-nulled PK.
     Both conjuncts are always-true on real data (tf ≥ 1 by construction,
@@ -420,15 +418,15 @@ def tfidf_weights(
     ln() differs by ulps across libm implementations → rounded to 6dp on
     both sides (the only rounding this module needs).
 
-    r14 (guide §2 partitioning): ``spread(docs, "doc_id")`` before the
-    tokenize — the single-row-group harness corpus arrives as ONE input
-    split, so the explode+partial-agg scan stage ran on one core. With
+    Partitioning: ``spread(docs, "doc_id")`` before the tokenize — the
+    single-row-group harness corpus arrives as ONE input split, so
+    without it the explode+partial-agg scan stage runs on one core. With
     the fan-out, hashpartitioning(doc_id) satisfies the (doc_id, token)
     grouping so tf completes with NO further exchange; the df branch and
     the join left side each evaluate the (now 32-way-parallel) tokenize
     — at harness scale two parallel passes beat one serial pass (0.597 →
     0.455 s noop at sf0.1). At 100 TB spread is a no-op and the plan
-    reverts EXACTLY to the r13 shape: exchange(doc_id, token) under both
+    is exchange(doc_id, token) under both
     branches, canonically equal, AQE ReusedExchange sharing ONE corpus
     tokenize (see _df_from_tf)."""
     docs = load(spark, sf_dir, "documents")
@@ -864,15 +862,14 @@ def token_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     language, not corpus: at 100 TB it is still ~10^6 rows), so the only
     corpus-sized shuffles are the two map-side-combined counts.
 
-    Round-5 respelling: the original shared a repartition(doc_id) of the
-    RAW TOKEN ARRAYS across the branches (AQE reused the exchange, but
-    that exchange ships every token array corpus-wide — measured 3.9× at
-    10× data, the registry's worst). Now each count branch explodes
+    No shared repartition(doc_id) of the RAW TOKEN ARRAYS across the
+    branches: AQE would reuse that exchange, but it ships every token
+    array corpus-wide (measured 3.9× at 10× data). Each count branch explodes
     straight out of its own scan (parallel, shuffle-free until the
     map-combined vocab aggregate) and the corpus totals are second-level
     sums OVER the count tables instead of separate corpus-sized counts:
-    10× growth 3.9× → 2.0×, 2.4× faster absolute. The split-per-shingle
-    re-evaluation the old barrier guarded against is neutralized by
+    10× growth 3.9× → 2.0×, 2.4× faster absolute. Split-per-shingle
+    re-evaluation without a barrier is neutralized by
     codegen subexpression elimination (probed with 2000-token docs:
     1.3× — linear, not quadratic)."""
     d = load(spark, sf_dir, "documents")
@@ -1075,7 +1072,7 @@ def tfidf_topk_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, partitioned by doc — no new corpus shuffle beyond tfidf's
     own.
 
-    r14: ``spread(d, "doc_id")`` fans the single-split harness corpus
+    ``spread(d, "doc_id")`` fans the single-split harness corpus
     out before the tokenize (same rationale and at-scale no-op as
     tfidf_weights; 0.896 → 0.547 s noop at sf0.1, hash-identical)."""
     d = load(spark, sf_dir, "documents")
@@ -1083,9 +1080,9 @@ def tfidf_topk_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(X.tokens(F.col("text"))).alias("token")
     )
     tf = ex.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
-    # r13: df from the tf table (one row per (doc, token) → count IS
-    # countDistinct) with the _df_from_tf reuse spelling — the raw-ex
-    # two-phase distinct re-tokenized the corpus a second time; n_docs
+    # df from the tf table (one row per (doc, token) → count IS
+    # countDistinct) with the _df_from_tf reuse spelling — a raw-ex
+    # two-phase distinct would re-tokenize the corpus a second time; n_docs
     # keeps its ex-derived spelling (docs with ≥1 token), same oracle.
     df = _df_from_tf(tf)
     n = ex.agg(F.count_distinct("doc_id").alias("n_docs"))

@@ -291,9 +291,9 @@ FROM pipe_lineitem
 
 # Window-form exact grid average for the QUALIFY oracle — the same
 # value dec_avg computes aggregate-side: exact decimal cent sum via
-# string to a bit-identical double, /scale, /count. The round-8 sf1
-# AQE-off sweep showed 6-dec-rounded double averages are a
-# scale-unstable comparison contract; with an EXACT average the
+# string to a bit-identical double, /scale, /count. 6-dec-rounded double
+# averages are a scale-unstable comparison contract (an sf1 AQE-off sweep
+# showed it); with an EXACT average the
 # QUALIFY predicate compares raw doubles identically on both engines.
 # Derived from compat.sql_dec_avg_over so the aggregate and window
 # spellings of the exact average move in lockstep.
@@ -324,10 +324,10 @@ def sql_qualify(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the QUALIFY spelling, proving the two forms equivalent. The
     average is the EXACT grid accumulator (functions/compat.dec_avg;
     the oracle spells the same value as a window over decimal cent
-    sums): the earlier 6dp-rounded double average was a scale-unstable
-    comparison contract — a merge-order ulp could flip the rounding and
-    with it a row's QUALIFY membership (the class the round-8 sf1
-    AQE-off sweep caught in ts_calendar_profile). With bit-identical
+    sums): a 6dp-rounded double average is a scale-unstable comparison
+    contract — a merge-order ulp can flip the rounding and with it a
+    row's QUALIFY membership (an sf1 AQE-off sweep caught this class in
+    ts_calendar_profile). With bit-identical
     averages on both engines the strict > compares raw doubles
     safely."""
     ev = load(spark, sf_dir, "events")

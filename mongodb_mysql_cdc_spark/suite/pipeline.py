@@ -1,4 +1,4 @@
-"""Training-data pipeline operators (round-2 extension beyond SURVEY §2.10):
+"""Training-data pipeline operators (an extension beyond SURVEY §2.10):
 stratified sampling, per-group reservoirs, benchmark decontamination,
 sequence packing, domain mixing, quality bucketing, and SCD2 change
 history — the curation stages a 100 TB pretraining pipeline runs between
@@ -193,14 +193,13 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     div budget, so a doc straddling a boundary starts the next bin's
     overflow (greedy packing, no splitting).
 
-    100 TB design (round 7): the running token total comes from
+    100 TB design: the running token total comes from
     operators/ranking.py's distributed per-group cumsum — a
-    Window.partitionBy(lang) on the 5-value key sorts corpus/5 rows in
-    ONE task per language. The machinery's boundary jobs prune to the
+    Window.partitionBy(lang) on the 5-value key would sort corpus/5 rows
+    in ONE task per language. The machinery's boundary jobs prune to the
     (lang, doc_id) key columns, so the expensive tokenize runs only in
-    the main pass. (The earlier spelling documented a (lang, shard)
-    production partitioning as the escape hatch; the machinery IS that
-    sharding, with the exact global-window output.)"""
+    the main pass. The machinery is a (lang, shard) partitioning with the
+    exact global-window output."""
     from mongodb_mysql_cdc_spark.operators.ranking import with_group_cumsum
 
     d = load(spark, sf_dir, "documents")
@@ -469,8 +468,8 @@ def corpus_prepare_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash."""
     counted = _corpus_clean_counted(spark, sf_dir)
     # The packing cumsum stays a plain per-lang window HERE (unlike the
-    # standalone pack_sequences, re-spelled on the distributed machinery
-    # in round 7): the machinery's boundary jobs re-execute this query's
+    # standalone pack_sequences, which runs on the distributed
+    # machinery): the machinery's boundary jobs re-execute this query's
     # whole dedup+decon lineage — nothing prunes, the dedup window and
     # anti-join must run — measured 4.5 s → 11.5 s at sf0.1 (2.6×). As a
     # single unpersisted dataflow exhibit, the per-lang window is the
@@ -538,8 +537,8 @@ def _bin_census(packed: DataFrame) -> DataFrame:
     oracle=_CORPUS_PREPARE_ORACLE,
 )
 def corpus_prepare_e2e_production(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION spelling of :func:`corpus_prepare_e2e` (round-7
-    verdict item 5) — same four stages, same oracle, but the shape a
+    """The PRODUCTION spelling of :func:`corpus_prepare_e2e` — same four
+    stages, same oracle, but the shape a
     real cluster runs: the dedup+decon intermediate is MATERIALIZED
     (localCheckpoint here; a parquet staging table in production), then
     the packing cumsum runs on the distributed ranking machinery exactly
@@ -548,8 +547,8 @@ def corpus_prepare_e2e_production(spark: SparkSession, sf_dir: str) -> DataFrame
     one materialization of the (doc_id, lang, n_tokens) intermediate —
     three narrow columns, the cheapest frame in the whole pipeline —
     after which the machinery's boundary-sample job reads materialized
-    rows instead of re-executing dedup+decon (the 2.6× trade measured in
-    round 7 that made the exhibit keep its window). Registered as a
+    rows instead of re-executing dedup+decon (the measured 2.6× trade
+    that makes the exhibit keep its window). Registered as a
     value-checked A/B so the exemption ledger can point at a real
     alternative, not a comment."""
     from mongodb_mysql_cdc_spark.operators.ranking import with_group_cumsum

@@ -23,7 +23,7 @@ from mongodb_mysql_cdc_spark.functions.compat import (
 )
 from mongodb_mysql_cdc_spark.registry import register
 
-# Exact comparison contract (round 8): l_quantity is integral (double sums
+# Exact comparison contract: l_quantity is integral (double sums
 # exact to 2^53 — safe at any corpus size), but the money sums are
 # corpus-sized accumulations of 2/4/6-decimal grids, so they run on the
 # grid accumulator (exact integer recovery via pure double ops, long cast,

@@ -110,12 +110,12 @@ FROM lineitem
 """,
 )
 def fn_math(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-canonicalizer note (round 2): DuckDB ``ceil``/``floor`` return
+    """Driver-canonicalizer note: DuckDB ``ceil``/``floor`` return
     DOUBLE and ``sign`` returns TINYINT where Spark returns BIGINT/DOUBLE —
-    every integral output is now explicitly BIGINT on BOTH sides so the
+    every integral output is explicitly BIGINT on BOTH sides so the
     textual value forms agree without any normalizer.
 
-    Log-domain contract (r11 EXTREMES catch): ln is defined for x > 0 —
+    Log-domain contract (found by the EXTREMES fixture): ln is defined for x > 0 —
     Spark's log() returns NULL outside the domain while DuckDB hard-errors
     (Out of Range on ln(0)), so the domain guard is EXPLICIT and identical
     on both engines: out-of-domain rows yield NULL by contract."""
@@ -449,7 +449,7 @@ def fn_trig(spark: SparkSession, sf_dir: str) -> DataFrame:
     exp / log10. All transcendentals differ by ulps across libm
     implementations → rounded to 6dp on both sides (the fn_math rule).
     log10 carries the same explicit x > 0 domain guard as fn_math's ln
-    (r11 EXTREMES catch: DuckDB hard-errors on log of zero where Spark
+    (DuckDB hard-errors on log of zero where Spark
     returns NULL — the guard pins NULL-outside-domain on both engines)."""
     li = load(spark, sf_dir, "lineitem")
     return li.select(
@@ -590,8 +590,8 @@ def fn_map2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map-typed column algebra (§2.8 breadth): construct from arrays,
     keys/values introspection, typed extraction, absent-key probe. Output
     columns are scalars/CSV strings only — map ordering is engine-defined,
-    so the map itself is never emitted (the r1 agg_collect lesson applied
-    to maps). DuckDB map extraction yields single-element lists, hence the
+    so the map itself is never emitted (array/map cells crash the
+    driver's pandas canonicalizer). DuckDB map extraction yields single-element lists, hence the
     ``[1]`` de-listing on the oracle side."""
     p = load(spark, sf_dir, "part")
     m = p.select(

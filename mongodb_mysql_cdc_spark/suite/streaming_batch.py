@@ -126,8 +126,8 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge semantics of session windows, which are the hardest stateful
     case (windows merge as late events bridge gaps). The ghost filter is
     NULL-SAFE: a plain ``!=`` evaluates NULL for a NULL user and
-    silently dropped every NULL-user session (round-9 NULL-fixture
-    catch) — NULL keys are real session groups on both engines."""
+    silently drops every NULL-user session — NULL keys are real session
+    groups on both engines."""
     from mongodb_mysql_cdc_spark.streaming.replay import (
         GHOST_USER,
         drain_to_memory_table,
@@ -289,8 +289,7 @@ def stream_stream_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     Outer results only emit when the watermark passes a left row's join
     window, so the replay appends far-future HEARTBEAT rows — the
     production idiom (Debezium heartbeats) — to flush the tail. Two
-    hard-won subtleties, found empirically (see the oracle mismatch
-    history in round-1 logs):
+    hard-won subtleties, found empirically from oracle mismatches:
 
     - The null-supplying side's join conjunct (s_type='signup') is pushed
       BELOW the right EventTimeWatermark operator, so that watermark only
@@ -324,7 +323,7 @@ def stream_stream_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             F.col("ts").alias("p_ts"),
         )
-        # r13 (guide §2.3: shuffle/state fewer bytes): drop non-purchase
+        # Shuffle/state fewer bytes: drop non-purchase
         # left rows BEFORE the join instead of filtering their junk
         # unmatched-outer emissions afterwards — the left state store then
         # holds purchases only (10× smaller here; at 100 TB the difference

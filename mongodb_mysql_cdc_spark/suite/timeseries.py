@@ -1,4 +1,4 @@
-"""Hypertable-style time-series operators (round-3 extension): gap fill
+"""Hypertable-style time-series operators: gap fill
 with forward fill, OHLC bucket downsampling, and z-score anomaly flagging
 over the ``events`` stream — the continuous-aggregate reads a TimescaleDB /
 Influx-class user of the replicated warehouse expects.
@@ -80,11 +80,11 @@ def ts_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("bucket")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    # r14: forward-fill RAW in the window projection, round in a separate
+    # Forward-fill RAW in the window projection, round in a separate
     # select — hround's half-up CASE references its operand ~6× and
     # window-context extraction lifts every reference into its own window
-    # expression, so the last(ignorenulls) running aggregate was computed
-    # 6× per grid row (the win_running pathology; 1.169 → 0.984 s noop at
+    # expression, so rounding inside would compute the last(ignorenulls)
+    # running aggregate 6× per grid row (the win_running pathology; 1.169 → 0.984 s noop at
     # sf0.1, hash-identical).
     return (
         grid.join(hourly, ["user_id", "bucket"], "left")
@@ -237,8 +237,7 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     companion to ``ts_gapfill``'s locf: each missing hour gets the value
     on the straight line between its nearest observed neighbors.
 
-    SCALE re-spell (round 10, caught by the registry-wide frame lint the
-    round-9 join_asof_nearest fix motivated): the forward anchors used a
+    SCALE (plan_lint's registry-wide frame rule): forward anchors over a
     [CURRENT ROW, UNBOUNDED FOLLOWING] frame, which WindowExec evaluates
     by RESCANNING to the partition end per row — O(cells²) per user.
     Invisible on the fixtures (the partition is the hourly GRID, ≤720
@@ -250,8 +249,8 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the cost of one extra in-partition sort (same single exchange;
     the bucket is unique per (user, bucket) so the reversal is exact,
     no tie to break). The oracle keeps the forward-frame SQL: DuckDB's
-    window engine evaluates it without the rescan, and the round-9
-    lesson is pinned mechanically by plan_lint's fwd_unbounded_frame
+    window engine evaluates it without the rescan, and the rule is
+    pinned mechanically by plan_lint's fwd_unbounded_frame
     rule (empty exemption list) rather than by this one site.
 
     The gap ratio is a quotient of exact integer microsecond deltas, so
@@ -366,7 +365,7 @@ def anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# EWMA weight tables (r11 EXTREMES re-spell): 0.7^j and the running
+# EWMA weight tables (found by the EXTREMES fixture): 0.7^j and the running
 # weight sums, computed ONCE in Python and embedded as the SAME decimal
 # literals in both spellings. Each engine's libm pow() may differ by
 # ulps — invisible under 6-dec rounding at harness magnitudes (~1e2),
@@ -381,9 +380,8 @@ def anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
 # unquoted CAST(x AS DOUBLE) still goes THROUGH the decimal: DuckDB's
 # decimal→double conversion double-rounds 17-significant-digit values
 # (int mantissa > 2^53 rounds once, the /10^s rounds again — measured 1
-# ulp off on 1 of the 20 running-sum entries, the m=14 sum; re-measured
-# r12 per ADVICE, matching the hazard tripwire in the string-cast
-# property test), which is exactly the
+# ulp off on 1 of the 20 running-sum entries, the m=14 sum, matching the
+# hazard tripwire in the string-cast property test), which is exactly the
 # compat.py via-string rule. String→double is correctly rounded in both
 # engines (shortest-repr round-trip), so the pinned weights are
 # bit-identical.
@@ -432,15 +430,13 @@ def ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic) and reduced with JVM-side higher-order functions; 20
     doubles per row, one shuffle on user_id. Mirrors DuckDB's list() OVER
     + list_reduce on the oracle side — a true cross-engine check of the
-    same algebra in two HOF dialects. NULL shape (round-9 NULL-fixture
-    catch): missing observations are SKIPPED — Spark's collect_list
+    same algebra in two HOF dialects. NULL shape: missing observations are SKIPPED — Spark's collect_list
     already drops them; the oracle list_filters to match (DuckDB's
     list() keeps NULL elements, which would null the whole reduce). An
     all-null frame yields NULL on both sides (explicit size guard —
     DuckDB's init-less list_reduce crashes on empty lists). Weights and
     their running sums are PINNED literal tables (see _EWMA_W above) —
-    the r11 EXTREMES fix for cross-engine libm pow() drift at extreme
-    magnitudes; the denominator is one table lookup, not a second fold."""
+    so cross-engine libm pow() drift cannot show at extreme magnitudes; the denominator is one table lookup, not a second fold."""
     ev = load(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -557,10 +553,9 @@ def ts_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return capped.groupBy("user_id", "bucket").agg(
         F.count(F.lit(1)).alias("n_segments"),
         # exact decimal-product numerator (grid_wsum: cents × integer µs
-        # weight multiplied in DECIMAL(19,0) — the r11 EXTREMES catch:
-        # the former grid recovery of the DOUBLE product value·w was
-        # inexact past 2^53 and its long cast wrapped at ±1e9 money ×
-        # 3.6e9 µs ≈ 3.6e20) over an exact integer denominator: the
+        # weight multiplied in DECIMAL(19,0) — a grid recovery of the
+        # DOUBLE product value·w is inexact past 2^53 and its long cast
+        # wraps at ±1e9 money × 3.6e9 µs ≈ 3.6e20) over an exact integer denominator: the
         # scale-stable weighted-mean contract at ANY money magnitude
         hround(
             grid_wsum(F.col("value"), F.col("w"), 2) / F.sum("w").cast("double"),
@@ -674,8 +669,7 @@ def ml_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     unique event_id tiebreak keeps cross-engine rank order
     deterministic, and with a total order percent_rank is exactly
     (pos−1)/(n−1). NULL order pinned NULLS FIRST on both engines (the
-    machinery's convention; DuckDB windows default NULLS LAST — round-9
-    NULL-fixture catch)."""
+    machinery's convention; DuckDB windows default NULLS LAST)."""
     from mongodb_mysql_cdc_spark.operators.ranking import with_group_position
 
     ev = load(spark, sf_dir, "events")
@@ -839,10 +833,10 @@ def ts_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst plans a single exchange+sort like win_running_distinct).
     The synthetic equity curve is the centered-value cumsum per user.
 
-    Exactness contract (r11 EXTREMES catch): a DOUBLE running sum's
+    Exactness contract (found by the EXTREMES fixture): a DOUBLE running sum's
     association order differs between engines (Spark folds the frame
     sequentially, DuckDB may use a segment tree), so at ±1e9 money
-    magnitudes the cancellation residue diverged in the 6th decimal.
+    magnitudes the cancellation residue diverges in the 6th decimal.
     The curve is therefore accumulated in integer CENTS (the grid_sum
     recovery, centered on 5000 cents = 50.00) — running integer sums
     are association-free, so both engines agree bit-for-bit at any

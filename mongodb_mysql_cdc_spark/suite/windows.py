@@ -61,8 +61,7 @@ FROM spend
 """,
 )
 def win_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """rank / dense_rank / ntile per nation — re-spelled off the Window
-    (round 7): the input is a PER-CUSTOMER aggregate (grows with the
+    """rank / dense_rank / ntile per nation — without a Window: the input is a PER-CUSTOMER aggregate (grows with the
     corpus) and c_nationkey has 25 values, so Window.partitionBy is 25
     tasks sorting corpus/25 rows each at any scale. The tie-aware ranks
     come from the distinct-spend histogram: rank of every row tied at
@@ -94,11 +93,10 @@ def win_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle-merge order is not bit-deterministic, so re-executing the
     # aggregation per branch could flip hround by 0.01 on a round-half
     # boundary and silently drop that customer from the float-valued
-    # (nation, spend) equi-join (round-7 ADVICE). Materializing once
-    # pins every branch to identical bytes — and the machinery's
-    # boundary-sample job now reads the checkpointed rows instead of
-    # re-executing the customer⋈orders aggregation (the 4.8×-at-100×
-    # boundary cliff in BASELINE.md round 7).
+    # (nation, spend) equi-join. Materializing once pins every branch to
+    # identical bytes — and the machinery's boundary-sample job reads the
+    # checkpointed rows instead of re-executing the customer⋈orders
+    # aggregation (a 4.8× cliff at 100× data, BASELINE.md).
     spend = spend.localCheckpoint(eager=True)
     hist = spend.groupBy("c_nationkey", "_neg", "spend").agg(
         F.count(F.lit(1)).alias("_cnt")
@@ -157,7 +155,7 @@ def win_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Exact decimal running sum (round 8): a cumulative double sum's
+# Exact decimal running sum: a cumulative double sum's
 # magnitude grows with the partition length while the 2-decimal rounding
 # granularity doesn't, and the two engines associate frame sums
 # differently (sequential vs segment tree) — the scale-tightening
@@ -190,14 +188,14 @@ def win_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running totals (ROWS frame), moving average, and a RANGE frame
     (value-based window) over the event stream.
 
-    r14 (guide §1.2 per-task work): the moving average is materialized
-    RAW in the window projection and rounded in a separate select.
-    ``hround``'s half-up CASE references its operand ~6 times, and
-    window-context extraction lifts EVERY reference into its own window
-    expression — the r13 plan computed the identical sliding
+    Per-task work: the moving average is materialized RAW in the window
+    projection and rounded in a separate select. ``hround``'s half-up
+    CASE references its operand ~6 times, and window-context extraction
+    lifts EVERY reference into its own window expression — rounding
+    inside the window projection computes the identical sliding
     ``avg(value)`` frame aggregate 7× per row (_we1.._we6 in the
-    committed before-plan). Rounding a concrete column afterwards leaves
-    ONE avg window expression; output is bit-identical (same avg, same
+    committed before-plan). Rounding a concrete column
+    afterwards leaves ONE avg window expression; output is bit-identical (same avg, same
     rounding, measured hash-equal; 0.477 → 0.359 s noop at sf0.1)."""
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -271,8 +269,7 @@ def win_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
     and percent_rank = (pos−1)/(n−1), cume_dist = pos/n exactly. NULL
     order: the machinery ranks NULL values FIRST (bucket 0 + Spark's
     ascending default); the oracle pins the same with NULLS FIRST —
-    DuckDB's window default is NULLS LAST (round-9 NULL-fixture
-    catch)."""
+    DuckDB's window default is NULLS LAST."""
     from mongodb_mysql_cdc_spark.operators.ranking import with_group_position
 
     ev = load(spark, sf_dir, "events")
@@ -487,9 +484,8 @@ def win_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     (avg of the two middles on even counts) is pinned by the oracle.
     NULL shape: both sides skip NULL values in the frame (collect_list /
     median both null-skipping); an ALL-null frame leaves svals EMPTY —
-    the size-0 guard returns NULL exactly like DuckDB's median (round-9
-    NULL-fixture catch: the unguarded midpoint indexed svals[-1] and
-    crashed)."""
+    the size-0 guard returns NULL exactly like DuckDB's median (an
+    unguarded midpoint would index svals[-1] and crash)."""
     ev = load(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -537,9 +533,8 @@ def win_ratio_to_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel, zero WindowExec. 8dp rounding absorbs the summation-order
     ulps (it already had to: DuckDB's window sums a different order).
     The join-back is NULL-SAFE on the flag: window PARTITION BY keeps a
-    NULL group key as a real partition, so the re-spell's join must too
-    (round-9 NULL-fixture catch: the name equi-join silently dropped
-    every NULL-flag row)."""
+    NULL group key as a real partition, so the join must too (a name
+    equi-join would silently drop every NULL-flag row)."""
     li = load(spark, sf_dir, "lineitem")
     flag_sums = li.groupBy("l_returnflag").agg(
         F.sum("l_extendedprice").alias("_flag_sum")

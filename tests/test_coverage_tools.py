@@ -1,105 +1,32 @@
-"""Unit tests for tools/coverage_report.py's --stale machinery (no Spark).
-
-The stale check is what decides which green queries owe a re-verify
-window slot; a silent extraction failure would under-rotate the driver
-window, which is exactly how round-4's backlog undercount happened.
+"""Tests for the tools/ layer: the sweep subsets and readership data, the
+plan_lint rules, the order-invariance comparator, the timing tools' shared
+helpers, and the paths that gate scripts and recipes name.
 """
 
 from __future__ import annotations
 
-import json
+import re
 import sys
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT / "tools"))
 
-import coverage_report as cr  # noqa: E402
 
-
-def test_query_segment_includes_decorator_and_body():
-    src = (ROOT / "mongodb_mysql_cdc_spark/suite/llm_text.py").read_text()
-    seg = cr._query_segment(src, "tfidf")
-    assert seg is not None
-    assert seg.startswith("@register")       # decorator included …
-    assert "oracle=" in seg                  # … because it carries the SQL
-    assert "def tfidf" in seg
-    assert cr._query_segment(src, "no_such_query") is None
-
-
-def test_round_commit_resolves_markers():
-    assert cr._round_commit("05") is not None
-    assert cr._round_commit("99") is None
-
-
-def test_driver_window_contract():
-    """The driver verifies the FIRST 50 queries() names. The window list
-    must therefore be exactly 50 valid, distinct, registered names —
-    a typo here silently wastes verification slots (the round-4 backlog
-    undercount class)."""
-    from mongodb_mysql_cdc_spark import registry
-
-    w = registry._DRIVER_WINDOW
-    qs = registry.queries()
-    assert len(w) == 50
-    assert len(set(w)) == 50
-    assert all(n in qs for n in w), [n for n in w if n not in qs]
-    assert list(qs)[:50] == w
-
-
-def test_stale_flags_an_edited_segment():
-    # a green query whose segment is byte-identical at its marker commit
-    # must NOT flag; simulate an edit by asking against an older round
-    # where tfidf is KNOWN re-spelled (r5 rewrite + r6 cutover vs r1)
-    stale = dict(cr.stale_queries({"tfidf": "01"}))
-    assert "tfidf" in stale
-
-
-def test_driver_evidence_keeps_latest_green_round(tmp_path):
-    """Re-verified ⇒ not stale: a query green in r01 AND re-verified in
-    a later round must report the LATER round, so --stale diffs against
-    the code its newest evidence was recorded under (keeping the
-    earliest round made every re-verified query stale forever).
-
-    Uses a synthetic two-round fixture — the round-7 verdict flagged the
-    previous literal `== "06"` assertion, which broke the moment the
-    driver dropped CORRECTNESS_r07.json with a fresh join_asof row."""
-    green = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
-    red = {"rows_match": False, "schema_match": True, "hash_match": False, "err": "boom"}
-    rows_only = {"rows_match": None, "err": "no_oracle", "spark_rows": 7}
-    (tmp_path / "CORRECTNESS_r01.json").write_text(
-        json.dumps({"a": green, "b": green, "c": green})
-    )
-    (tmp_path / "CORRECTNESS_r02.json").write_text(
-        json.dumps({"a": green, "b": red, "c": rows_only})
-    )
-    ev = cr.driver_evidence(paths=[str(p) for p in tmp_path.glob("*.json")])
-    assert ev["a"] == "02"      # re-verified green → latest round wins
-    assert ev["b"] == "01"      # later RED row must NOT advance evidence
-    assert ev["c"] == "02"      # rows-only (no_oracle + count) counts as green
-
-
-def test_driver_evidence_monotone_on_real_files():
-    """Against the real repo files: pricing_summary has been green since
-    r01 and re-verified since; its evidence must be ≥ r06 (ordering, not
-    a literal round — the driver appends files every round) and not
-    stale at a HEAD that hasn't touched it since. (Was join_asof until
-    the round-9 NULL-fixture re-spell made that one legitimately
-    stale.)"""
-    ev = cr.driver_evidence()
-    assert ev["pricing_summary"] >= "06"
-    assert "pricing_summary" not in dict(
-        cr.stale_queries({"pricing_summary": ev["pricing_summary"]})
-    )
-
-
-def test_stale_warns_on_unresolvable_round_marker(capsys):
-    """A round with no marker commit yet (the current round before its
-    verdict files land) must WARN, not silently treat its queries as
-    fresh — the silent skip is the round-4 undercount failure mode."""
-    out = cr.stale_queries({"tfidf": "99"})
-    assert out == []
-    assert "no 'round 99:' marker" in capsys.readouterr().err
+def test_named_tool_paths_exist():
+    """Every tools/<name>.(py|sh|json) that a gate script, the README or
+    the verify recipe names must exist, so no gate stage or recipe points
+    at a deleted tool."""
+    docs = [*sorted((ROOT / "tools").glob("*.sh")), ROOT / "README.md",
+            ROOT / ".claude/skills/verify/SKILL.md"]
+    named = {
+        (doc.relative_to(ROOT).as_posix(), m)
+        for doc in docs
+        for m in re.findall(r"tools/[\w.-]+?\.(?:py|sh|json)\b", doc.read_text())
+    }
+    assert named
+    missing = sorted((doc, path) for doc, path in named if not (ROOT / path).is_file())
+    assert not missing, missing
 
 
 def test_subsets_are_registered_and_headline_synced():

@@ -81,23 +81,18 @@ def test_registry_wide_output_and_plan_invariants(spark):
     assert not offenders, offenders
 
 
-def test_driver_window_is_the_first_fifty():
-    """The driver verifies the FIRST 50 names in queries() order — the
-    window rotation is round strategy, so a regression here silently
-    wastes a whole round of correctness evidence."""
+def test_registry_order_is_registration_order():
+    """queries() and oracles() hand out names in registration order, with
+    no reordering layered on top, and over the whole registry only the
+    approximate sketches lack an oracle: each gets the driver's weaker
+    rows-only check and a pytest accuracy anchor as the stronger one."""
     from mongodb_mysql_cdc_spark import registry
 
     q = list(registry.queries())
-    window = [n for n in registry._DRIVER_WINDOW if n in set(q)]
-    assert len(window) == 50, f"window resolves to {len(window)} names"
-    assert q[:50] == window
-    # and every windowed name with an oracle is genuinely checkable
-    oracles = registry.oracles()
-    no_oracle = [n for n in window if n not in oracles]
-    # rows-only-by-design sketches: the driver records a weaker rows-only
-    # row; each has a pytest accuracy anchor as the stronger check.
-    assert set(no_oracle) <= {
+    assert q == list(registry._QUERIES)
+    assert list(registry.oracles()) == list(registry._ORACLES)
+    assert set(q) - set(registry.oracles()) == {
+        "agg_approx_distinct",
         "agg_approx_quantile",
         "agg_hll_sketch",
-        "agg_approx_distinct",
-    }, no_oracle
+    }

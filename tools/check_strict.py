@@ -27,7 +27,9 @@ from __future__ import annotations
 
 import argparse
 import datetime as _dt
+import os
 import sys
+import tempfile
 import time
 from pathlib import Path
 
@@ -140,7 +142,13 @@ def main() -> int:
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
+    args.sf = str(Path(args.sf).resolve())
 
+    # Start the JVM and its Python workers outside the repo, the way the
+    # driver runs: a kernel or DataSource class that pickles by reference
+    # (a module-level def) then fails here, because the workers cannot
+    # import mongodb_mysql_cdc_spark from their cwd.
+    os.chdir(tempfile.mkdtemp(prefix="check_strict_"))
     import __spark_entry__ as e
 
     qs = e.queries()

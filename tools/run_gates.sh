@@ -1,28 +1,22 @@
 #!/usr/bin/env bash
-# Round-end gate sequence — every check the driver (or the judge) will
-# run, in the order that fails fastest. See .claude/skills/verify for
-# what each gate catches. Streaming checkpoint-restart tests run in a
-# serialized second stage (their own process, nothing else competing
-# for the JVM) — round-7 verdict item 2.
+# Gate sequence, fail-fast: every check in the order that fails fastest.
+# See .claude/skills/verify for what each gate catches. Streaming
+# checkpoint-restart tests run in a serialized second stage (their own
+# process, nothing else competing for the JVM).
 #
-# r14 (verdict item 7): the run is BOUND to a git HEAD mechanically.
-# Every gate records the HEAD it ran under; the closing artifact
-# GATES_r${ROUND}.json is only written if HEAD never changed mid-run,
-# and prebench.py --require-gates refuses to produce the round-end
-# bench artifact unless that file exists and matches the current HEAD —
-# so a "gates green" claim can no longer drift from the commit it
-# describes (the r13 regression shipped exactly that way).
+# The run is bound to one git HEAD: GATES.json (the HEAD, the dirty-file
+# count at start and the green gates) is written only if HEAD never moved
+# mid-run, so a "gates green" record cannot drift from the commit it
+# describes.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-ROUND="${ROUND:-14}"
 HEAD_START="$(git rev-parse HEAD)"
 DIRTY="$(git status --porcelain | wc -l)"
-declare -a GATE_NAMES=() GATE_HEADS=()
+declare -a GATE_NAMES=()
 
 record() {
   GATE_NAMES+=("$1")
-  GATE_HEADS+=("$(git rev-parse HEAD)")
 }
 
 echo "== gates @ ${HEAD_START} (dirty files: ${DIRTY}) =="
@@ -55,17 +49,13 @@ echo "== plan lint (scale-killer hunt, all registered queries) =="
 python tools/plan_lint.py
 record plan_lint
 
-echo "== strict oracle sweep (Spark vs DuckDB, driver-faithful) =="
+echo "== strict oracle sweep (Spark vs DuckDB, driver-faithful, scratch cwd) =="
 python tools/check_strict.py
 record check_strict
 
 echo "== sink partition invariance (local[7]: the streaming sinks at the session's shuffle partitions) =="
 SPARK_GRAFT_CPUS=7 python tools/check_strict.py cdc_apply_stream cdc_scd2_stream cdc_apply_stateful
 record sink_partition_invariance_local7
-
-echo "== driver window simulation (plain session, scratch cwd) =="
-python tools/driver_sim.py --window
-record driver_sim_window
 
 echo "== headline bench =="
 SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" python bench.py
@@ -74,25 +64,23 @@ record bench
 HEAD_END="$(git rev-parse HEAD)"
 if [ "${HEAD_START}" != "${HEAD_END}" ]; then
   echo "HEAD moved during the gate run (${HEAD_START} -> ${HEAD_END});" \
-       "refusing to write GATES_r${ROUND}.json — re-run at a fixed HEAD" >&2
+       "refusing to write GATES.json — re-run at a fixed HEAD" >&2
   exit 1
 fi
 
-python - "$ROUND" "$HEAD_START" "$DIRTY" "${GATE_NAMES[@]}" <<'EOF'
+python - "$HEAD_START" "$DIRTY" "${GATE_NAMES[@]}" <<'EOF'
 import json, sys, time
-rnd, head, dirty, *names = sys.argv[1:]
+head, dirty, *names = sys.argv[1:]
 out = {
-    "round": int(rnd),
     "head": head,
     "dirty_files_at_start": int(dirty),
     "finished_utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     "gates_green_at_head": names,
 }
-path = f"GATES_r{rnd}.json"
-with open(path, "w") as f:
+with open("GATES.json", "w") as f:
     json.dump(out, f, indent=1)
     f.write("\n")
-print(f"wrote {path} (all gates green at {head})")
+print(f"wrote GATES.json (all gates green at {head})")
 EOF
 
 echo "ALL GATES GREEN"
