@@ -23,27 +23,24 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-def shuffle_partitions() -> int:
-    """Shuffle-partition default — cores locally; SPARK_GRAFT_SHUFFLE is a
-    TEST lever for the cluster-shape rehearsal (e.g. 1024: a real
-    cluster's partition count, and the ranking machinery's bucket-cap
-    regime) without changing executor-thread count."""
-    return int(os.environ.get("SPARK_GRAFT_SHUFFLE", default_parallelism()))
-
-
-def _aqe() -> str:
-    """AQE default (\"true\"). SPARK_GRAFT_AQE=false is a TEST lever for the
-    layout-invariance sweep: every registered query must produce identical
-    results with runtime re-planning disabled — results may depend only on
-    row values, never on how AQE lays the plan out. Production keeps AQE
-    on."""
-    return os.environ.get("SPARK_GRAFT_AQE", "true")
+def driver_memory() -> str:
+    """Driver heap: SPARK_GRAFT_DRIVER_MEM verbatim when set (the
+    deployment override), else half the machine's physical RAM in whole
+    GiB, at least 1g — a fixed default larger than the box makes the JVM
+    reserve a heap it can never back."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, phys // 2 // 2**30)}g"
 
 
 def _extra_conf() -> list[tuple[str, str]]:
-    """SPARK_GRAFT_EXTRA_CONF="k=v;k=v" — generic TEST lever for
-    execution-path invariance sweeps (e.g. wholeStage codegen off,
-    vectorized parquet reader off). Empty in production."""
+    """SPARK_GRAFT_EXTRA_CONF="k=v;k=v" — the TEST lever for the
+    invariance sweeps (e.g. spark.sql.adaptive.enabled=false,
+    spark.sql.shuffle.partitions=1024, wholeStage codegen off). Empty in
+    production. Its entries come last in ``_runtime_conf``, so they win
+    over the engine defaults."""
     raw = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
     out = []
     for item in raw.split(";"):
@@ -59,10 +56,10 @@ def _runtime_conf() -> list[tuple[str, str]]:
     a session it is handed."""
     return [
         ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.adaptive.enabled", _aqe()),
+        ("spark.sql.adaptive.enabled", "true"),
         ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
         ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.shuffle.partitions", str(shuffle_partitions())),
+        ("spark.sql.shuffle.partitions", str(default_parallelism())),
         ("spark.sql.execution.arrow.pyspark.enabled", "true"),
         ("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)),
         # PySpark 4's per-call origin capture (DataFrame debugging) costs 4
@@ -76,7 +73,7 @@ def _runtime_conf() -> list[tuple[str, str]]:
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
         # custom Python DataSource filter pushdown (scan_python_datasource_pushdown)
         ("spark.sql.python.filterPushdown.enabled", "true"),
-        *_extra_conf(),
+        *_extra_conf(),  # last: a test lever overrides the defaults above
     ]
 
 
@@ -85,7 +82,7 @@ def get_session(app_name: str = "mongodb_mysql_cdc_spark") -> SparkSession:
     builder = (
         SparkSession.builder.master(f"local[{default_parallelism()}]")
         .appName(app_name)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
     )
     for k, v in _runtime_conf():

@@ -166,18 +166,6 @@ def drain_foreach_batch(stream: DataFrame, apply_batch, checkpoint: str) -> None
     run_to_completion(q)
 
 
-def memory_sink_table(df: DataFrame, name: str, output_mode: str) -> "tuple":
-    """writeStream → in-memory table; returns (query, table_name)."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix=f"sparkcdc_ckpt_{name}_"))
-        .start()
-    )
-    return q, name
-
-
 def drain_to_memory_table(
     spark: SparkSession, df: DataFrame, prefix: str, output_mode: str, *, settle: bool = False
 ) -> DataFrame:
@@ -186,7 +174,6 @@ def drain_to_memory_table(
     query that replays a finite stream. ``settle=True`` drains once more
     after a pause, for sinks whose final emissions ride a trailing batch
     (outer-join eviction)."""
-    import time
     import uuid
 
     # Harness-only knob: every stateful streaming operator keeps one state
@@ -211,7 +198,14 @@ def drain_to_memory_table(
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "2")
     try:
-        q, name = memory_sink_table(df, f"{prefix}_{uuid.uuid4().hex[:8]}", output_mode)
+        name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+        q = (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", tempfile.mkdtemp(prefix=f"sparkcdc_ckpt_{name}_"))
+            .start()
+        )
         try:
             q.processAllAvailable()
             if settle:

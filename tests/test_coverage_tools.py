@@ -1,6 +1,6 @@
-"""Tests for the tools/ layer: the sweep subsets and readership data, the
-plan_lint rules, the order-invariance comparator, the timing tools' shared
-helpers, and the paths that gate scripts and recipes name.
+"""Tests for the tools/ layer: the plan_lint rules, the order-invariance
+comparator, the timing tools' shared helpers, and the paths and session
+levers that gate scripts and recipes name.
 """
 
 from __future__ import annotations
@@ -15,8 +15,9 @@ sys.path.insert(0, str(ROOT / "tools"))
 
 def test_named_tool_paths_exist():
     """Every tools/<name>.(py|sh|json) that a gate script, the README or
-    the verify recipe names must exist, so no gate stage or recipe points
-    at a deleted tool."""
+    the verify recipe names must exist, and every SPARK_GRAFT_* lever they
+    name must be read by session.py or bench.py, so no gate stage or
+    recipe points at a deleted tool or a retired environment variable."""
     docs = [*sorted((ROOT / "tools").glob("*.sh")), ROOT / "README.md",
             ROOT / ".claude/skills/verify/SKILL.md"]
     named = {
@@ -28,25 +29,17 @@ def test_named_tool_paths_exist():
     missing = sorted((doc, path) for doc, path in named if not (ROOT / path).is_file())
     assert not missing, missing
 
-
-def test_subsets_are_registered_and_headline_synced():
-    """tools/subsets.py mechanizes the sweep subsets (round 9). A typo'd
-    name would silently shrink a sweep's coverage — every subset member
-    must be a registered query, and the headline subset must be bench.py's
-    HEADLINE (the bench and the sweeps must measure the same queries)."""
-    import subsets
-
-    from mongodb_mysql_cdc_spark import registry
-
-    qs = registry.queries()
-    for label, names in subsets.SUBSETS.items():
-        missing = [n for n in names if n not in qs]
-        assert not missing, f"subset {label}: unregistered {missing}"
-        assert len(names) == len(set(names)), f"subset {label}: duplicates"
-
-    import bench
-
-    assert subsets.SUBSETS["headline"] == bench.HEADLINE
+    readers = "".join(
+        (ROOT / p).read_text() for p in ("mongodb_mysql_cdc_spark/session.py", "bench.py")
+    )
+    levers = {
+        (doc.relative_to(ROOT).as_posix(), m)
+        for doc in docs
+        for m in re.findall(r"SPARK_GRAFT_[A-Z_]+", doc.read_text())
+    }
+    assert levers
+    unread = sorted((doc, lever) for doc, lever in levers if lever not in readers)
+    assert not unread, unread
 
 
 def test_tools_take_headline_and_digest_from_bench():
@@ -193,92 +186,6 @@ def test_order_invariance_within_rel_alignment():
     assert oi._within_rel(a2, b3, 1e-3)
     b4 = pd.DataFrame({"k": ["a", "a", "b"], "v": [1.0, 5.1, 9.0]})
     assert not oi._within_rel(a2, b4, 1e-3)
-
-
-# --- round-13 mechanical axis membership (VERDICT r12 item 3) ---------------
-
-def test_readership_json_is_fresh_and_complete():
-    """tools/readership.json must cover exactly the registered query set —
-    a missing name means the derivation never saw that query (the r12
-    TEXT-vs-multimodal curation-gap class), an extra name means the JSON
-    is stale against a renamed/removed query. Regenerate with
-    `python tools/readership.py --write`."""
-    import subsets as S
-    from mongodb_mysql_cdc_spark import registry
-
-    assert set(S._READERSHIP) == set(registry.queries())
-    errs = {n: r["err"] for n, r in S._READERSHIP.items() if r.get("err")}
-    assert not errs, errs
-
-
-def test_axis_mutations_name_real_columns():
-    """Every AXIS_MUTATIONS entry must be a real (table, column) pair in
-    the declared catalog schemas — a typo here silently derives an empty
-    reader set and the axis sweeps nothing new."""
-    import subsets as S
-    from mongodb_mysql_cdc_spark.catalog import SCHEMAS
-
-    for axis, muts in S.AXIS_MUTATIONS.items():
-        for t, c in muts:
-            assert t in SCHEMAS, (axis, t)
-            assert c in SCHEMAS[t].fieldNames(), (axis, t, c)
-
-
-def test_axis_subsets_are_supersets_of_mechanical_readers():
-    """The curation-gap gate: each SUBSET-swept axis's membership must
-    contain every mechanically derived reader of that axis's mutated
-    columns (plan-scan column hits + conservative whole-table hits for
-    opaque loads). SUBSETS is constructed as the union, so this holds by
-    construction today — the assertion pins the contract against a
-    future revert to static hand-curated lists."""
-    import subsets as S
-
-    for axis, subname in S.AXIS_SUBSET.items():
-        derived = S.mechanical_readers(axis, S._READERSHIP)
-        missing = derived - set(S.SUBSETS[subname])
-        assert not missing, (axis, sorted(missing))
-
-
-def test_scan_readership_parses_formatted_scan_blocks():
-    """Unit pin for the formatted-explain parser: fixture-table scans map
-    (table -> pruned column set); temp/sink rescans are ignored."""
-    import readership as R
-
-    text = (
-        "(1) Scan parquet \n"
-        "Output [3]: [l_orderkey#55L, l_extendedprice#59, l_discount#60]\n"
-        "Batched: true\n"
-        "Location: InMemoryFileIndex [file:/root/testdata/sf0.001/lineitem.parquet]\n"
-        "ReadSchema: struct<l_orderkey:bigint>\n"
-        "\n"
-        "(2) Scan parquet \n"
-        "Output [1]: [ts#7]\n"
-        "Location: InMemoryFileIndex [file:/root/testdata/sf0.001/events.parquet]\n"
-        "\n"
-        "(3) Scan parquet \n"
-        "Output [2]: [a#1, b#2]\n"
-        "Location: InMemoryFileIndex [file:/tmp/sparkcdc_append_x/orders_sink]\n"
-    )
-    got = R.scan_readership(text)
-    assert got == {
-        "lineitem": {"l_orderkey", "l_extendedprice", "l_discount"},
-        "events": {"ts"},
-    }
-
-
-def test_invisible_queries_are_exactly_the_declared_input_free_set():
-    """A query invisible to BOTH readership signals (no fixture-table
-    plan scan AND no recorded DataFrameReader load) escapes every axis
-    derivation — legitimate only for the synthetic Python DataSource
-    family, whose rows come from seeded arithmetic, not fixture tables.
-    Exact equality both directions: a new executor-side reader can't
-    silently escape, and the declared list can't rot."""
-    import subsets as S
-
-    invisible = {
-        n for n, r in S._READERSHIP.items() if not r["scan"] and not r["loads"]
-    }
-    assert invisible == S.NO_FIXTURE_INPUT
 
 
 def test_suite_runs_the_engine_lww_fold_and_session_partitions():

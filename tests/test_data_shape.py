@@ -39,8 +39,6 @@ from make_skew import (  # noqa: E402
     build_ties,
 )
 
-from subsets import SUBSETS  # noqa: E402
-
 from mongodb_mysql_cdc_spark.catalog import TABLES, path_for  # noqa: E402
 
 SKEW_SUBSET = [
@@ -379,9 +377,28 @@ def test_extremes_fixture_strict_subset(spark, extremes_dir):
 # PAIRWISE summation diverging from the oracle's sequential fold by an
 # ulp that the grid can't absorb at 1e59 squared terms (udf_arrow →
 # column-wise sequential fold, still vectorized). This gate keeps every
-# catch pinned; the full 18-query `vectors` subset is cheap enough to
-# run whole.
-EXTREMES_VEC_SUBSET = SUBSETS["vectors"]
+# catch pinned, over the 18 registered queries that read
+# embeddings.embedding.
+EXTREMES_VEC_SUBSET = [
+    "sim_search_topk",
+    "sim_search_lsh",
+    "sim_search_ivf",
+    "sim_search_rerank",
+    "search_rrf_fusion",
+    "knn_classify",
+    "kmeans_refine",
+    "embedding_normalize",
+    "embedding_quantize",
+    "embedding_covariance",
+    "embedding_pca_project",
+    "ml_logreg_gd",
+    "dedup_embedding_cosine",
+    "dedup_semantic_keep",
+    "udf_arrow",
+    "fn_array",
+    "fn_explode",
+    "fn_array_hof2",
+]
 
 
 @pytest.fixture(scope="module")

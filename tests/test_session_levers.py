@@ -1,7 +1,9 @@
-"""The session test levers (SPARK_GRAFT_AQE / SPARK_GRAFT_SHUFFLE) exist
-for the layout-invariance and cluster-shape sweeps; production defaults
-must stay AQE-on and shuffle-partitions=cores. Pure-Python — no Spark."""
-import importlib
+"""The session's environment levers: SPARK_GRAFT_EXTRA_CONF is the one
+test lever of the invariance sweeps (AQE off, a 1024-partition
+cluster-shape rehearsal, codegen off), and SPARK_GRAFT_DRIVER_MEM the
+deployment override of the driver heap. Production defaults must stay
+AQE-on, shuffle-partitions=cores and a heap the machine can back.
+Pure-Python — no Spark."""
 import os
 
 import pytest
@@ -9,7 +11,7 @@ import pytest
 
 @pytest.fixture()
 def clean_env(monkeypatch):
-    for k in ("SPARK_GRAFT_AQE", "SPARK_GRAFT_SHUFFLE", "SPARK_GRAFT_EXTRA_CONF"):
+    for k in ("SPARK_GRAFT_CPUS", "SPARK_GRAFT_EXTRA_CONF", "SPARK_GRAFT_DRIVER_MEM"):
         monkeypatch.delenv(k, raising=False)
     yield monkeypatch
 
@@ -17,8 +19,10 @@ def clean_env(monkeypatch):
 def test_defaults_are_production(clean_env):
     from mongodb_mysql_cdc_spark import session as s
 
-    assert s._aqe() == "true"
-    assert s.shuffle_partitions() == s.default_parallelism()
+    conf = dict(s._runtime_conf())  # the last pair for a key wins, as in Spark
+    assert conf["spark.sql.adaptive.enabled"] == "true"
+    assert conf["spark.sql.shuffle.partitions"] == str(os.cpu_count() or 8)
+    assert s.default_parallelism() == (os.cpu_count() or 8)
 
 
 def test_extra_conf_lever(clean_env):
@@ -38,9 +42,24 @@ def test_extra_conf_lever(clean_env):
 def test_levers_take_effect(clean_env):
     from mongodb_mysql_cdc_spark import session as s
 
-    clean_env.setenv("SPARK_GRAFT_AQE", "false")
-    clean_env.setenv("SPARK_GRAFT_SHUFFLE", "1024")
-    assert s._aqe() == "false"
-    assert s.shuffle_partitions() == 1024
-    # the shuffle lever must not touch executor-thread count
-    assert s.default_parallelism() != 1024 or "SPARK_GRAFT_CPUS" in os.environ
+    cores = s.default_parallelism()
+    clean_env.setenv(
+        "SPARK_GRAFT_EXTRA_CONF",
+        "spark.sql.adaptive.enabled=false;spark.sql.shuffle.partitions=1024",
+    )
+    conf = dict(s._runtime_conf())
+    assert conf["spark.sql.adaptive.enabled"] == "false"
+    assert conf["spark.sql.shuffle.partitions"] == "1024"
+    # the shuffle override must not touch executor-thread count
+    assert s.default_parallelism() == cores
+
+
+def test_driver_memory_fits_the_machine(clean_env):
+    from mongodb_mysql_cdc_spark import session as s
+
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    default = s.driver_memory()
+    assert default.endswith("g"), default
+    assert 1 <= int(default[:-1]) * 2**30 <= phys, (default, phys)
+    clean_env.setenv("SPARK_GRAFT_DRIVER_MEM", "3000m")
+    assert s.driver_memory() == "3000m"

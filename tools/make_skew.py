@@ -1,4 +1,4 @@
-"""Build the data-SHAPE fixtures (round 9): skewed keys and NULL-bearing.
+"""Build the data-SHAPE fixtures, starting with skewed keys and NULL-bearing.
 
 The invariance program (tools/invariance_sweep.sh) covers layout, scale,
 and execution path; this tool adds the fourth adversarial axis — the
@@ -34,7 +34,7 @@ Deterministic predicates on never-remapped unique columns, so both
 fixtures are reproducible bit-for-bit and Spark + DuckDB read the SAME
 parquet — the strict sweep's hash compare stays meaningful.
 
-Round 10 added five more modes on the same template: SPAN
+Seven more modes follow the same template: SPAN
 (--mode span: events timeline ×12 — grid/frame growth), TEXT
 (--mode text: adversarial Unicode / degenerate document text — the
 cross-engine string-semantics axis), EMPTY (--mode empty: every
@@ -42,10 +42,10 @@ table 0 rows, schema preserved — the crash-on-empty axis), TIES
 (--mode ties: massive order-key tie classes — the ordering-determinism
 axis; see build_ties) and PERMUTE (--mode permute: same rows in
 hash-shuffled on-disk order — the row-order-invariance axis; pair with
-tools/order_invariance.py for the Spark-vs-Spark self check). Round 11
-added EXTREMES (--mode extremes: value-DOMAIN edges — grid-edge money,
-zeros/negatives, epoch-boundary timestamps; see build_extremes); round
-12 added its vector sibling EXTREMES-VEC (--mode extremes-vec: ±1e30 /
+tools/order_invariance.py for the Spark-vs-Spark self check), EXTREMES
+(--mode extremes: value-DOMAIN edges — grid-edge money,
+zeros/negatives, epoch-boundary timestamps; see build_extremes) and its
+vector sibling EXTREMES-VEC (--mode extremes-vec: ±1e30 /
 zero / 1e-30 / mixed-magnitude embeddings probing the norm/dot
 accumulation dtype; see build_extremes_vec).
 
@@ -53,8 +53,8 @@ Usage:
     python tools/make_skew.py                      # both fixtures from sf0.1
     python tools/make_skew.py --mode skew --dst /tmp/sfskew
     python tools/make_skew.py --src /tmp/sf10x --mode null --dst /tmp/sf10xnull
-Then sweep:
-    python tools/check_strict.py --sf /tmp/sfskew $(python tools/subsets.py skew)
+Then sweep the whole registry:
+    python tools/check_strict.py --sf /tmp/sfskew
 """
 
 from __future__ import annotations
@@ -171,7 +171,7 @@ TEXT_PALETTE = [
 
 
 def build_text(spark, src: str, dst: str) -> None:
-    """TEXT fixture (round 10): adversarial Unicode / degenerate strings.
+    """TEXT fixture: adversarial Unicode / degenerate strings.
 
     Every 7th document's ``text`` is replaced (deterministically, cycling
     ``TEXT_PALETTE`` by doc_id) with a string from a hazard class where
@@ -220,7 +220,7 @@ def build_text(spark, src: str, dst: str) -> None:
 
 
 def build_empty(spark, src: str, dst: str) -> None:
-    """EMPTY fixture (round 10): every table schema-identical but 0 rows.
+    """EMPTY fixture: every table schema-identical but 0 rows.
 
     At 100 TB an empty INPUT table is rare but an empty slice is not — a
     partition-pruned date, a filter that matches nothing, a tenant with
@@ -238,11 +238,11 @@ def build_empty(spark, src: str, dst: str) -> None:
 
 
 def build_span(spark, src: str, dst: str, factor: int = 12) -> None:
-    """SPAN fixture (round 10): stretch the events timeline ×factor
+    """SPAN fixture: stretch the events timeline ×factor
     (30 days → ~1 year at 12) by exact integer-microsecond affine remap
     ts' = min_ts + (ts − min_ts)·factor. Ordering, uniqueness, values and
-    every other column survive; only the TIME SPAN grows — the axis the
-    round-10 ts_interpolate_linear catch proved invisible to skew (a hot
+    every other column survive; only the TIME SPAN grows — an axis skew
+    cannot reach (ts_interpolate_linear's grid blow-up: a hot
     key doesn't grow an hourly grid; a longer span does, and per-user
     grids are where frame pathologies turn quadratic). Deterministic and
     engine-shared like the other fixtures: both engines read the SAME
@@ -265,7 +265,7 @@ def build_span(spark, src: str, dst: str, factor: int = 12) -> None:
 
 
 def build_ties(spark, src: str, dst: str) -> None:
-    """TIES fixture (round 10, sixth shape axis): massive ORDER-KEY tie
+    """TIES fixture: massive ORDER-KEY tie
     classes — the determinism axis no other fixture covers. Skew grows a
     JOIN/GROUP key's class; ties grow an ORDER key's equivalence class,
     which is what breaks (a) row_number/lag/first_value spellings that
@@ -345,8 +345,8 @@ _PK = {
 
 
 def build_extremes(spark, src: str, dst: str) -> None:
-    """EXTREMES fixture (round 11, tenth shape axis): value-DOMAIN
-    extremes — the residue the r10 verdict names (item 7): money at the
+    """EXTREMES fixture: value-DOMAIN
+    extremes — money at the
     edges of what a 2-decimal double grid can hold, zero and negative
     amounts, and epoch-boundary timestamps. Every prior axis reshapes
     WHERE values sit (keys, order, layout); this one reshapes the values
@@ -422,8 +422,7 @@ def build_extremes(spark, src: str, dst: str) -> None:
 
 
 def build_extremes_vec(spark, src: str, dst: str) -> None:
-    """EXTREMES-VEC fixture (round 12, the value-domain residue the r11
-    verdict names): the vector-palette sibling of build_extremes, aimed
+    """EXTREMES-VEC fixture: the vector-palette sibling of build_extremes, aimed
     at the sim-search/embedding family's ACCUMULATION DTYPE. The
     embeddings column is list<float32> (FIXTURES.md: dim=64); harness
     components are ~N(0, 0.1), so nothing ever probed what happens when
@@ -473,14 +472,14 @@ def build_extremes_vec(spark, src: str, dst: str) -> None:
 
 
 def build_permute(spark, src: str, dst: str) -> None:
-    """PERMUTE fixture (round 10): the SAME rows in adversarially
+    """PERMUTE fixture: the SAME rows in adversarially
     different ROW ORDER — every other fixture (and the harness parquet
     itself) stores rows in generator order (PK/ts-sorted), so nothing
     ever tested that results are a pure function of the data rather
     than its on-disk ordering. Row order changes: collect_list element
     order, which rows share a scan split (the ranking machinery's
     per-split prefix sums), Spark's and DuckDB's floating-point
-    summation order (the round-8 comparison-stability contract class),
+    summation order (the comparison-stability contract class),
     and the two-phase top-K prefixes' local candidate sets. It must
     change NO registered result: every collect is sorted, every limit
     is totally ordered, every rounded double rides a

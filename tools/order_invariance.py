@@ -1,5 +1,4 @@
-"""Row-ORDER self-invariance check (round 10, the PERMUTE axis's second
-half).
+"""Row-ORDER self-invariance check (the PERMUTE axis's second half).
 
 The cross-engine strict sweep on the permuted fixture proves Spark and
 DuckDB still agree with each other on reordered input; THIS check proves
@@ -11,8 +10,8 @@ output is a pure function of the DATA, not of the parquet row order:
 row-set-identical through the driver-faithful comparator. Any divergence
 is either a collect/limit/top-k ordering contract violation (the bug
 class) or a floating-point summation-order instability that escaped the
-round-8 decimal-grid / hround-margin engineering (the comparison-
-stability class) — both are findings.
+decimal-grid / hround-margin engineering (the comparison-stability
+class) — both are findings.
 
 Usage:
     python tools/make_skew.py --mode permute --src /root/testdata/sf0.01 \
@@ -53,7 +52,7 @@ ORDER_TOLERANT = {"agg_approx_quantile": 1e-3}
 def _within_rel(a, b, rel: float) -> bool:
     """Row-set equality with a relative margin on float columns.
 
-    Alignment (ADVICE r10 fix): sort by ALL columns — floats quantized
+    Alignment: sort by ALL columns — floats quantized
     to a grid of ``rel`` for the sort KEY only — so rows that tie on
     every non-float column still align deterministically (the old
     non-float-keys-only sort let such rows align differently between

@@ -24,10 +24,8 @@ for the patterns that break at 100 TB:
                      hour of a hot table) is unbounded memory at 100 TB.
                      ``approx_percentile`` (t-digest, mergeable, bounded)
                      and frame-bounded window medians are fine. The
-                     round-6 ``cdc_replication_lag`` histogram rewrite is
-                     the template fix; remaining exempt sites are queued
-                     for the same treatment once driver re-verify slots
-                     free up (round 7).
+                     ``cdc_replication_lag`` histogram rewrite is the
+                     template fix for any remaining exempt site.
 
 Exit 1 if any non-exempt query trips a rule.
 
@@ -54,7 +52,7 @@ GLOBAL_WINDOW_EXEMPT = {
     "agg_histogram_equiwidth": "window runs over |bins| rows, not the corpus",
     "analytics_pareto": "window over per-band aggregates (|bands| rows)",
     "dq_benford": "window over 9 digit rows",
-    # quality_buckets de-listed r7: re-spelled on distributed_ntile, no
+    # quality_buckets is not listed: it runs on distributed_ntile, so no
     # global window remains in its plan.
     "domain_mix": "window over |domains| rows",
     # deliberately-global semantics over provably small inputs
@@ -67,7 +65,7 @@ CARTESIAN_EXEMPT: dict[str, str] = {}
 # Columns with a FIXED small domain (FIXTURES.md enums + the 25-nation /
 # 5-region TPC-H keys). A WindowExec partitioned ONLY by these runs at
 # most |domain| reducer tasks — corpus/|domain| rows sort inside each at
-# any scale, the round-7 re-spell class (win_pct, quality_buckets, …).
+# any scale (the class win_pct and quality_buckets were re-spelled out of).
 LOWCARD_COLS = {
     "event_type", "lang", "source", "l_returnflag", "l_linestatus",
     "o_orderstatus", "o_orderpriority", "c_mktsegment", "p_type",
@@ -78,8 +76,8 @@ LOWCARD_COLS = {
 # Queries allowed a low-cardinality-key window because the window's
 # INPUT is provably bounded (a histogram, a grid, an aggregate of a
 # bounded dimension) or the group is pruned before the sort — the
-# mechanical form of the round-6 manual `--report-windows` triage. An
-# entry documents WHY; it does not bless a corpus-sized input.
+# mechanical form of the `--report-windows` triage. An entry documents
+# WHY; it does not bless a corpus-sized input.
 LOWCARD_WINDOW_EXEMPT = {
     "agg_stats": "input is the distinct-value histogram "
     "(operators/percentile.py — bounded by the value domain, not corpus)",
@@ -90,8 +88,8 @@ LOWCARD_WINDOW_EXEMPT = {
     "group to k rows per map task before the sort",
     "sample_per_group": "rn<=k → WindowGroupLimit pushdown "
     "(same as topk_per_group)",
-    # pack_sequences de-listed r7: re-spelled on the distributed cumsum
-    # machinery, no per-lang window remains in its plan.
+    # pack_sequences is not listed: it runs on the distributed cumsum
+    # machinery, so no per-lang window remains in its plan.
     "corpus_prepare_e2e": "single-dataflow capstone: the machinery's "
     "boundary job would re-execute the whole dedup+decon lineage "
     "(measured 2.6× at sf0.1); the REGISTERED A/B variant "
@@ -112,25 +110,24 @@ PY_ROW_UDF_EXEMPT = {
 # Queries allowed a window frame that ENDS at UNBOUNDED FOLLOWING without
 # STARTING at UNBOUNDED PRECEDING. WindowExec evaluates such frames by
 # rescanning from the current row to the partition end PER ROW — O(n²)
-# per partition, the round-9 join_asof_nearest / round-10
-# ts_interpolate_linear bug class. (The full [UNBOUNDED PRECEDING,
+# per partition, the join_asof_nearest / ts_interpolate_linear bug
+# class. (The full [UNBOUNDED PRECEDING,
 # UNBOUNDED FOLLOWING] frame is fine: computed once per partition.)
 # The cure is always the same: reverse the ordering and use a RUNNING
 # frame (last/ignorenulls over DESC). Keep this list EMPTY.
 FWD_UNBOUNDED_FRAME_EXEMPT: dict[str, str] = {}
 
 # Queries allowed an exact percentile/median aggregate. Each entry is a
-# known per-group-state-∝-group-size site; the ones marked (r7) are
-# queued for the cdc_replication_lag histogram treatment when driver
-# re-verify slots free up — an exemption documents, it does not bless.
+# known per-group-state-∝-group-size site — an exemption documents, it
+# does not bless.
 UNBOUNDED_AGG_EXEMPT = {
     "agg_percentile_exact": "the named exact-percentile exhibit itself, "
     "contrasted with agg_approx_quantile (keep: it IS the exhibit)",
     "agg_approx_quantile": "computes exact alongside approx to MEASURE the "
     "sketch error — the comparison is the point",
-    # round 7: agg_stats / quality_winsorize / anomaly_mad moved off the
-    # exempt list — re-spelled on operators/percentile.py's distinct-value
-    # histogram (state ∝ |value domain|, exact interpolated result).
+    # agg_stats / quality_winsorize / anomaly_mad are not listed: they run
+    # on operators/percentile.py's distinct-value histogram (state ∝
+    # |value domain|, exact interpolated result).
 }
 
 
@@ -159,8 +156,8 @@ def window_partition_specs(plan: str) -> list[str]:
             # Window [exprs] alone: no partition spec AND no order spec —
             # an unordered GLOBAL aggregate window (sum() OVER ()). Spark
             # itself warns 'Moving all data to a single partition'. Same
-            # killer as the ordered form (round-6 lint gap: this is what
-            # win_ratio_to_report's grand-total window slipped through).
+            # killer as the ordered form (win_ratio_to_report's grand-total
+            # window is the case an ordered-only check misses).
             out.append("<GLOBAL>")
         elif len(groups) == 2:
             # Window [exprs], [second]: `second` is an ORDER spec (global,
@@ -177,8 +174,8 @@ def window_partition_specs(plan: str) -> list[str]:
 
 # Functions whose re-evaluation PER ARRAY ELEMENT turns a HOF into a
 # quadratic-per-row plan: a lambdafunction body re-evaluates every
-# captured non-attribute expression once per element (the round-10
-# word_shingles catch: the inline split(casefold(trim(text))) tokenizer
+# captured non-attribute expression once per element (word_shingles'
+# case: the inline split(casefold(trim(text))) tokenizer
 # ran once per shingle position — O(tokens²) per document, 14× wall).
 # Cheap per-element work on the lambda VARIABLE (concat, hash of the
 # element, arithmetic) is the point of a HOF and is not flagged; these
@@ -278,8 +275,7 @@ def lint_one(name: str, df) -> list[str]:
         # approx_percentile is the bounded (t-digest) form. Window-frame
         # medians don't appear as aggregate exprs, so no false hit there.
         # percentile_cont/percentile_disc are the same every-member-buffer
-        # state under ANSI spelling (round-6 advice: '(' needn't follow
-        # the bare word).
+        # state under ANSI spelling ('(' needn't follow the bare word).
         for m in re.finditer(r"\b(percentile(?:_cont|_disc)?|median)\(", plan):
             if plan[max(0, m.start() - 7) : m.start()] != "approx_":
                 problems.append(
