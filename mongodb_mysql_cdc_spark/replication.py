@@ -17,9 +17,12 @@ composition, not new semantics; ``tests/test_replication.py`` pins
 pipeline-end-state == ``cdc_apply_batch`` over the full event history
 (snapshot/tail factoring must be invisible — reconcile is associative).
 
-100 TB: the snapshot phase is one batch write partitioned by key-bucket;
-the tail phase is Structured Streaming with checkpointed offsets (restart
-= resume, §2.9), micro-batches folded per key before touching the sink.
+100 TB: the snapshot phase is one batch write of the snapshot envelopes,
+unfolded, into one version dir with a key-bucket column (the first delta
+of every bucket); the tail phase is Structured Streaming with
+checkpointed offsets (restart = resume, §2.9), each micro-batch appended
+the same way and folded per key only when a bucket is compacted or the
+state is read.
 """
 
 from __future__ import annotations

@@ -8,27 +8,28 @@ Design:
 - ``reconcile``: pure batch algebra — per key keep the image with the
   greatest (ts, seq); associative, so it can fold micro-batches in any
   grouping: reconcile(reconcile(a,b),c) == reconcile(a, b ∪ c). That
-  associativity IS the exactly-once argument under micro-batch replay.
+  associativity IS the exactly-once argument under micro-batch replay,
+  and it is what lets the current-state sink defer the fold to read or
+  compaction time.
 - Tombstones STAY in the state table (op='d' rows are retained with their
   (ts, seq)): dropping them physically would let a late, older event
   resurrect a deleted key. ``current_state`` filters them at read time.
 - ``CdcParquetSink`` (LWW current state) and ``Scd2ParquetSink`` (SCD2
   history) are foreachBatch writers on ONE commit path,
   ``_BucketedParquetSink.apply_batch``: a batch-id guard makes a replayed
-  epoch a no-op (idempotent sink = exactly-once); the micro-batch is
-  executed once (persisted, its touched buckets observed while the cache
-  is built); the fold of the touched buckets is written once, copy-on-write,
-  to a new version dir, and an ``os.replace`` of a small manifest
-  (last batch id, bucket → owning version) commits it atomically across
-  buckets; superseded version dirs are then deleted. Each sink
-  contributes only its fold.
+  epoch a no-op (idempotent sink = exactly-once); each batch writes one
+  version dir, and an ``os.replace`` of a small manifest (last batch id,
+  bucket → base version + ordered delta versions) commits it atomically
+  across buckets; versions no chain lists are then deleted. Each sink
+  contributes only its fold and how many deltas a bucket may hold.
 
-Scale: state is parquet keyed by hash(key) bucket; each micro-batch
-reads and rewrites only the key-buckets it touches. That bounds a batch's
-I/O by the buckets it touches, not by its size: when keys are spread
-uniformly, a batch of ``n_buckets`` or more keys touches nearly every
-bucket and so rewrites nearly the whole table (the ``live_tail`` replbench
-workload measures a write amplification of about 200×).
+Scale: state is parquet keyed by hash(key) bucket. The current-state sink
+is merge-on-read: a batch appends its own rows as a delta in one Spark job
+that reads no state, so its write is O(batch); once a bucket holds
+``MAX_DELTAS`` deltas, the next batch folds its chain into a new base,
+which rewrites that bucket once. Reads fold the chains with one scan and
+one aggregate. The SCD2 sink keeps no deltas (copy-on-write): each batch
+reads and rewrites the buckets it touches.
 """
 
 from __future__ import annotations
@@ -38,6 +39,8 @@ import os
 import shutil
 from dataclasses import dataclass
 from functools import reduce
+from operator import or_
+from typing import ClassVar
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -46,6 +49,10 @@ from pyspark.sql import types as T
 from mongodb_mysql_cdc_spark.sources.cdc import OP_DELETE
 
 STATE_COLS = ("key", "op", "ts", "seq", "after")
+
+# bucket → chain: ``[base, *deltas]``, version ids, base None until the
+# bucket is first compacted
+Chains = dict[int, list[int | None]]
 
 
 def reconcile(envelopes: DataFrame) -> DataFrame:
@@ -95,8 +102,8 @@ def cdc_apply_batch(envelopes: DataFrame) -> DataFrame:
 # --- applyInPandasWithState form (SURVEY.md §2.9: "at scale
 # applyInPandasWithState for in-flight state") -------------------------------
 #
-# The foreachBatch sinks below re-read and rewrite the touched state
-# buckets per micro-batch — correct, but the state round-trips through the
+# The foreachBatch sinks below keep the state as parquet versions —
+# correct, but every batch and every read round-trips through the
 # filesystem.
 # This form keeps the per-key LWW image in the Spark StateStore instead:
 # executor-local, versioned, checkpointed incrementally — the shape that
@@ -190,48 +197,68 @@ def cdc_apply_stateful_stream(env: DataFrame) -> DataFrame:
 
 @dataclass
 class _BucketedParquetSink:
-    """The commit path both parquet sinks share; a subclass supplies only
-    its fold.
+    """The commit path both parquet sinks share; a subclass supplies its
+    fold and ``MAX_DELTAS``.
 
-    Rows carry ``bucket = pmod(xxhash64(key), n_buckets)``. State lives in
-    copy-on-write version dirs ``<state_dir>/state/v=<batch_id>`` (bucket
-    kept as a column), and ``<state_dir>/_manifest.json`` names the last
-    committed batch id and, per bucket, the version that owns its rows. A
-    bucket's rows are read only from its owning version; every read goes
-    through the manifest. ``apply_batch``
+    Rows carry ``bucket = pmod(xxhash64(key), n_buckets)``. Every batch
+    writes at most one version dir ``<state_dir>/state/v=<batch_id>``
+    (bucket kept as a column), and ``<state_dir>/_manifest.json`` names the
+    last committed batch id and, per bucket, its chain: a base version
+    (null until the bucket is first compacted) followed by the delta
+    versions appended since, oldest first. A bucket's rows are read only
+    from the versions of its chain; every read goes through the manifest.
+    ``apply_batch``
 
     1. skips a batch id at or below the manifest's — foreachBatch ids are
        monotone, so a replayed epoch is a no-op (idempotent sink +
        replayable source + WAL'd offsets = exactly-once);
-    2. persists the bucketed micro-batch and runs it once through a noop
-       write that builds the cache and observes its touched buckets — the
-       batch executes once; no touched bucket means an empty batch,
-       committed as a no-op;
-    3. reads only the touched buckets from their owning versions, with the
-       schema of the batch's own state rows (no schema-inference job);
-    4. writes ``_fold(old, rows, batch)`` once, unpartitioned, to the new
-       version dir ``v=<batch_id>`` (plain overwrite, which also clears an
-       orphan a crashed attempt left there) and observes the buckets it
-       wrote on that same job; those buckets move to the new version, and
-       a touched bucket the fold left empty leaves the manifest;
+    2. picks the buckets to compact: with ``MAX_DELTAS`` > 0, those whose
+       chain already holds ``MAX_DELTAS`` deltas, touched by the batch or
+       not — decided from the manifest alone; with ``MAX_DELTAS`` = 0
+       (copy-on-write), every bucket the batch touches, which it learns by
+       persisting the batch and running it once through a noop write that
+       observes the buckets (no touched bucket: committed as a no-op);
+    3. writes one version ``v=<batch_id>`` (plain overwrite, which also
+       clears an orphan a crashed attempt left there) and observes the
+       buckets it wrote on that same job. With nothing to compact it holds
+       the batch's own rows, unfolded, and no state is read. Otherwise it
+       holds ``_fold(old, rows, batch)``, where ``old`` is the compacted
+       buckets' chains, read with one scan and the batch's schema: a
+       compacted bucket's chain becomes that version alone, as its base,
+       and a compacted bucket the fold left empty leaves the manifest;
+    4. appends the version as a delta to the chain of every other bucket
+       it wrote;
     5. commits by write-then-``os.replace`` of the manifest — the single
        atomic step, across all buckets;
-    6. deletes the version dirs no bucket owns: superseded versions, and
-       orphans of crashed attempts.
+    6. deletes the version dirs no chain lists: superseded bases and
+       deltas, versions that wrote no bucket, and orphans of crashed
+       attempts.
 
-    A batch reads and writes only the buckets it touches: untouched
-    buckets keep their owning version and its files. With uniformly
-    spread keys, a batch of ``n_buckets`` or more keys touches nearly all
-    of them, so per-batch I/O then approaches the whole state. A crash before step 5
-    leaves the previous manifest and so exactly the previous state; the
-    redelivered batch then folds again. A crash in step 6 leaves stale
-    dirs no read sees, which the next commit removes. The manifest holds
-    at most ``n_buckets`` entries and one integer, so it stays the same
-    size however many batches commit."""
+    Costs, with ``T = MAX_DELTAS``: a batch that compacts nothing is one
+    Spark job over the batch alone, writing only its own rows. A bucket is
+    compacted at most once every ``T + 1`` batches, and that batch reads
+    and rewrites the bucket's whole chain; with uniformly spread keys,
+    where every batch touches every bucket, that is the whole state once
+    every ``T + 1`` batches. ``state()`` reads every live version with one
+    parquet scan and, while any chain holds a delta, folds the result with
+    one aggregate; a chain holds at most ``T + 1`` versions. With ``T`` = 0
+    every batch folds the buckets it touches, so its I/O is bounded by
+    those buckets, not by its size.
+
+    A crash before step 5 leaves the previous manifest and so exactly the
+    previous state; the redelivered batch then writes the same version
+    again. A crash in step 6 leaves stale dirs no read sees, which the
+    next commit removes. The manifest holds at most ``n_buckets`` chains of
+    at most ``T + 1`` versions and one integer, so its size is bounded
+    however many batches commit."""
 
     spark: SparkSession
     state_dir: str
     n_buckets: int = 16
+
+    # how many deltas a bucket's chain may hold before a batch compacts it;
+    # 0 is copy-on-write
+    MAX_DELTAS: ClassVar[int] = 0
 
     @property
     def _state_path(self) -> str:
@@ -244,29 +271,29 @@ class _BucketedParquetSink:
     def _version_path(self, version: int) -> str:
         return os.path.join(self._state_path, f"v={version}")
 
-    def _load_manifest(self) -> tuple[int | None, dict[int, int]]:
+    def _load_manifest(self) -> tuple[int | None, Chains]:
         """The last committed batch id (None before the first commit) and
-        the bucket → owning version map."""
+        the bucket chains."""
         if not os.path.exists(self._manifest_path):
             return None, {}
         with open(self._manifest_path) as f:
             m = json.load(f)
-        return m["batch"], {int(b): v for b, v in m["buckets"].items()}
+        return m["batch"], {int(b): chain for b, chain in m["buckets"].items()}
 
-    def _save_manifest(self, batch_id: int, owners: dict[int, int]) -> None:
+    def _save_manifest(self, batch_id: int, chains: Chains) -> None:
         # state_dir does not exist yet when the first batch is empty; the
         # rename keeps the previous manifest whole if the dump dies midway
         os.makedirs(self.state_dir, exist_ok=True)
         tmp = self._manifest_path + ".tmp"
         with open(tmp, "w") as f:
-            buckets = {str(b): v for b, v in sorted(owners.items())}
+            buckets = {str(b): chain for b, chain in sorted(chains.items())}
             json.dump({"batch": batch_id, "buckets": buckets}, f)
         os.replace(tmp, self._manifest_path)
 
-    def _gc(self, owners: dict[int, int]) -> None:
+    def _gc(self, chains: Chains) -> None:
         if not os.path.isdir(self._state_path):
             return
-        live = {f"v={v}" for v in owners.values()}
+        live = {f"v={v}" for chain in chains.values() for v in chain if v is not None}
         for d in os.listdir(self._state_path):
             if d.startswith("v=") and d not in live:
                 shutil.rmtree(os.path.join(self._state_path, d))
@@ -286,35 +313,49 @@ class _BucketedParquetSink:
             "bucket", F.pmod(F.xxhash64("key"), F.lit(self.n_buckets))
         )
 
-    def _read(self, owners: dict[int, int], schema: T.StructType) -> DataFrame:
-        """The rows of the given buckets, each from its owning version."""
-        reader = self.spark.read.schema(schema)
-        return reduce(
-            DataFrame.unionByName,
-            [
-                reader.parquet(self._version_path(v)).filter(
-                    F.col("bucket").isin([b for b, o in owners.items() if o == v])
-                )
-                for v in sorted(set(owners.values()))
-            ],
-        )
+    def _read(
+        self, chains: Chains, schema: T.StructType | None = None
+    ) -> DataFrame:
+        """The rows of the given buckets' chains, unfolded, from one parquet
+        scan of their versions; the scan's ``v`` column (the version dir's
+        name) keeps each bucket to the versions of its own chain."""
+        owned: dict[int, list[int]] = {}
+        for b, chain in chains.items():
+            for v in chain:
+                if v is not None:
+                    owned.setdefault(v, []).append(b)
+        reader = self.spark.read.option("basePath", self._state_path)
+        if schema is not None:
+            reader = reader.schema(schema)
+        scan = reader.parquet(*(self._version_path(v) for v in sorted(owned)))
+        return scan.filter(
+            reduce(or_, [(F.col("v") == v) & F.col("bucket").isin(sorted(bs))
+                         for v, bs in sorted(owned.items())])
+        ).drop("v")
 
     def state(self) -> DataFrame | None:
-        """The bucketed state table, or None while it holds no row."""
+        """The bucketed state table, one row per state entry (deltas
+        folded), or None while it holds no row."""
         if self._manifest_less():
             return self.spark.read.parquet(self._state_path)
-        _, owners = self._load_manifest()
-        if not owners:
+        _, chains = self._load_manifest()
+        if not chains:
             return None
-        paths = sorted({self._version_path(v) for v in owners.values()})
-        return self._read(owners, self.spark.read.parquet(*paths).schema)
+        rows = self._read(chains)
+        if all(len(chain) == 1 for chain in chains.values()):
+            return rows  # bases only: nothing to fold
+        # only a merge-on-read sink (CdcParquetSink, MAX_DELTAS > 0) leaves
+        # deltas, and its fold is reconcile
+        return self._bucket(reconcile(rows))
 
     def _rows(self, batch: DataFrame) -> DataFrame:
         """The batch's own rows in the state schema, bucket included."""
         raise NotImplementedError
 
     def _fold(self, old: DataFrame, rows: DataFrame, batch: DataFrame) -> DataFrame:
-        """The new content of the touched buckets, given their ``old`` rows."""
+        """The new content of the compacted buckets, given their ``old``
+        rows; the batch's rows of any other bucket may come out as they
+        are or folded."""
         raise NotImplementedError
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -323,29 +364,45 @@ class _BucketedParquetSink:
                 f"{self._state_path} holds bucket= dirs but no manifest;"
                 " apply_batch would fold onto an empty state"
             )
-        last, owners = self._load_manifest()
+        last, chains = self._load_manifest()
         if last is not None and batch_id <= last:
             return  # replayed epoch — idempotent no-op
-        batch = self._bucket(batch_df.select(*STATE_COLS)).persist()
-        try:
-            touched = _observed_buckets(
-                batch, lambda df: df.write.format("noop").mode("overwrite").save()
-            )
-            if touched:
-                rows = self._rows(batch)
-                prior = {b: v for b, v in owners.items() if b in touched}
-                old = self._read(prior, rows.schema) if prior else rows.where(F.lit(False))
-                version = self._version_path(batch_id)
-                written = _observed_buckets(
-                    self._fold(old, rows, batch),
-                    lambda df: df.write.mode("overwrite").parquet(version),
+        batch = self._bucket(batch_df.select(*STATE_COLS))
+        if self.MAX_DELTAS:
+            due = {b for b, chain in chains.items() if len(chain) > self.MAX_DELTAS}
+            chains = self._write_version(batch, batch_id, chains, due)
+        else:
+            batch = batch.persist()
+            try:
+                touched = _observed_buckets(
+                    batch, lambda df: df.write.format("noop").mode("overwrite").save()
                 )
-                owners = {b: v for b, v in owners.items() if b not in touched}
-                owners.update((b, batch_id) for b in written)
-            self._save_manifest(batch_id, owners)
-        finally:
-            batch.unpersist()
-        self._gc(owners)
+                if touched:
+                    chains = self._write_version(batch, batch_id, chains, touched)
+            finally:
+                batch.unpersist()
+        self._save_manifest(batch_id, chains)
+        self._gc(chains)
+
+    def _write_version(
+        self, batch: DataFrame, batch_id: int,
+        chains: Chains, due: set[int],
+    ) -> Chains:
+        """Write version ``batch_id``, compacting the ``due`` buckets; the
+        chains it leaves once committed."""
+        rows = self._rows(batch)
+        if due:
+            prior = {b: chains[b] for b in due if b in chains}
+            old = self._read(prior, rows.schema) if prior else rows.where(F.lit(False))
+            rows = self._fold(old, rows, batch)
+        version = self._version_path(batch_id)
+        written = _observed_buckets(
+            rows, lambda df: df.write.mode("overwrite").parquet(version)
+        )
+        chains = {b: chain for b, chain in chains.items() if b not in due}
+        for b in written:
+            chains[b] = [batch_id] if b in due else chains.get(b, [None]) + [batch_id]
+        return chains
 
 
 def _observed_buckets(df: DataFrame, write) -> set[int]:
@@ -358,16 +415,26 @@ def _observed_buckets(df: DataFrame, write) -> set[int]:
 
 class CdcParquetSink(_BucketedParquetSink):
     """foreachBatch sink keeping the LWW current-state table (SURVEY.md
-    §3-C step 3) on the shared bucketed commit path. Plain parquet has no
-    MERGE, so the fold is ``reconcile(old ∪ batch)`` over the touched
-    buckets — one aggregate; the batch needs no reconcile of its own
-    because reconcile is associative. LWW is idempotent per key, so a
-    replayed or partially applied batch folds to the same state.
-    ``tests/test_streaming.py::test_sink_rewrites_only_touched_buckets``
-    pins that untouched buckets keep their owning version, whose files
-    keep their paths and mtimes. (The StateStore
-    form ``cdc_apply_stateful_stream`` above is the no-filesystem-round-trip
-    alternative.)"""
+    §3-C step 3) on the shared bucketed commit path, merge-on-read: plain
+    parquet has no MERGE, and reconcile is associative, so a batch appends
+    its own envelopes, unreconciled, as a delta version — one Spark job, no
+    state read, O(batch) bytes written — and the fold ``reconcile(base ∪
+    deltas ∪ batch)`` runs only when a bucket's chain is compacted (by the
+    batch after the one that gave it ``MAX_DELTAS`` deltas) and on reads,
+    which scan the chains once and fold them with one aggregate. LWW is idempotent
+    per key, so a replayed or partially applied batch folds to the same
+    state. ``tests/test_streaming.py::test_sink_rewrites_only_touched_buckets``
+    pins that a batch adds one delta to the buckets it touches and leaves
+    every other chain, and its files, as they were. (The StateStore form
+    ``cdc_apply_stateful_stream`` above is the no-filesystem-round-trip
+    alternative.)
+
+    ``MAX_DELTAS`` trades reads against writes: a larger value compacts
+    less often (with uniform keys the whole state is rewritten once every
+    ``MAX_DELTAS + 1`` batches) but leaves up to that many deltas per
+    bucket for every read to fold."""
+
+    MAX_DELTAS = 8
 
     def _rows(self, batch: DataFrame) -> DataFrame:
         return batch
@@ -418,7 +485,9 @@ class Scd2ParquetSink(_BucketedParquetSink):
     state is CLOSED with the key's first batch timestamp (delete envelopes
     close without opening). Correct under the replay's guarantee that
     per-key (ts, seq) never decreases across micro-batches — the oplog's
-    total order (SURVEY §1.1).
+    total order (SURVEY §1.1). The close needs each touched key's open row,
+    so this sink keeps ``MAX_DELTAS = 0`` (copy-on-write): every batch
+    reads and rewrites the buckets it touches.
 
     Crash-replay idempotency: the manifest commit is atomic, so a crash
     before it leaves the previous state and the replay folds the batch

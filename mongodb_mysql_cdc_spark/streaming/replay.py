@@ -178,9 +178,12 @@ def drain_to_memory_table(
 
     # Harness-only knob: every stateful streaming operator keeps one state
     # store PER shuffle partition PER micro-batch (a stream-stream join
-    # keeps four), so the session's 32 partitions mean ~128 state-store
-    # round-trips per batch over kilobytes of data — pure fixed cost at
-    # replay scale (measured on stream_stream_join_left: 51 s at 32
+    # keeps four), so each partition costs state-store round-trips per
+    # batch over kilobytes of data — pure fixed cost at replay scale. The
+    # pin is 2 partitions, whatever the session's default (4 on local[4]);
+    # every stateful query drained here (cdc_apply_stateful among them)
+    # runs its state at 2 partitions under every sweep cell (earlier
+    # measurements, stream_stream_join_left: 51 s at 32
     # partitions → ~36 s at 8 → ~24 s at 4; at sf0.01:
     # stream_session 22.3 s at 4 → 17.7 s at 2 → 16.8 s at 1, hashes
     # identical at every count — 2 keeps the multi-partition state path

@@ -4,11 +4,22 @@ and a restarted pipeline must be a no-op (idempotent replay)."""
 
 from __future__ import annotations
 
+import hashlib
+import os
+import random
+import signal
+import subprocess
+import sys
 import tempfile
+import time
+from pathlib import Path
 
 import pytest
 
 from mongodb_mysql_cdc_spark.replication import ReplicationPipeline, expected_state
+from tests.conftest import SF_ORACLE
+
+REPO = str(Path(__file__).resolve().parent.parent)
 
 
 def _rows(df):
@@ -57,6 +68,27 @@ def test_pipeline_empty_feed(spark, tmp_path):
     status = pipe.status()
     assert status["state_rows"] == 0
     assert status["last_batch"] == 1  # one streamed epoch per chunk, ids 0..1
+
+
+def test_status_counts_fold_uncompacted_deltas(spark, sf_dir):
+    """status() is exact while the sink's chains still hold deltas:
+    ``state_rows`` (tombstones included) is the reconcile of the whole
+    history and ``live_rows`` the expected state's count. The raw delta
+    rows on disk, one per envelope, are never what is counted."""
+    from mongodb_mysql_cdc_spark.sources.cdc import events_as_envelopes
+    from mongodb_mysql_cdc_spark.streaming.apply import reconcile
+
+    pipe = ReplicationPipeline(
+        spark, sf_dir, tempfile.mkdtemp(prefix="repl_status_"), n_chunks=4
+    )
+    pipe.run()
+    chains = pipe._sink._load_manifest()[1]
+    assert chains and all(len(chain) > 1 for chain in chains.values())  # deltas left
+    status = pipe.status()
+    assert status["state_rows"] == reconcile(events_as_envelopes(spark, sf_dir)).count()
+    assert status["live_rows"] == expected_state(spark, sf_dir).count()
+    raw = spark.read.parquet(os.path.join(pipe.sink_dir, "state")).count()
+    assert raw > status["state_rows"]  # so counting raw rows would fail
 
 
 def test_stage_chunks_low_row_feed(spark, tmp_path):
@@ -140,3 +172,58 @@ def test_source_adapter_seam(spark, sf_dir):
     assert shape(replay.snapshot().schema) == shape(ENVELOPE_SCHEMA)
     with pytest.raises(RuntimeError, match="mongo-spark-connector"):
         mongo.stream()
+
+
+_CHILD = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from mongodb_mysql_cdc_spark.session import get_session
+from mongodb_mysql_cdc_spark.replication import ReplicationPipeline
+spark = get_session("sigkill_child")
+print("ready", flush=True)
+ReplicationPipeline(spark, sys.argv[2], sys.argv[3], n_chunks=int(sys.argv[4])).run()
+"""
+
+
+@pytest.mark.serial
+def test_pipeline_survives_sigkill(spark, tmp_path):
+    """Real process death: ``ReplicationPipeline.run()`` in a child process
+    (its Python, JVM and workers in one process group) is killed with
+    SIGKILL at three seeded delays after its session is up, each restart
+    resuming from the same ``sink_dir``; then the pipeline runs to the end
+    here. 12 chunks at sf0.01 are a snapshot and 12 tail batches, so the
+    run crosses a compaction of every bucket (at ``MAX_DELTAS`` = 8) and
+    the kills land in staging, the snapshot, delta batches, the compaction
+    or GC. After the restart the replica's digest equals
+    ``expected_state``'s, the sink's last batch is the checkpoint's last
+    committed batch, and every version dir on disk is in a live chain."""
+    src, n_chunks = SF_ORACLE, 12
+    sink = str(tmp_path / "sink")
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g", SPARK_GRAFT_CPUS="2")
+    rng = random.Random(20260419)
+    for delay in [rng.uniform(1.0, 22.0) for _ in range(3)]:
+        child = subprocess.Popen(
+            [sys.executable, "-c", _CHILD, REPO, src, sink, str(n_chunks)],
+            cwd=tmp_path, env=env, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
+            text=True, start_new_session=True,
+        )
+        try:
+            assert child.stdout.readline().strip() == "ready"
+            time.sleep(delay)
+        finally:
+            os.killpg(child.pid, signal.SIGKILL)
+            child.wait()
+
+    pipe = ReplicationPipeline(spark, src, sink, n_chunks=n_chunks)
+    got = pipe.run()
+    digest = lambda df: hashlib.sha256(
+        repr(sorted(df.select(*sorted(df.columns)).collect())).encode()
+    ).hexdigest()
+    assert digest(got) == digest(expected_state(spark, src))
+    commits = os.path.join(sink, "_checkpoint", "commits")
+    last_commit = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    assert pipe.status()["last_batch"] == last_commit
+    _, chains = pipe._sink._load_manifest()
+    live = {f"v={v}" for chain in chains.values() for v in chain if v is not None}
+    on_disk = {d for d in os.listdir(os.path.join(sink, "state")) if d.startswith("v=")}
+    assert on_disk == live

@@ -120,18 +120,22 @@ def test_cdc_apply_order_insensitive(spark, sf_dir):
 
 def test_sink_rewrites_only_touched_buckets(spark, sf_dir):
     """The 100 TB contract of CdcParquetSink: an incremental micro-batch
-    rewrites only the hash(key) buckets its delta touches — every other
-    bucket keeps its owning version, whose parquet files keep their
-    identity (same paths, same mtimes)."""
+    writes only the hash(key) buckets its delta touches — each of them
+    gains exactly one delta version, holding that bucket's rows alone,
+    while every other bucket keeps its chain (base included), whose
+    parquet files keep their identity (same paths, same mtimes)."""
     env = envelopes_from_events(load(spark, sf_dir, "events"))
     root = tempfile.mkdtemp(prefix="state_bucket_")
-    sink = CdcParquetSink(spark, root, n_buckets=8)
+    # one delta per bucket before compaction, so two batches make a base
+    sink = _CompactingCdcSink(spark, root, n_buckets=8)
     sink.apply_batch(env, 0)
+    sink.apply_batch(env, 1)  # compacts version 0 into base 1
     _, before = sink._load_manifest()
     assert len(before) > 1  # the assertion below is vacuous with one bucket
-    assert set(before.values()) == {0}
-    files_before = _version_files(root, 0)
+    assert all(chain == [1] for chain in before.values())
+    files_before = _version_files(root, 1)
     assert files_before
+    assert not os.path.exists(os.path.join(root, "state", "v=0"))
 
     # delta touching exactly one key → exactly one bucket
     one_key = env.orderBy("key").limit(1).select("key").collect()[0]["key"]
@@ -142,24 +146,27 @@ def test_sink_rewrites_only_touched_buckets(spark, sf_dir):
     expected = _rows(
         cdc_apply_batch(env), ["key", "last_ts", "last_value"]
     )  # idempotent: replaying a subset cannot change LWW state
-    sink.apply_batch(delta, 1)
+    sink.apply_batch(delta, 2)
 
     _, after = sink._load_manifest()
     assert set(after) == set(before)
     for b in before:
         if b == touched:
-            assert after[b] == 1  # the touched bucket was rewritten
+            assert after[b] == before[b] + [2]  # exactly one delta appended
         else:
-            assert after[b] == before[b]  # still owned by version 0
-    assert _version_files(root, 0) == files_before  # same paths + mtimes
+            assert after[b] == before[b]  # base 1 alone, as before
+    assert _version_files(root, 1) == files_before  # same paths + mtimes
+    written = spark.read.parquet(os.path.join(root, "state", "v=2"))
+    assert {r["bucket"] for r in written.select("bucket").distinct().collect()} == {touched}
+    assert written.count() == delta.count()  # the batch's own rows, no state
     assert _rows(sink.current(), ["key", "last_ts", "last_value"]) == expected
 
 
 def test_sink_executes_each_micro_batch_once(spark, sf_dir):
     """numInputRows counts every execution of a micro-batch, so over the
     whole stream it sums to the envelope count only when the sink executes
-    each batch once (touched buckets, emptiness and the write all read the
-    same persisted batch)."""
+    each batch once (a delta batch is one write job, which also observes
+    the buckets it wrote)."""
     staged = stage_event_chunks(spark, sf_dir, n_chunks=3, dir_prefix="once")
     sink = CdcParquetSink(spark, tempfile.mkdtemp(prefix="state_once_"), n_buckets=4)
     q = (
@@ -182,7 +189,17 @@ def test_sink_executes_each_micro_batch_once(spark, sf_dir):
 
 SCD2_COLS = ["key", "seq", "value", "valid_from", "valid_to", "is_current"]
 
-# per sink kind: the sink class, its read, and the batch oracle of a feed
+
+class _CompactingCdcSink(CdcParquetSink):
+    """CdcParquetSink compacting a bucket as soon as its chain holds one
+    delta, so a test's second batch into a bucket is a compacting batch."""
+
+    MAX_DELTAS = 1
+
+
+# per sink kind: the sink class, its read, and the batch oracle of a feed.
+# "cdc"'s second batch is a delta batch, "cdc_compact"'s a compacting one;
+# SCD2 is copy-on-write, so each of its batches folds what it touches.
 SINKS = {
     "cdc": (
         CdcParquetSink,
@@ -195,6 +212,7 @@ SINKS = {
         lambda env: _rows(scd2_versions(env), SCD2_COLS),
     ),
 }
+SINKS["cdc_compact"] = (_CompactingCdcSink, *SINKS["cdc"][1:])
 
 
 def _env_row(key, seq, v, op="u"):
@@ -232,7 +250,8 @@ def test_commit_log_survives_torn_write(spark, monkeypatch):
     """A sink that dies midway through writing its manifest must leave the
     previous manifest readable (write-then-rename), so a restarted sink
     still knows the last committed batch and can redo the torn one. Both
-    sinks share the commit path; both are checked."""
+    sinks share the commit path; both are checked, the CDC sink on a delta
+    batch and on a compacting one."""
     for kind, (Sink, read, oracle) in SINKS.items():
         root = tempfile.mkdtemp(prefix=f"state_torn_{kind}_")
         batches = _two_batches(spark)
@@ -245,7 +264,7 @@ def test_commit_log_survives_torn_write(spark, monkeypatch):
         restarted.apply_batch(batches[1], 1)  # the redelivered batch folds again
         assert restarted._load_manifest()[0] == 1
         assert read(restarted) == oracle(batches[0].unionByName(batches[1]))
-        if kind == "cdc":
+        if kind.startswith("cdc"):
             assert _rows(restarted.current(), ["key", "last_value"]) == [
                 (1, 3.0), (2, 2.0), (3, 4.0)
             ]
@@ -267,7 +286,9 @@ def test_crash_before_manifest_replace_reads_previous_state(spark, monkeypatch, 
     assert _version_files(root, 1)  # the crashed attempt's version is on disk
 
     restarted = Sink(spark, root, n_buckets=4)
-    assert restarted._load_manifest()[0] == 0
+    last, chains = restarted._load_manifest()
+    assert last == 0
+    assert all(1 not in chain for chain in chains.values())
     assert read(restarted) == before
     restarted.apply_batch(batches[1], 1)
     assert read(restarted) == oracle(batches[0].unionByName(batches[1]))
@@ -276,14 +297,22 @@ def test_crash_before_manifest_replace_reads_previous_state(spark, monkeypatch, 
 @pytest.mark.parametrize("kind", sorted(SINKS))
 def test_crash_mid_gc_leaves_state_and_next_commit_collects(spark, monkeypatch, kind):
     """Crash point: the manifest is committed and the sink dies while
-    deleting superseded version dirs, after removing part of one. State is
-    unaffected (no read goes through an unowned version), and the next
-    commit removes the leftovers."""
+    deleting a version no chain lists, after removing part of it. State
+    is unaffected (no read goes through an unlisted version), and the next
+    commit removes the leftovers. A compacting batch (and every SCD2
+    batch) supersedes the versions it folds; a delta batch supersedes
+    nothing, so what its GC deletes is a version that wrote no bucket —
+    here its own, the batch being empty."""
     Sink, read, oracle = SINKS[kind]
     root = tempfile.mkdtemp(prefix=f"state_gc_{kind}_")
     batches = _two_batches(spark)
-    # batch 1 re-touches every key of batch 0, so it supersedes version 0
-    batches[1] = batches[1].unionByName(spark.createDataFrame([_env_row(2, 5, 5.0)]))
+    if kind == "cdc":
+        batches[1] = batches[1].where(F.lit(False))
+        leftover, live_after = "v=1", {0}
+    else:
+        # batch 1 re-touches every key of batch 0, so it supersedes version 0
+        batches[1] = batches[1].unionByName(spark.createDataFrame([_env_row(2, 5, 5.0)]))
+        leftover, live_after = "v=0", {1}
     sink = Sink(spark, root, n_buckets=4)
     sink.apply_batch(batches[0], 0)
 
@@ -298,46 +327,55 @@ def test_crash_mid_gc_leaves_state_and_next_commit_collects(spark, monkeypatch, 
     monkeypatch.undo()
 
     restarted = Sink(spark, root, n_buckets=4)
-    last, owners = restarted._load_manifest()
-    assert last == 1 and set(owners.values()) == {1}
-    assert os.path.isdir(os.path.join(root, "state", "v=0"))  # the leftover
+    last, chains = restarted._load_manifest()
+    assert last == 1
+    assert {v for chain in chains.values() for v in chain if v is not None} == live_after
+    assert os.path.isdir(os.path.join(root, "state", leftover))
     so_far = batches[0].unionByName(batches[1])
     assert read(restarted) == oracle(so_far)
 
     third = spark.createDataFrame([_env_row(4, 6, 6.0)])
     restarted.apply_batch(third, 2)
-    _, owners = restarted._load_manifest()
-    live = {f"v={v}" for v in owners.values()}
+    _, chains = restarted._load_manifest()
+    live = {f"v={v}" for chain in chains.values() for v in chain if v is not None}
     assert set(os.listdir(os.path.join(root, "state"))) == live
-    assert "v=0" not in live
+    assert leftover not in live
     assert read(restarted) == oracle(so_far.unionByName(third))
 
 
 def test_commit_metadata_stays_bounded(spark):
-    """The manifest holds at most one entry per bucket and one batch id,
-    so over many small batches neither it nor the set of live version
-    dirs grows with the batch count."""
+    """The manifest holds at most one chain per bucket, each of at most
+    ``MAX_DELTAS + 1`` versions, and one batch id, so over many small
+    batches neither it nor the set of live version dirs grows with the
+    batch count: compaction and GC keep both bounded by
+    ``n_buckets * (MAX_DELTAS + 1)``."""
     root = tempfile.mkdtemp(prefix="state_bounded_")
-    sink = CdcParquetSink(spark, root, n_buckets=4)
+    n_buckets, span = 4, CdcParquetSink.MAX_DELTAS + 1
+    sink = CdcParquetSink(spark, root, n_buckets=n_buckets)
     manifest = os.path.join(root, "_manifest.json")
-    feed, sizes = [], []
-    for i in range(20):
+    # the largest manifest the bound allows, with two-digit ids
+    biggest = len(json.dumps({"batch": 99, "buckets": {
+        str(b): [99] * span for b in range(n_buckets)}}))
+    feed, compactions = [], 0
+    for i in range(3 * span):
         batch = spark.createDataFrame([
             _env_row(1 + i % 5, 2 * i + 1, float(i)),
             _env_row(1 + i % 3, 2 * i + 2, -float(i)),
         ])
         feed.append(batch)
         sink.apply_batch(batch, i)
-        _, owners = sink._load_manifest()
-        assert len(owners) <= 4
+        _, chains = sink._load_manifest()
+        assert len(chains) <= n_buckets
+        assert all(len(chain) <= span for chain in chains.values())
+        compactions += any(chain == [i] for chain in chains.values())
         state = os.path.join(root, "state")
         versions = [d for d in os.listdir(state) if d.startswith("v=")]
-        assert len(versions) <= 4
-        assert sorted(versions) == sorted({f"v={v}" for v in owners.values()})
-        sizes.append(os.path.getsize(manifest))
-    # between batch 9 and batch 19 each of the ≤ 5 integers it holds can
-    # gain at most one digit; a growing id list would add ~4 bytes a batch
-    assert sizes[-1] - sizes[9] <= 5
+        assert len(versions) <= n_buckets * span
+        assert sorted(versions) == sorted(
+            {f"v={v}" for chain in chains.values() for v in chain if v is not None})
+        # a chain that only grew would pass the bound by batch 3 * span
+        assert os.path.getsize(manifest) <= biggest
+    assert compactions >= 2
     whole = feed[0]
     for b in feed[1:]:
         whole = whole.unionByName(b)
@@ -352,6 +390,9 @@ def test_manifest_less_state_reads_and_refuses_to_fold(spark):
     batches = _two_batches(spark)
     good = CdcParquetSink(spark, tempfile.mkdtemp(prefix="state_good_"), n_buckets=4)
     good.apply_batch(batches[0].unionByName(batches[1]), 0)
+    # the copy is made from a state read that folds a delta: 4 envelopes
+    # of 3 keys on disk, 3 rows read
+    assert all(len(chain) == 2 for chain in good._load_manifest()[1].values())
     root = tempfile.mkdtemp(prefix="state_plain_")
     good.state().write.partitionBy("bucket").parquet(os.path.join(root, "state"))
 
@@ -386,9 +427,9 @@ def test_late_event_cannot_resurrect_deleted_key(spark):
 
 def test_scd2_sink_is_bucket_bounded_and_matches_batch(spark, sf_dir):
     """Scd2ParquetSink inherits both contracts: (1) an incremental
-    micro-batch rewrites only its delta's hash(key) buckets — every other
-    bucket keeps its owning version, whose files keep their paths and
-    mtimes; (2) the folded history equals the one-shot batch window
+    micro-batch rewrites only its delta's hash(key) buckets (copy-on-write:
+    each becomes a new base) — every other bucket keeps its base version,
+    whose files keep their paths and mtimes; (2) the folded history equals the one-shot batch window
     (stream == batch)."""
     env = envelopes_from_events(load(spark, sf_dir, "events"))
     # split the feed at the per-key-monotonic replay boundary: global ts order
@@ -411,9 +452,9 @@ def test_scd2_sink_is_bucket_bounded_and_matches_batch(spark, sf_dir):
     assert set(after) == set(before)
     for b in before:
         if b == touched:
-            assert after[b] == 1
+            assert after[b] == [1]  # copy-on-write: a new base, no delta
         else:
-            assert after[b] == before[b] == 0
+            assert after[b] == before[b] == [0]
     assert _version_files(root, 0) == files_before
 
     # finish the feed for the untouched keys, then compare against the
@@ -667,7 +708,7 @@ def test_scd2_all_delete_batch_closes_open_rows(spark):
     assert sink._load_manifest()[0] == 2
 
     # the same batch FIRST on a fresh sink folds to nothing: no bucket
-    # gets an owning version, which must still read as no state and the
+    # gets a version in its chain, which must still read as no state and the
     # typed empty history, and a normal batch must fold on top
     first = Scd2ParquetSink(spark, tempfile.mkdtemp(prefix="scd2_del0_"), n_buckets=4)
     first.apply_batch(spark.createDataFrame(ghost), 0)

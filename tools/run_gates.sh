@@ -53,7 +53,7 @@ echo "== strict oracle sweep (Spark vs DuckDB, driver-faithful, scratch cwd) =="
 python tools/check_strict.py
 record check_strict
 
-echo "== sink partition invariance (local[7]: the streaming sinks at the session's shuffle partitions) =="
+echo "== sink partition invariance (local[7]: the foreachBatch sinks at the session's shuffle partitions; cdc_apply_stateful drains through a memory sink pinned to 2 partitions, so its state partitions do not vary) =="
 SPARK_GRAFT_CPUS=7 python tools/check_strict.py cdc_apply_stream cdc_scd2_stream cdc_apply_stateful
 record sink_partition_invariance_local7
 
